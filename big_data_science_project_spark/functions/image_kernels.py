@@ -99,7 +99,12 @@ def perimeter_udf(mask_ch: pd.Series, width: pd.Series, height: pd.Series) -> pd
 
 
 # ---------------------------------------------------------------------------
-# confusion counts (K9) — standard orientation (reference swaps FP/FN)
+# confusion counts (K9) — standard orientation (reference swaps FP/FN).
+# A null in either array counts in none of the four. Four passes on
+# purpose: callers reference each count several times (K10 reads tp
+# three times) and Spark never shares a lambda expression as a common
+# subexpression, so a single pass that all four counts read would be
+# re-run per reference — measured slower than these four.
 # ---------------------------------------------------------------------------
 def confusion(gt: Column, pred: Column) -> dict[str, Column]:
     def count(f) -> Column:

@@ -15,11 +15,11 @@ Three operators:
   for when one clustering spans many images.
 - threshold grid search (reference M3: ``image_masking.py:112-139``): the
   reference runs **one Spark job per parameter combination** (2,205 jobs
-  in the notebook run). Here the parameter grid is a DataFrame
-  crossJoined with the cells, the mask is a higher-order-function
-  expression (no Python), scoring is the K9/K10 confusion exprs, and the
-  per-channel argmax is ``max_by`` — the whole search is ONE job with one
-  shuffle regardless of grid size.
+  in the notebook run). Here one ``aggregate`` pass over each
+  image-channel's pixels counts tp/fp for every threshold at once (no
+  join, no Python), the counts fan out to one row per threshold and are
+  scored with K10, and the per-channel argmax is ``max_by`` — the whole
+  search is ONE job that reads each pixel once regardless of grid size.
 
 Segmentation quality is judged exactly like the reference: balanced
 accuracy against the ground-truth mask shipped with the data
@@ -31,7 +31,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -294,20 +294,56 @@ def threshold_mask(data_ch, thr):
     return F.transform(data_ch, lambda x: x >= thr)
 
 
+def _grid_counts(mask_ch, data_ch, grid: list[float]) -> Column:
+    """One pass over an image-channel's pixels: struct of ``pos``/``neg``
+    (ground-truth classes over non-null pixels) and, for every threshold
+    ``grid[k]``, ``tp{k}`` = #(g ∧ x ≥ t) and ``fp{k}`` = #(¬g ∧ x ≥ t).
+    Null pixels count in none, as in K9."""
+    zero = F.lit(0).cast("long")
+    names = ["pos", "neg"] + [f"{n}{k}" for k in range(len(grid))
+                              for n in ("tp", "fp")]
+
+    def one(cond: Column) -> Column:
+        return F.when(cond, 1).otherwise(0)
+
+    def step(acc, e):
+        g, x = e["g"], e["x"]
+        inc = [one(g & x.isNotNull()), one(~g & x.isNotNull())]
+        for t in grid:
+            inc += [one(g & (x >= t)), one(~g & (x >= t))]
+        return F.struct(*[(acc[n] + i).alias(n) for n, i in zip(names, inc)])
+
+    return F.aggregate(
+        F.zip_with(mask_ch, data_ch,
+                   lambda g, x: F.struct(g.alias("g"), x.alias("x"))),
+        F.struct(*[zero.alias(n) for n in names]), step)
+
+
 def grid_search_threshold(cells: DataFrame,
                           grid: list[float] = THRESHOLD_GRID) -> DataFrame:
     """Best threshold per channel by mean balanced accuracy — the
     reference's |grid| driver-looped jobs (image_masking.py:116-137)
-    collapsed into crossJoin → score → groupBy → max_by."""
-    spark = cells.sparkSession
-    grid_df = spark.createDataFrame([(t,) for t in grid], "thr double")
-    per_ch = _per_channel(cells)
-    pred = threshold_mask(F.col("data_ch"), F.col("thr"))
-    c = K.confusion(F.col("mask_ch"), pred)
+    collapsed into one job: a single aggregate pass per image-channel
+    counts tp/fp for every threshold at once (no crossJoin, no grid
+    table), ``inline`` fans the counts out to one row per threshold,
+    then score → groupBy → max_by. Duplicate thresholds are dropped so
+    none is summed twice."""
+    grid = sorted({float(t) for t in grid})
+    c = F.col("c")
+    per_thr = F.array(*[
+        F.struct(F.lit(t).alias("thr"), c[f"tp{k}"].alias("tp"),
+                 c[f"fp{k}"].alias("fp"))
+        for k, t in enumerate(grid)])
     scored = (
-        per_ch.crossJoin(F.broadcast(grid_df))
+        _per_channel(cells)
+        .select("image_id", "channel",
+                _grid_counts(F.col("mask_ch"), F.col("data_ch"), grid)
+                .alias("c"))
+        .select("image_id", "channel", "c.pos", "c.neg", F.inline(per_thr))
         .select("image_id", "channel", "thr",
-                K.balanced_accuracy(c["tp"], c["fp"], c["tn"], c["fn"]).alias("bacc"))
+                K.balanced_accuracy(F.col("tp"), F.col("fp"),
+                                    F.col("neg") - F.col("fp"),
+                                    F.col("pos") - F.col("tp")).alias("bacc"))
     )
     # argmax on the exact decimal SUM: every combo scores the same image
     # count, so argmax-by-sum == argmax-by-mean, with no float-merge

@@ -1617,9 +1617,10 @@ def _cell_check(new: DataFrame, idx: DataFrame) -> DataFrame:
             # strictly in order — the exact IEEE addition sequence of
             # np.cumsum(...)[:, :, -1] (the _cos_pair_udf order),
             # including the signed-zero of an all-zero dot, so every
-            # cosine is bit-identical. Peak temporaries drop D-fold
-            # (two chunk x M planes, ~8 MB at the 1<<25 sizing, vs two
-            # ~256 MB cubes — first-touch page cost at any corpus size)
+            # cosine is bit-identical. Peak temporaries drop about D-fold
+            # (chunk x M planes, ~8 MB at the 1<<25 sizing, vs two ~256 MB
+            # cubes); only `buf` is reused across chunks, `acc` is
+            # allocated afresh per chunk
             buf = None
             for s in range(0, b, step):
                 e = min(b, s + step)

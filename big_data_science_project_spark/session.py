@@ -20,7 +20,21 @@ from pyspark.sql import SparkSession
 
 
 def default_cpus() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS``, else the CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS",
+                              len(os.sched_getaffinity(0))))
+
+
+def default_driver_memory() -> str:
+    """``SPARK_DRIVER_MEM``, else about 40 % of the host's memory: in local
+    mode the driver JVM shares the host with the Python workers and the
+    OS, and a heap as large as physical memory gets the JVM OOM-killed."""
+    if "SPARK_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_DRIVER_MEM"]
+    with open("/proc/meminfo") as fh:
+        total_kb = next(int(line.split()[1]) for line in fh
+                        if line.startswith("MemTotal:"))
+    return f"{max(1, int(total_kb * 0.4) >> 20)}g"
 
 
 def get_spark(app_name: str = "big_data_science_project_spark",
@@ -50,7 +64,7 @@ def get_spark(app_name: str = "big_data_science_project_spark",
         # tz-less parquet timestamps (timestamp[us]) must stay instants
         # (TIMESTAMP, UTC session) — NTZ would break unix_micros/watermarks
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
     )

@@ -7,7 +7,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from big_data_science_project_spark.session import get_spark
+from big_data_science_project_spark.session import default_cpus, get_spark
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MEDIUM = "/root/testdata/sf0.01"
@@ -15,7 +15,8 @@ SF_MEDIUM = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("tests", cpus=8, shuffle_partitions=8)
+    n = default_cpus()
+    s = get_spark("tests", cpus=n, shuffle_partitions=n)
     yield s
 
 

@@ -994,3 +994,141 @@ def test_lm_hot_history_split_changes_no_values(spark, lm_planted_dir):
     with pytest.raises(ValueError, match="hot_bigram"):
         _score_against_lm(batch, *parts,
                           hot_history=1 << 60, hot_bigram=1)
+
+
+# ---------------------------------------------------------------------------
+# segmentation scoring: K9 confusion counts and the one-pass threshold grid
+# search, against numpy. The null rule: a pixel whose ground truth or
+# prediction (intensity) is null counts in none of tp/fp/tn/fn.
+# ---------------------------------------------------------------------------
+
+def _np_confusion(gt, pred):
+    """tp/fp/tn/fn over the zipped arrays; the shorter one is padded with
+    nulls, as ``zip_with`` does."""
+    n = max(len(gt), len(pred))
+    gt = list(gt) + [None] * (n - len(gt))
+    pred = list(pred) + [None] * (n - len(pred))
+    pairs = [(g, p) for g, p in zip(gt, pred)
+             if g is not None and p is not None]
+    return (sum(g and p for g, p in pairs), sum(not g and p for g, p in pairs),
+            sum(not g and not p for g, p in pairs),
+            sum(g and not p for g, p in pairs))
+
+
+_opt_bools = st.lists(st.one_of(st.none(), st.booleans()), max_size=12)
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(st.tuples(_opt_bools, _opt_bools), min_size=1, max_size=6))
+def test_confusion_counts_match_numpy_with_nulls(spark, rows):
+    """K9 on arrays holding nulls, empty arrays and arrays of unequal
+    length: every count equals the null-skipping numpy count."""
+    from pyspark.sql import functions as F
+
+    from big_data_science_project_spark.functions import image_kernels as K
+    df = spark.createDataFrame(
+        [(i, g, p) for i, (g, p) in enumerate(rows)],
+        "i int, gt array<boolean>, pred array<boolean>")
+    c = K.confusion(F.col("gt"), F.col("pred"))
+    got = {r["i"]: (r["tp"], r["fp"], r["tn"], r["fn"]) for r in df.select(
+        "i", *[c[k].alias(k) for k in ("tp", "fp", "tn", "fn")]).collect()}
+    assert got == {i: _np_confusion(g, p) for i, (g, p) in enumerate(rows)}
+
+
+# pixel values on the threshold lattice, so thresholds equal to pixel
+# values (the >= boundary) come up often
+_levels = [0.0, 50.0, 100.0, 150.0, 200.0]
+_thresholds = st.lists(st.sampled_from([0.0, 25.0, 50.0, 100.0, 150.0, 200.0,
+                                        250.0]), min_size=1, max_size=7)
+
+
+@st.composite
+def _cells(draw, nulls: bool):
+    """Small random cells rows; each channel's mask is random, all
+    foreground or all background (the empty-class guard)."""
+    n, c = draw(st.integers(1, 4)), draw(st.integers(1, 2))
+    w, h = draw(st.integers(1, 3)), draw(st.integers(1, 3))
+    pixel = st.sampled_from(_levels)
+    if nulls:
+        pixel = st.one_of(st.none(), pixel)
+    rows = []
+    for i in range(n):
+        data, mask = [], []
+        for _ in range(c):
+            data += draw(st.lists(pixel, min_size=w * h, max_size=w * h))
+            kind = draw(st.sampled_from(["random", "all_fg", "all_bg"]))
+            mask += (draw(st.lists(st.booleans(), min_size=w * h,
+                                   max_size=w * h)) if kind == "random"
+                     else [kind == "all_fg"] * (w * h))
+        rows.append((i, c, w, h, data, mask))
+    return rows
+
+
+def _cells_df(spark, rows):
+    return spark.createDataFrame(
+        rows, "image_id bigint, n_channels int, width int, height int,"
+              " data array<double>, mask array<boolean>")
+
+
+@settings(max_examples=10, deadline=None)
+@given(_cells(nulls=True), _thresholds)
+def test_grid_counts_match_numpy(spark, rows, grid):
+    """The one-pass grid aggregate: pos/neg and every threshold's tp/fp
+    equal numpy counts, nulls counting in none."""
+    from pyspark.sql import functions as F
+
+    from big_data_science_project_spark.operators.segmentation import (
+        _grid_counts, _per_channel)
+    grid = sorted(set(grid))
+    got = {(r["image_id"], r["channel"]): r["c"].asDict() for r in
+           _per_channel(_cells_df(spark, rows)).select(
+               "image_id", "channel",
+               _grid_counts(F.col("mask_ch"), F.col("data_ch"), grid)
+               .alias("c")).collect()}
+    for i, c, w, h, data, mask in rows:
+        for ch in range(c):
+            d = data[ch * w * h:(ch + 1) * w * h]
+            m = mask[ch * w * h:(ch + 1) * w * h]
+            valid = [(g, x) for g, x in zip(m, d) if x is not None]
+            want = {"pos": sum(g for g, _ in valid),
+                    "neg": sum(not g for g, _ in valid)}
+            for k, t in enumerate(grid):
+                want[f"tp{k}"] = sum(g and x >= t for g, x in valid)
+                want[f"fp{k}"] = sum(not g and x >= t for g, x in valid)
+            assert got[(i, ch)] == want, (i, ch, grid)
+
+
+@settings(max_examples=10, deadline=None)
+@given(_cells(nulls=False), _thresholds)
+def test_grid_search_matches_numpy_argmax(spark, rows, grid):
+    """grid_search_threshold == a numpy search over the deduplicated grid:
+    mean balanced accuracy per threshold, argmax on the exact decimal sum
+    with ties to the larger threshold, for unsorted grids with repeats."""
+    from decimal import ROUND_HALF_UP
+
+    from big_data_science_project_spark.operators.segmentation import (
+        grid_search_threshold)
+    got = {r["channel"]: (r["best_thr"], r["best_bacc"]) for r in
+           grid_search_threshold(_cells_df(spark, rows), grid).collect()}
+    n_ch = rows[0][1]
+    w, h = rows[0][2], rows[0][3]
+    want = {}
+    for ch in range(n_ch):
+        sums = []
+        for t in set(grid):
+            total = Decimal(0)
+            for _, _, _, _, data, mask in rows:
+                x = np.array(data[ch * w * h:(ch + 1) * w * h])
+                g = np.array(mask[ch * w * h:(ch + 1) * w * h])
+                p = x >= t
+                tp, fn = int((g & p).sum()), int((g & ~p).sum())
+                tn, fp = int((~g & ~p).sum()), int((~g & p).sum())
+                tpr = tp / (tp + fn) if tp + fn > 0 else 1.0
+                tnr = tn / (tn + fp) if tn + fp > 0 else 1.0
+                total += Decimal((tpr + tnr) / 2.0).quantize(
+                    Decimal("1e-18"), ROUND_HALF_UP)
+            sums.append((total, t))
+        total, t = max(sums)
+        want[ch] = (t, float(Decimal(repr(float(total) / len(rows))).quantize(
+            Decimal("1e-6"), ROUND_HALF_UP)))
+    assert got == want, grid

@@ -105,13 +105,30 @@ def test_canny_grid_search_is_one_job_shape(spark):
 
 
 def test_grid_search_is_one_job_shape(spark):
-    """The search must be a single crossJoin plan, not a per-combination
-    loop: the scored plan contains the broadcast of the grid."""
+    """The search must be one plan, not a per-threshold loop: the cells
+    are scanned once, with no join against a grid table (no cartesian
+    product either) and no Python evaluation of the mask."""
     from big_data_science_project_spark.operators.segmentation import (
         grid_search_threshold)
     df = grid_search_threshold(load_cells(spark, n_images=4))
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
+    assert plan.count("MapInPandas") == 1, plan  # the one cells scan
+    for node in ("Join", "CartesianProduct", "EvalPython"):
+        assert node not in plan, (node, plan)
+
+
+def test_grid_search_ignores_duplicate_thresholds(spark):
+    """A threshold listed twice must not have its balanced accuracy
+    summed twice: repeating 20 cannot change the winner."""
+    from big_data_science_project_spark.operators.segmentation import (
+        grid_search_threshold)
+    cells = load_cells(spark)
+    once = sorted(map(tuple, grid_search_threshold(cells, [20.0, 800.0])
+                      .collect()))
+    repeated = sorted(map(tuple, grid_search_threshold(
+        cells, [20.0, 20.0, 20.0, 800.0]).collect()))
+    assert repeated == once
+    assert all(thr == 800.0 for _, thr, _ in once), once
 
 
 def test_dbscan_disks_form_one_cluster(spark):

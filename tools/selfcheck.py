@@ -69,10 +69,12 @@ def main() -> None:
     args = ap.parse_args()
 
     from pyspark.sql import SparkSession
+
+    from big_data_science_project_spark.session import default_driver_memory
     spark = (SparkSession.builder.master(args.master)
              .config("spark.sql.shuffle.partitions", args.shuffle_partitions)
              .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", default_driver_memory())
              .config("spark.sql.session.timeZone", "UTC")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
