@@ -85,12 +85,11 @@ def collect_registry() -> tuple[dict[str, QueryFn], dict[str, str]]:
                    similarity, text, timeseries)
     from ..streaming import events as streaming_events
     from ..sources import cells as cells_src
-    from ..sources import cells_binary as cells_bin
     from ..sources import cells_datasource as cells_ds
     from ..sources import sinks as sinks_src
     from ..sources.tables import plan_cached
 
-    impure_modules = (streaming_events, sinks_src, cells_ds, cells_bin)
+    impure_modules = (streaming_events, sinks_src, cells_ds)
     # also impure by construction: text_udtf_chunk registers a UDTF +
     # temp view; ann_pq_topk collects the PQ codebook at build time —
     # leaving them unwrapped keeps bench reps honest about that cost
@@ -117,8 +116,7 @@ def collect_registry() -> tuple[dict[str, QueryFn], dict[str, str]]:
     module_of: dict[str, str] = {}
     for mod in (relational, outlier, dedup, similarity, linear, graph, text,
                 curation, ingest, excision, timeseries, streaming_events,
-                cells_src, segmentation, multimodal, sinks_src, cells_ds,
-                cells_bin):
+                cells_src, segmentation, multimodal, sinks_src, cells_ds):
         for name, (fn, sql) in getattr(mod, "QUERIES", {}).items():
             if name in queries:
                 raise ValueError(f"duplicate query name: {name}")

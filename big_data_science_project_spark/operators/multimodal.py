@@ -249,9 +249,9 @@ def export_payloads(encoded: DataFrame, base_dir: str) -> DataFrame:
     """Write each payload to ``base_dir/cell_{image_id}.bin`` inside the
     distributed map and return ONE SUMMARY ROW PER TASK (not per image):
     the manifest a driver sees is bounded by task count, never corpus
-    size, matching the one-row-per-container discipline of
-    ``cells_binary``. Filenames are an injective function of
-    ``image_id``, so per-task ``n_distinct_paths`` sums to the global
+    size, matching the one-row-per-container discipline of the cells
+    sink (``sources/cells_datasource.py``). Filenames are an injective
+    function of ``image_id``, so per-task ``n_distinct_paths`` sums to the global
     distinct count whenever image ids are globally unique (they are, by
     construction of ``load_cells``)."""
     schema = T.StructType([
@@ -714,7 +714,9 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str = "") -> DataFrame:
             lambda b: (np.frombuffer(b, dtype=np.float32) + np.float32(0.4))
             .tobytes())
 
-    dups = (base.filter(F.col("image_id") < PHASH_DUPS)
+    # the copies' own scan of the first PHASH_DUPS ids, not a filter
+    # over `base`'s scan (see load_cells on filtered branches)
+    dups = (encode_cells(load_cells(spark, n_images=PHASH_DUPS))
             .select((F.col("image_id") + PHASH_ID_OFFSET).alias("image_id"),
                     "n_channels", "width", "height",
                     perturb(F.col("payload")).alias("payload")))
@@ -1001,16 +1003,20 @@ def multimodal_ingest_dedup(spark: SparkSession, sf_dir: str = "",
     unioning equals screening the whole batch at once (the streaming
     unified gate's twin property, test-pinned)."""
     wh = F.col("width") * F.col("height")
-    allgen = load_cells(spark, n_images=INGEST_IMG_INDEX,
-                        width=48, height=48)
-    ch0 = allgen.select(
-        "image_id", "width", "height",
-        F.slice("data", F.lit(1), wh).alias("data_ch"))
-    index = ch0.filter(F.col("image_id") < INGEST_IMG_INDEX)
+
+    def ch0():
+        # one scan per branch: all scans of one Python data source
+        # relation share the image_id filter pushed into one of them
+        # (load_cells docstring), and the plants filter by id
+        return load_cells(spark, n_images=INGEST_IMG_INDEX, width=48,
+                          height=48).select(
+            "image_id", "width", "height",
+            F.slice("data", F.lit(1), wh).alias("data_ch"))
+    index = ch0()
     # fresh plants come from their OWN salted generator family (keyed
     # by batch-relative index — _gen_fresh_gate_image docstring), not
-    # the next blob ids: same executor-side generation shape as
-    # load_cells, ids planned as a range, content made in the task
+    # the next blob ids: ids planned as a range, content made in the
+    # task (as the cells source's reader does per id range)
     base = INGEST_IMG_INDEX
 
     def _gen_fresh(batches):
@@ -1027,7 +1033,7 @@ def multimodal_ingest_dedup(spark: SparkSession, sf_dir: str = "",
                           "data_ch array<double>"))
 
     def plant(src_ids, fn):
-        return (ch0.filter(F.col("image_id").isin(src_ids))
+        return (ch0().filter(F.col("image_id").isin(src_ids))
                 .select((F.col("image_id") + INGEST_IMG_OFFSET)
                         .alias("image_id"), "width", "height",
                         fn(F.col("data_ch")).alias("data_ch")))

@@ -7,9 +7,10 @@ Mirrors the scifio reader's pushdown surface (reference ``main.py:17-19``):
 ``channels`` (slice pruning), ``imagelimit`` (row limit),
 ``numpartitions`` (split control). Images are deterministic (hash-seeded
 per image), so any engine — or any retry at any parallelism — generates
-identical rows; generation is distributed via ``mapInPandas`` over an id
-range, the scalable pattern for synthesizing or decoding per-row binary
-payloads (each task materializes only its id slice).
+identical rows. ``load_cells`` is a thin wrapper over the ``cells``
+DataSource (:mod:`.cells_datasource`), whose reader synthesizes each
+partition's id slice executor-side; ``_gen_image`` is the one pixel
+synthesizer both it and the numpy references use.
 
 Also registers the multimodal feature pipeline as rows-only queries (no
 SQL oracle — image kernels aren't DuckDB-expressible; pytest goldens in
@@ -92,24 +93,27 @@ def load_cells(spark: SparkSession, n_images: int = DEFAULT_N,
                channels: int = DEFAULT_C, width: int = DEFAULT_W,
                height: int = DEFAULT_H, numpartitions: int = 8,
                imagelimit: int | None = None) -> DataFrame:
-    """The scifio-scan analogue: ids are planned as a range partitioned
-    across the cluster; each task generates (or, for a real format,
-    decodes) only its slice — no driver-side materialization."""
-    # `is not None`, not truthiness: imagelimit=0 means zero rows (same
-    # semantics as the cells DataSource), not "no limit"
-    n = min(n_images, imagelimit) if imagelimit is not None else n_images
-    ids = spark.range(0, n, 1, numpartitions).withColumnRenamed("id", "image_id")
+    """The scifio-scan analogue: ``spark.read.format("cells")`` with
+    these options (``channels`` here is the image's channel count, the
+    source's ``n_channels``). Registers the source first, so a plain
+    session works too.
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for image_id in pdf["image_id"]:
-                data, mask = _gen_image(int(image_id), channels, width, height)
-                rows.append((int(image_id), channels, width, height,
-                             data.tolist(), mask.tolist()))
-            yield pd.DataFrame(rows, columns=[f.name for f in CELLS_SCHEMA.fields])
+    Spark keeps ONE read plan per Python data source relation: when one
+    returned DataFrame feeds several branches of a plan, every branch
+    reads with the ``image_id`` filter pushed into one of them. A branch
+    that filters on ``image_id`` therefore takes its own ``load_cells``
+    call."""
+    from .cells_datasource import register
 
-    return ids.mapInPandas(gen, CELLS_SCHEMA)
+    register(spark)
+    reader = (spark.read.format("cells").option("n_images", n_images)
+              .option("n_channels", channels).option("width", width)
+              .option("height", height)
+              .option("numpartitions", numpartitions))
+    # `is not None`, not truthiness: imagelimit=0 means zero rows
+    if imagelimit is not None:
+        reader = reader.option("imagelimit", imagelimit)
+    return reader.load()
 
 
 def select_channels(df: DataFrame, channels: list[int]) -> DataFrame:

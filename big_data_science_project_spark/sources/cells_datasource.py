@@ -6,7 +6,7 @@ contract and pushdown surface (``/root/reference/main.py:17-19``,
 | reference option        | here            | pushdown effect                  |
 |-------------------------|-----------------|----------------------------------|
 | ``channels`` "1,2,3"    | same (0-based)  | only those channel slices are
-|                         |                 | generated/decoded — projection
+|                         |                 | generated — projection
 |                         |                 | pushdown into the reader         |
 | ``imagelimit``          | same            | row-limit pushdown (id range cut)|
 | ``filelimit``           | ``n_images``    | dataset-size bound               |
@@ -20,17 +20,33 @@ per-partition id ranges — predicate pushdown the reference reader never
 had. Batches are emitted as Arrow ``RecordBatch``es (the vectorized
 reader path), not per-row tuples.
 
-The actual pixel synthesis is shared with :mod:`.cells` (`_gen_image`),
-so DataFrames from either path are row-identical — asserted in
-tests/test_cells_datasource.py.
+This module is the whole cells ingest path: the reader synthesizes rows
+from :func:`.cells._gen_image` (``load_cells`` is a wrapper over it),
+``df.write.format("cells")`` is the one ``.npz`` container writer
+(:func:`_write_rows_container`), and :func:`_decode_containers` is the
+one decoder, reading back exactly the containers a manifest lists
+(``binaryFile`` → ``mapInArrow``). Synthesis and decode build their
+Arrow batches with the same :func:`_cells_batch`.
 """
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import io
+import json
+import os
+import shutil
+import tempfile
+import time
+import uuid
 from dataclasses import dataclass
 
+import numpy as np
 import pyarrow as pa
 
+from pyspark import TaskContext
+from pyspark.sql import functions as F
 from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     DataSourceStreamReader,
                                     DataSourceStreamWriter, DataSourceWriter,
@@ -38,16 +54,24 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     GreaterThanOrEqual, InputPartition,
                                     LessThan, LessThanOrEqual,
                                     WriterCommitMessage)
-from pyspark.sql.types import (ArrayType, BooleanType, DoubleType,
-                               IntegerType, LongType, StructField, StructType)
+from pyspark.sql.types import StructType
 
-from .cells import DEFAULT_C, DEFAULT_H, DEFAULT_N, DEFAULT_W, _gen_image
-
+from .cells import (CELLS_SCHEMA, DEFAULT_C, DEFAULT_H, DEFAULT_N, DEFAULT_W,
+                    _gen_image, per_channel_mask_rollup, rollup_oracle_sql,
+                    select_channels)
 
 @dataclass
 class _IdRange(InputPartition):
     start: int
     end: int
+
+
+def _split(lo: int, hi: int, k: int) -> list[_IdRange]:
+    """``k`` id ranges over ``[lo, hi)`` with ``spark.range``'s bounds
+    (``lo + i·n // k``), so a scan splits its ids as a range would."""
+    n = max(0, hi - lo)
+    return [_IdRange(lo + i * n // k, lo + (i + 1) * n // k)
+            for i in range(k)]
 
 
 class CellsDataSource(DataSource):
@@ -82,17 +106,9 @@ class CellsDataSource(DataSource):
         }
 
     def schema(self) -> StructType:
-        masked = self._opts()["masked"]
-        fields = [
-            StructField("image_id", LongType(), False),
-            StructField("n_channels", IntegerType(), False),
-            StructField("width", IntegerType(), False),
-            StructField("height", IntegerType(), False),
-            StructField("data", ArrayType(DoubleType()), False),
-        ]
-        if masked:
-            fields.append(StructField("mask", ArrayType(BooleanType()), False))
-        return StructType(fields)
+        if self._opts()["masked"]:
+            return CELLS_SCHEMA
+        return StructType([f for f in CELLS_SCHEMA.fields if f.name != "mask"])
 
     def reader(self, schema: StructType) -> "CellsReader":
         return CellsReader(self._opts(), schema)
@@ -141,53 +157,46 @@ class CellsReader(DataSourceReader):
         return unsupported
 
     def partitions(self) -> list[_IdRange]:
-        n = max(0, self.hi - self.lo)
-        k = max(1, min(self.o["numpartitions"], n or 1))
-        step = -(-n // k) if n else 1
-        return [_IdRange(self.lo + i * step, min(self.lo + (i + 1) * step, self.hi))
-                for i in range(k)] or [_IdRange(0, 0)]
+        return _split(self.lo, self.hi, self.o["numpartitions"])
 
     def read(self, partition: _IdRange):
         yield _arrow_batch_for_range(self.o, self.read_cols,
                                      partition.start, partition.end)
 
 
-def _arrow_batch_for_range(o: dict, read_cols: list, start: int, end: int):
-    """Shared generation core for the batch and streaming readers: one
-    Arrow RecordBatch of cell rows for an id range, with channel
-    projection pushdown applied at synthesis time."""
-    import numpy as np
+def _cells_batch(cols: list, ids: np.ndarray, c: int, w: int, h: int,
+                 data: np.ndarray, mask: np.ndarray) -> pa.RecordBatch:
+    """One Arrow RecordBatch of cells rows straight from numpy: ``data``
+    and ``mask`` hold one image per row (``c·w·h`` values each), so both
+    list columns are one flat buffer plus one shared offsets array — no
+    per-row Python objects. Shared by synthesis and decode."""
+    n = len(ids)
+    # int32 list offsets: the cast raises rather than wraps past 2**31
+    offsets = pa.array(np.arange(n + 1) * (c * w * h), pa.int32())
+    columns = {
+        "image_id": pa.array(ids, pa.int64()),
+        "n_channels": pa.array(np.full(n, c, np.int32)),
+        "width": pa.array(np.full(n, w, np.int32)),
+        "height": pa.array(np.full(n, h, np.int32)),
+        "data": pa.ListArray.from_arrays(offsets, pa.array(data.reshape(-1))),
+        "mask": pa.ListArray.from_arrays(offsets, pa.array(mask.reshape(-1))),
+    }
+    return pa.RecordBatch.from_arrays([columns[k] for k in cols], names=cols)
 
-    sel = o["channels"]
-    cols: dict[str, list] = {c: [] for c in read_cols}
-    for image_id in range(start, end):
-        data, mask = _gen_image(image_id, o["n_channels"],
-                                o["width"], o["height"])
-        wh = o["width"] * o["height"]
-        # channel projection pushdown: slice only requested channels
-        if "image_id" in cols:
-            cols["image_id"].append(image_id)
-        if "n_channels" in cols:
-            cols["n_channels"].append(len(sel))
-        if "width" in cols:
-            cols["width"].append(o["width"])
-        if "height" in cols:
-            cols["height"].append(o["height"])
-        if "data" in cols:
-            cols["data"].append(np.concatenate(
-                [data[c * wh:(c + 1) * wh] for c in sel]))
-        if "mask" in cols:
-            cols["mask"].append(np.concatenate(
-                [mask[c * wh:(c + 1) * wh] for c in sel]))
-    arrays, names = [], []
-    pa_types = {"image_id": pa.int64(), "n_channels": pa.int32(),
-                "width": pa.int32(), "height": pa.int32(),
-                "data": pa.list_(pa.float64()),
-                "mask": pa.list_(pa.bool_())}
-    for name in read_cols:
-        arrays.append(pa.array(cols[name], type=pa_types[name]))
-        names.append(name)
-    return pa.RecordBatch.from_arrays(arrays, names=names)
+
+def _arrow_batch_for_range(o: dict, read_cols: list, start: int, end: int):
+    """Synthesis core for the batch and streaming readers: one Arrow
+    RecordBatch of cell rows for an id range, with channel projection
+    pushdown applied at synthesis time."""
+    c, w, h, sel = o["n_channels"], o["width"], o["height"], o["channels"]
+    ids = np.arange(start, end, dtype=np.int64)
+    data = np.empty((len(ids), len(sel), w * h), dtype=np.float64)
+    mask = np.empty((len(ids), len(sel), w * h), dtype=bool)
+    for i, image_id in enumerate(ids):
+        d, m = _gen_image(int(image_id), c, w, h)
+        data[i] = d.reshape(c, w * h)[sel]
+        mask[i] = m.reshape(c, w * h)[sel]
+    return _cells_batch(read_cols, ids, len(sel), w, h, data, mask)
 
 
 class CellsStreamReader(DataSourceStreamReader):
@@ -220,13 +229,7 @@ class CellsStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> list:
         lo, hi = start["next"], end["next"]
-        n = max(0, hi - lo)
-        if n == 0:
-            return []
-        k = max(1, min(self.o["numpartitions"], n))
-        step = -(-n // k)
-        return [_IdRange(lo + i * step, min(lo + (i + 1) * step, hi))
-                for i in range(k)]
+        return _split(lo, hi, min(self.o["numpartitions"], max(0, hi - lo)))
 
     def read(self, partition: _IdRange):
         yield _arrow_batch_for_range(self.o, self.read_cols,
@@ -247,12 +250,6 @@ def _write_rows_container(path: str, cols: list, rows,
     """One task → one uniquely-named .npz container (job tag + task id +
     uuid, so retried/speculative attempts can't collide and the job's
     files are identifiable for abort cleanup), atomic rename."""
-    import os
-    import uuid
-
-    import numpy as np
-    from pyspark import TaskContext
-
     ids, data, mask = [], [], []
     for r in rows:
         c, w, h = int(r.n_channels), int(r.width), int(r.height)
@@ -296,8 +293,8 @@ class CellsWriter(DataSourceWriter):
     manifest untouched. Append merges the prior manifest, so a second
     append lists BOTH jobs' containers. The manifest is the read
     contract: readers take ``containers`` from it, never a bare glob.
-    Containers use the same layout as :mod:`.cells_binary`, so anything
-    written here is readable by the binaryFile→decode scan path."""
+    :func:`_write_rows_container` is the only container writer, and
+    :func:`_decode_listed` reads its containers back."""
 
     def __init__(self, options: dict, schema: StructType, overwrite: bool):
         self.path = options.get("path")
@@ -307,8 +304,6 @@ class CellsWriter(DataSourceWriter):
         for need in ("image_id", "n_channels", "width", "height", "data"):
             if need not in self.cols:
                 raise ValueError(f"cells writer: missing column {need}")
-        import os
-        import uuid
         self.overwrite = overwrite
         self.tag = uuid.uuid4().hex[:8]  # this job's staging identity
         os.makedirs(self.path, exist_ok=True)
@@ -317,9 +312,6 @@ class CellsWriter(DataSourceWriter):
         return _write_rows_container(self.path, self.cols, rows, self.tag)
 
     def commit(self, messages) -> None:
-        import glob
-        import json
-        import os
         files = sorted((m.path, m.n_rows) for m in messages if m.n_rows)
         containers = [p for p, _ in files]
         n_rows = sum(n for _, n in files)
@@ -361,8 +353,6 @@ class CellsWriter(DataSourceWriter):
     def abort(self, messages) -> None:
         # messages are all None here (see class docstring) — sweep by tag,
         # including temp files from tasks killed mid-write
-        import glob
-        import os
         for pat in (f"cells-{self.tag}-*.npz",
                     f"cells-{self.tag}-*.npz.inprogress"):
             for f in glob.glob(os.path.join(self.path, pat)):
@@ -384,8 +374,6 @@ class CellsStreamWriter(DataSourceStreamWriter):
         if not self.path:
             raise ValueError("cells stream writer requires .option('path')")
         self.cols = [f.name for f in schema.fields]
-        import os
-        import uuid
         self.tag = uuid.uuid4().hex[:8]
         os.makedirs(self.path, exist_ok=True)
 
@@ -393,8 +381,6 @@ class CellsStreamWriter(DataSourceStreamWriter):
         return _write_rows_container(self.path, self.cols, rows, self.tag)
 
     def commit(self, messages, batchId: int) -> None:
-        import json
-        import os
         files = sorted((m.path, m.n_rows) for m in messages
                        if m and m.n_rows)
         final = os.path.join(self.path, f"_batch-{batchId}.json")
@@ -412,9 +398,6 @@ class CellsStreamWriter(DataSourceStreamWriter):
         # task messages may be None on failure; sweep this writer's tag
         # (finished and mid-write temp files), sparing anything an
         # already-committed epoch manifest lists
-        import glob
-        import json
-        import os
         committed = set()
         for mp in glob.glob(os.path.join(self.path, "_batch-*.json")):
             with open(mp) as fh:
@@ -431,30 +414,32 @@ QUERIES: dict = {}
 LAST_STREAM_SINK_DIR: str | None = None
 
 
-def _decode_listed(spark, path: str, listed: list, require_all: bool = True):
-    """Decode exactly the manifest-listed containers under ``path``.
-    The ``file:`` prefix matches binaryFile's Hadoop-URI path form; with
-    ``require_all`` a listed-but-missing container raises instead of
-    silently shrinking the dataset (e.g. a snapshot whose files a later
-    overwrite reclaimed)."""
-    import os
+def _decode_containers(batches):
+    """The one container decoder (``mapInArrow``): each ``content`` value
+    is one ``.npz`` container, emitted as one Arrow batch of its cells
+    rows. A real codec (scifio/pillow/pyav) slots in by replacing only
+    ``np.load``."""
+    for batch in batches:
+        for content in batch.column("content").to_pylist():
+            with np.load(io.BytesIO(content)) as z:
+                ids, data, mask = z["image_ids"], z["data"], z["mask"]
+            _, c, w, h = data.shape
+            yield _cells_batch(CELLS_SCHEMA.fieldNames(), ids, c, w, h,
+                               data, mask)
 
-    from pyspark.sql import functions as F
 
-    from .cells_binary import CELLS_SCHEMA, _decode_npz
-
-    if require_all:
-        missing = [p for p in listed if not os.path.exists(p)]
-        if missing:
-            raise FileNotFoundError(
-                f"{len(missing)} listed container(s) no longer exist "
-                f"(reclaimed by a later overwrite?): {missing[:3]}")
-    return (spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.npz").load(path)
-            .filter(F.col("path").isin([f"file:{p}" for p in listed]
-                                       + listed))
-            .select("content").mapInPandas(_decode_npz, CELLS_SCHEMA))
-
+def _decode_listed(spark, listed: list):
+    """Decode exactly the listed containers: ``binaryFile`` reads those
+    files and nothing else in their directory. A listed-but-missing
+    container raises instead of silently shrinking the dataset (e.g. a
+    snapshot whose files a later overwrite reclaimed)."""
+    missing = [p for p in listed if not os.path.exists(p)]
+    if missing:
+        raise FileNotFoundError(
+            f"{len(missing)} listed container(s) no longer exist "
+            f"(reclaimed by a later overwrite?): {missing[:3]}")
+    return (spark.read.format("binaryFile").load(listed)
+            .select("content").mapInArrow(_decode_containers, CELLS_SCHEMA))
 
 
 def cells_stream_sink(spark, sf_dir: str = ""):
@@ -464,17 +449,7 @@ def cells_stream_sink(spark, sf_dir: str = ""):
     only the manifest-listed containers back through the npz decoder and
     roll up per channel. Exactly-once is checked structurally: 3 epoch
     manifests, 120 manifest rows, decoded rows == source rows."""
-    import contextlib
-    import glob
-    import json
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     from ..streaming.events import _scratch_checkpoint
-    from .cells import per_channel_mask_rollup
-    from .cells_binary import CELLS_SCHEMA, _decode_npz
 
     register(spark)
     n_images = 120
@@ -497,8 +472,6 @@ def cells_stream_sink(spark, sf_dir: str = ""):
     # the custom source admits streambatch images per trigger, so the
     # stream needs repeated triggers (availableNow would bound itself to
     # the first latestOffset) — same drain pattern as cells_stream_scan
-    import shutil
-    import time
     with contextlib.ExitStack() as stack:
         ckpt = stack.enter_context(_scratch_checkpoint())
         if not ckpt:  # no /dev/shm: own the fallback dir's cleanup too
@@ -519,67 +492,54 @@ def cells_stream_sink(spark, sf_dir: str = ""):
         raise AssertionError(f"manifests cover {total}/{n_images} rows")
     global LAST_STREAM_SINK_DIR
     LAST_STREAM_SINK_DIR = out  # deterministic handle for tests/consumers
-    back = _decode_listed(spark, out, listed)
-    return per_channel_mask_rollup(back)
+    return per_channel_mask_rollup(_decode_listed(spark, listed))
 
 
 QUERIES["cells_stream_sink"] = (cells_stream_sink, None)  # rows-only
+
+
+def _write_source(spark, n_images: int, numpartitions: int) -> str:
+    """Write the first ``n_images`` source images through the cells sink
+    (one container per partition) into a fresh directory; return it."""
+    register(spark)
+    out = tempfile.mkdtemp(prefix="cells_dsw_")
+    (spark.read.format("cells").option("n_images", n_images)
+     .option("numpartitions", numpartitions).load()
+     .write.format("cells").option("path", out).mode("append").save())
+    return out
 
 
 def cells_datasource_write(spark, sf_dir: str = ""):
     """Registry query: full write→read round trip through the custom
     sink — scan 48 synthetic cells from the DataSource reader, write
     them through the DataSource writer (4 containers + manifest), read
-    the bytes back via binaryFile + the shared npz decoder, and return
+    the bytes back via binaryFile + the container decoder, and return
     the per-channel rollup of the DECODED rows. Identity with the
     source rows is asserted in tests/test_cells_datasource.py."""
-    import json
-    import os
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from .cells import per_channel_mask_rollup
-    from .cells_binary import CELLS_SCHEMA, _decode_npz
-
-    register(spark)
-    out = tempfile.mkdtemp(prefix="cells_dsw_")
-    src = (spark.read.format("cells")
-           .option("n_images", 48).option("numpartitions", 4).load())
-    (src.write.format("cells").option("path", out).mode("append").save())
+    out = _write_source(spark, 48, 4)
     with open(os.path.join(out, "_MANIFEST.json")) as fh:
         man = json.load(fh)
     if man["n_rows"] != 48:
         raise AssertionError(f"manifest rows {man['n_rows']} != 48")
     # the manifest IS the read contract: only committed containers are
     # decoded (a retried task's orphan would otherwise double-count)
-    back = _decode_listed(spark, out, man["containers"])
-    return per_channel_mask_rollup(back)
+    return per_channel_mask_rollup(_decode_listed(spark, man["containers"]))
 
-
-from .cells import rollup_oracle_sql as _rollup_sql48  # noqa: E402
 
 QUERIES["cells_datasource_write"] = (cells_datasource_write,
-                                     _rollup_sql48(48, [0, 1, 2]))
+                                     rollup_oracle_sql(48, [0, 1, 2]))
 
 
 def read_snapshot(spark, path: str, version: int | None = None):
     """Time-travel read of a cells sink directory: decode exactly the
     containers the requested snapshot (default: latest) lists."""
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .cells_binary import CELLS_SCHEMA, _decode_npz
-
     name = ("_MANIFEST.json" if version is None
             else f"_snapshot-{version}.json")
     with open(os.path.join(path, name)) as fh:
         man = json.load(fh)
-    # require_all: a snapshot whose containers a later overwrite
-    # reclaimed must FAIL loudly, not return a silently-empty frame
-    return _decode_listed(spark, path, man["containers"])
+    # a snapshot whose containers a later overwrite reclaimed must FAIL
+    # loudly, not return a silently-empty frame
+    return _decode_listed(spark, man["containers"])
 
 
 def cells_snapshot_timetravel(spark, sf_dir: str = ""):
@@ -588,10 +548,6 @@ def cells_snapshot_timetravel(spark, sf_dir: str = ""):
     (0-19); reading AS OF v1 must return only the first job's rows while
     the latest read sees both. Output: one row per snapshot with its
     row count and id bounds."""
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     register(spark)
     out = tempfile.mkdtemp(prefix="cells_tt_")
     first = (spark.read.format("cells")
@@ -621,29 +577,19 @@ def read_stream_epochs(spark, path: str, up_to_batch: int | None = None):
     committed epochs) — the streaming analogue of snapshot time travel,
     and exactly how a downstream batch consumer tails the sink with
     read-committed semantics."""
-    import glob
-    import json
-    import os
-
-    from pyspark.sql import functions as F
-
-    from .cells_binary import CELLS_SCHEMA, _decode_npz
-
     listed = []
     for mp in sorted(glob.glob(os.path.join(path, "_batch-*.json"))):
         with open(mp) as fh:
             m = json.load(fh)
         if up_to_batch is None or m["batch_id"] <= up_to_batch:
             listed += m["containers"]
-    return _decode_listed(spark, path, listed)
+    return _decode_listed(spark, listed)
 
 
 def cells_source_scan(spark, sf_dir: str = ""):
     """Registry query: the reference smoke path (test.py:10 — load with
     imagelimit + channel subset, then inspect) through the DataSource,
     ending in per-channel area totals."""
-    from .cells import per_channel_mask_rollup
-
     register(spark)
     df = (spark.read.format("cells")
           .option("imagelimit", 120).option("channels", "0,1")
@@ -651,10 +597,8 @@ def cells_source_scan(spark, sf_dir: str = ""):
     return per_channel_mask_rollup(df)
 
 
-from .cells import rollup_oracle_sql as _rollup_sql  # noqa: E402
-
 QUERIES["cells_source_scan"] = (cells_source_scan,
-                                _rollup_sql(120, [0, 1]))
+                                rollup_oracle_sql(120, [0, 1]))
 
 
 def cells_stream_scan(spark, sf_dir: str = ""):
@@ -666,12 +610,8 @@ def cells_stream_scan(spark, sf_dir: str = ""):
     comparable. The drain loop polls the sink row count: the expected
     total is known (images × channels) because synthesis is
     deterministic, and a stop-guard bounds the wait."""
-    import contextlib
-    import time
-
-    from pyspark.sql import functions as F
-
     from ..functions import image_kernels as K
+    from ..streaming.events import _scratch_checkpoint
 
     register(spark)
     n_images, n_ch = 120, 2
@@ -684,8 +624,6 @@ def cells_stream_scan(spark, sf_dir: str = ""):
         F.explode(F.sequence(F.lit(0), F.col("n_channels") - 1)).alias("channel"),
         K.channel_slice(F.col("mask"), F.col("channel"), wh).alias("mask_ch")
     ).select("image_id", "channel", K.area(F.col("mask_ch")).alias("area"))
-
-    from ..streaming.events import _scratch_checkpoint
 
     name = "stream_result_cells_scan"
     spark.catalog.dropTempView(name)
@@ -717,7 +655,74 @@ def cells_stream_scan(spark, sf_dir: str = ""):
 
 
 QUERIES["cells_stream_scan"] = (cells_stream_scan,
-                                _rollup_sql(120, [0, 1]))
+                                rollup_oracle_sql(120, [0, 1]))
+
+
+def cells_binary_scan(spark, sf_dir: str = ""):
+    """Registry query: same output shape as ``cells_source_scan`` (per-
+    channel area rollup over 120 images, channels 0-1) but fed from
+    container bytes on disk: the source is written through the cells
+    sink as 4 ``.npz`` containers, then decoded back — the two paths are
+    directly comparable."""
+    return per_channel_mask_rollup(select_channels(
+        read_snapshot(spark, _write_source(spark, 120, 4)), [0, 1]))
+
+
+QUERIES["cells_binary_scan"] = (cells_binary_scan,
+                                rollup_oracle_sql(120, [0, 1]))
+
+
+def cells_binary_stream_scan(spark, sf_dir: str = ""):
+    """Streaming twin of ``cells_binary_scan`` — the production "files
+    land in a bucket, decode on arrival" ingestion: ``readStream.format
+    ("binaryFile")`` tails the container directory (here drained with
+    availableNow), ``maxFilesPerTrigger`` bounds each micro-batch, and
+    the same container decoder runs per batch. Output = the identical
+    per-channel rollup, so batch/stream parity is directly assertable.
+    At scale this is how image corpora ingest incrementally: checkpoint
+    tracks which files are done, late files just form new batches."""
+    from ..functions import image_kernels as K
+    from ..streaming.events import _scratch_checkpoint
+
+    path = _write_source(spark, 120, 4)
+    raw = (spark.readStream.format("binaryFile")
+           .option("pathGlobFilter", "*.npz")
+           .option("maxFilesPerTrigger", 2)   # 2 containers per micro-batch
+           .schema("path string, modificationTime timestamp, "
+                   "length long, content binary")
+           .load(path)
+           .select("content"))
+    cells = select_channels(
+        raw.mapInArrow(_decode_containers, CELLS_SCHEMA), [0, 1])
+    wh = F.col("width") * F.col("height")
+    per_ch = cells.select(
+        "image_id",
+        F.explode(F.sequence(F.lit(0), F.col("n_channels") - 1)).alias("channel"),
+        K.area(K.channel_slice(F.col("mask"), F.col("channel"), wh))
+        .alias("area"))
+
+    name = "stream_result_cells_containers"
+    spark.catalog.dropTempView(name)
+    with contextlib.ExitStack() as stack:
+        ckpt = stack.enter_context(_scratch_checkpoint())
+        writer = (per_ch.writeStream.format("memory").queryName(name)
+                  .outputMode("append"))
+        if ckpt:
+            writer = writer.option("checkpointLocation", ckpt)
+        q = writer.trigger(availableNow=True).start()
+        stack.callback(q.awaitTermination)
+    got = spark.table(name).count()
+    expected = 120 * 2
+    if got < expected:
+        raise TimeoutError(
+            f"binary stream drained {got}/{expected} rows")
+    return (spark.table(name).groupBy("channel")
+            .agg(F.sum("area").alias("total_area"),
+                 F.count(F.lit(1)).alias("n_images")))
+
+
+QUERIES["cells_binary_stream_scan"] = (cells_binary_stream_scan,
+                                       rollup_oracle_sql(120, [0, 1]))
 
 
 def register(spark) -> None:

@@ -1,16 +1,26 @@
 """Contract tests for the `cells` Python DataSource — the engine's
 equivalent of the reference scifio reader's option surface
-(main.py:17-19, test.py:10): row identity with the mapInPandas
-generator, channel-projection pushdown, row-limit pushdown, masked
-schema switch, partition planning, and image_id predicate pushdown."""
+(main.py:17-19, test.py:10): row identity with the numpy generator,
+channel-projection pushdown, row-limit pushdown, masked schema switch,
+partition planning, image_id predicate pushdown, and the sink → decoder
+round trips (batch, stream, snapshot, binaryFile scans)."""
 
 from __future__ import annotations
+
+import json
+import os
+import shutil
+import tempfile
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
 
 from big_data_science_project_spark.sources import cells_datasource as CD
-from big_data_science_project_spark.sources.cells import load_cells, select_channels
+from big_data_science_project_spark.sources.cells import (CELLS_SCHEMA,
+                                                          _gen_image,
+                                                          load_cells,
+                                                          select_channels)
 
 
 @pytest.fixture(scope="module", autouse=True)
@@ -22,10 +32,45 @@ def _fmt(spark):
     return spark.read.format("cells")
 
 
+def _numpy_rows(n, channels=(0, 1, 2), masked=True, c=3, w=16, h=16):
+    """The rows the source must produce, built from ``_gen_image``
+    directly (no Spark): channel slices of the flat channel-major
+    arrays, mask dropped when ``masked`` is false."""
+    rows = []
+    for i in range(n):
+        d, m = _gen_image(i, c, w, h)
+        d = d.reshape(c, w * h)[list(channels)].reshape(-1)
+        m = m.reshape(c, w * h)[list(channels)].reshape(-1)
+        rows.append((i, len(channels), w, h, d.tolist())
+                    + ((m.tolist(),) if masked else ()))
+    return rows
+
+
+def _decode_dir(spark, out):
+    """Every container on disk under ``out`` (not only the manifest's),
+    through the one container decoder."""
+    return (spark.read.format("binaryFile")
+            .option("pathGlobFilter", "*.npz").load(out)
+            .select("content")
+            .mapInArrow(CD._decode_containers, CELLS_SCHEMA))
+
+
 def test_rows_match_mapinpandas_source(spark):
-    a = sorted(map(tuple, _fmt(spark).option("n_images", 12).load().collect()))
-    b = sorted(map(tuple, load_cells(spark, n_images=12).collect()))
-    assert a == b
+    """Source rows equal the numpy generator's, value for value: all
+    channels (through ``load_cells`` and the format), a channel subset,
+    the unmasked schema and a zero row limit."""
+    want = _numpy_rows(12)
+    assert sorted(map(tuple, load_cells(spark, n_images=12).collect())) == want
+    assert sorted(map(tuple, _fmt(spark).option("n_images", 12)
+                      .load().collect())) == want
+    assert sorted(map(tuple, _fmt(spark).option("n_images", 6)
+                      .option("channels", "0,2").load().collect())) == \
+        _numpy_rows(6, channels=(0, 2))
+    assert sorted(map(tuple, _fmt(spark).option("n_images", 4)
+                      .option("masked", "false").load().collect())) == \
+        _numpy_rows(4, masked=False)
+    assert _fmt(spark).option("imagelimit", 0).load().collect() == []
+    assert load_cells(spark, imagelimit=0).collect() == []
 
 
 def test_imagelimit_pushdown(spark):
@@ -110,9 +155,6 @@ def test_writer_roundtrip_row_identity(spark):
     import os
     import tempfile
 
-    from big_data_science_project_spark.sources.cells_binary import (
-        CELLS_SCHEMA, _decode_npz)
-
     CD.register(spark)
     out = tempfile.mkdtemp(prefix="cells_dsw_test_")
     src = (spark.read.format("cells")
@@ -127,9 +169,7 @@ def test_writer_roundtrip_row_identity(spark):
     assert sorted(man["containers"]) == on_disk
     assert len(on_disk) == 3  # one container per non-empty task
 
-    back = (spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.npz").load(out)
-            .select("content").mapInPandas(_decode_npz, CELLS_SCHEMA))
+    back = _decode_dir(spark, out)
     want = sorted(tuple(r) for r in src.collect())
     got = sorted(tuple(r) for r in back.collect())
     assert got == want
@@ -163,8 +203,6 @@ def test_stream_sink_roundtrip_and_epoch_manifests(spark):
     import os
 
     from big_data_science_project_spark.sources import cells_datasource as CD2
-    from big_data_science_project_spark.sources.cells_binary import (
-        CELLS_SCHEMA, _decode_npz)
 
     df = CD2.QUERIES["cells_stream_sink"][0](spark)
     rollup = {r["channel"]: (r["total_area"], r["n_images"])
@@ -185,9 +223,7 @@ def test_stream_sink_roundtrip_and_epoch_manifests(spark):
         ids.append(m["n_rows"])
     assert sum(ids) == 120
 
-    back = (spark.read.format("binaryFile")
-            .option("pathGlobFilter", "*.npz").load(out)
-            .select("content").mapInPandas(_decode_npz, CELLS_SCHEMA))
+    back = _decode_dir(spark, out)
     CD2.register(spark)
     src = (spark.read.format("cells")
            .option("imagelimit", 120).option("numpartitions", 4).load())
@@ -321,3 +357,40 @@ def test_snapshot_read_after_overwrite_fails_loudly(spark):
         read_snapshot(spark, out, version=1)
     # the post-overwrite snapshot still reads fine
     assert read_snapshot(spark, out).count() == 6
+
+
+def test_snapshot_read_touches_only_its_manifest(spark):
+    """A snapshot read opens exactly the containers its manifest lists:
+    a stray container in the sink directory is neither read nor
+    returned. An epoch bound that admits no epoch reads nothing."""
+    out = tempfile.mkdtemp(prefix="cells_tt_stray_")
+    src = (spark.read.format("cells")
+           .option("imagelimit", 8).option("numpartitions", 2).load())
+    src.write.format("cells").option("path", out).mode("append").save()
+    with open(os.path.join(out, "_MANIFEST.json")) as fh:
+        man = json.load(fh)
+    shutil.copy(man["containers"][0], os.path.join(out, "stray.npz"))
+
+    back = CD.read_snapshot(spark, out)
+    assert sorted(urlparse(p).path for p in back.inputFiles()) == \
+        sorted(man["containers"])
+    assert sorted(tuple(r) for r in back.collect()) == \
+        sorted(tuple(r) for r in src.collect())
+    assert CD.read_stream_epochs(spark, out, up_to_batch=-1).count() == 0
+
+
+def test_binary_scan_rollup_matches_datasource_scan(spark):
+    """Same 120-image / 2-channel rollup through two ingestion paths:
+    containers written through the sink and decoded back vs the
+    DataSource scan."""
+    a = sorted(map(tuple, CD.cells_binary_scan(spark).collect()))
+    b = sorted(map(tuple, CD.cells_source_scan(spark).collect()))
+    assert a == b
+
+
+def test_binary_stream_scan_matches_batch_scan(spark):
+    """availableNow binaryFile stream (2 containers per micro-batch) must
+    produce the identical rollup as the batch container scan."""
+    a = sorted(map(tuple, CD.cells_binary_stream_scan(spark).collect()))
+    b = sorted(map(tuple, CD.cells_binary_scan(spark).collect()))
+    assert a == b

@@ -112,7 +112,7 @@ def test_grid_search_is_one_job_shape(spark):
         grid_search_threshold)
     df = grid_search_threshold(load_cells(spark, n_images=4))
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("MapInPandas") == 1, plan  # the one cells scan
+    assert plan.count("BatchScan cells") == 1, plan  # the one cells scan
     for node in ("Join", "CartesianProduct", "EvalPython"):
         assert node not in plan, (node, plan)
 
