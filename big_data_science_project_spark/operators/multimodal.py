@@ -251,9 +251,9 @@ def export_payloads(encoded: DataFrame, base_dir: str) -> DataFrame:
     the manifest a driver sees is bounded by task count, never corpus
     size, matching the one-row-per-container discipline of the cells
     sink (``sources/cells_datasource.py``). Filenames are an injective
-    function of ``image_id``, so per-task ``n_distinct_paths`` sums to the global
-    distinct count whenever image ids are globally unique (they are, by
-    construction of ``load_cells``)."""
+    function of ``image_id``, so per-task ``n_distinct_paths`` sums to
+    the global distinct count whenever image ids are globally unique
+    (they are, by construction of ``load_cells``)."""
     schema = T.StructType([
         T.StructField("n_files", T.LongType()),
         T.StructField("n_bytes", T.LongType()),
@@ -714,8 +714,6 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str = "") -> DataFrame:
             lambda b: (np.frombuffer(b, dtype=np.float32) + np.float32(0.4))
             .tobytes())
 
-    # the copies' own scan of the first PHASH_DUPS ids, not a filter
-    # over `base`'s scan (see load_cells on filtered branches)
     dups = (encode_cells(load_cells(spark, n_images=PHASH_DUPS))
             .select((F.col("image_id") + PHASH_ID_OFFSET).alias("image_id"),
                     "n_channels", "width", "height",
@@ -917,18 +915,19 @@ def _surf_votes(kp_left: DataFrame, kp_right: DataFrame,
 
 def multimodal_surf_neardup(spark: SparkSession,
                             sf_dir: str = "") -> DataFrame:
-    cells = load_cells(spark, n_images=SURF_DEDUP_IMAGES,
-                       width=48, height=48)
     wh = F.col("width") * F.col("height")
-    ch0 = cells.select(
-        "image_id", "width", "height",
-        F.slice("data", F.lit(1), wh).alias("data_ch"))
-    clones = (ch0.filter(F.col("image_id") < SURF_DEDUP_CLONES)
+
+    def ch0(n_images):
+        return load_cells(spark, n_images=n_images, width=48,
+                          height=48).select(
+            "image_id", "width", "height",
+            F.slice("data", F.lit(1), wh).alias("data_ch"))
+    clones = (ch0(SURF_DEDUP_CLONES)
               .select((F.col("image_id") + SURF_CLONE_OFFSET)
                       .alias("image_id"), "width", "height",
                       F.transform("data_ch", lambda x: x * F.lit(0.7))
                       .alias("data_ch")))
-    kp = _surf_keypoints(ch0.unionByName(clones))
+    kp = _surf_keypoints(ch0(SURF_DEDUP_IMAGES).unionByName(clones))
     return _surf_votes(kp, kp, same_table=True) \
         .orderBy("image_a", "image_b")
 
@@ -1005,9 +1004,6 @@ def multimodal_ingest_dedup(spark: SparkSession, sf_dir: str = "",
     wh = F.col("width") * F.col("height")
 
     def ch0():
-        # one scan per branch: all scans of one Python data source
-        # relation share the image_id filter pushed into one of them
-        # (load_cells docstring), and the plants filter by id
         return load_cells(spark, n_images=INGEST_IMG_INDEX, width=48,
                           height=48).select(
             "image_id", "width", "height",

@@ -98,11 +98,10 @@ def load_cells(spark: SparkSession, n_images: int = DEFAULT_N,
     source's ``n_channels``). Registers the source first, so a plain
     session works too.
 
-    Spark keeps ONE read plan per Python data source relation: when one
-    returned DataFrame feeds several branches of a plan, every branch
-    reads with the ``image_id`` filter pushed into one of them. A branch
-    that filters on ``image_id`` therefore takes its own ``load_cells``
-    call."""
+    Spark keeps one read plan per Python data source relation, so a
+    returned DataFrame feeds one scan: a second branch takes its own
+    ``load_cells`` call (guarded for the registry by
+    ``tests/test_cells_datasource.py``)."""
     from .cells_datasource import register
 
     register(spark)

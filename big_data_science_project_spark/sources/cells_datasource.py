@@ -25,8 +25,7 @@ from :func:`.cells._gen_image` (``load_cells`` is a wrapper over it),
 ``df.write.format("cells")`` is the one ``.npz`` container writer
 (:func:`_write_rows_container`), and :func:`_decode_containers` is the
 one decoder, reading back exactly the containers a manifest lists
-(``binaryFile`` → ``mapInArrow``). Synthesis and decode build their
-Arrow batches with the same :func:`_cells_batch`.
+(``binaryFile`` → ``mapInArrow``).
 """
 
 from __future__ import annotations
@@ -60,6 +59,7 @@ from .cells import (CELLS_SCHEMA, DEFAULT_C, DEFAULT_H, DEFAULT_N, DEFAULT_W,
                     _gen_image, per_channel_mask_rollup, rollup_oracle_sql,
                     select_channels)
 
+
 @dataclass
 class _IdRange(InputPartition):
     start: int
@@ -67,9 +67,11 @@ class _IdRange(InputPartition):
 
 
 def _split(lo: int, hi: int, k: int) -> list[_IdRange]:
-    """``k`` id ranges over ``[lo, hi)`` with ``spark.range``'s bounds
-    (``lo + i·n // k``), so a scan splits its ids as a range would."""
+    """At most ``k`` (at least one) id ranges over ``[lo, hi)`` with
+    ``spark.range``'s bounds (``lo + i·n // k``), so a scan splits its
+    ids as a range would."""
     n = max(0, hi - lo)
+    k = max(1, min(k, n))
     return [_IdRange(lo + i * n // k, lo + (i + 1) * n // k)
             for i in range(k)]
 
@@ -164,39 +166,40 @@ class CellsReader(DataSourceReader):
                                      partition.start, partition.end)
 
 
-def _cells_batch(cols: list, ids: np.ndarray, c: int, w: int, h: int,
-                 data: np.ndarray, mask: np.ndarray) -> pa.RecordBatch:
-    """One Arrow RecordBatch of cells rows straight from numpy: ``data``
-    and ``mask`` hold one image per row (``c·w·h`` values each), so both
-    list columns are one flat buffer plus one shared offsets array — no
-    per-row Python objects. Shared by synthesis and decode."""
-    n = len(ids)
-    # int32 list offsets: the cast raises rather than wraps past 2**31
-    offsets = pa.array(np.arange(n + 1) * (c * w * h), pa.int32())
-    columns = {
-        "image_id": pa.array(ids, pa.int64()),
-        "n_channels": pa.array(np.full(n, c, np.int32)),
-        "width": pa.array(np.full(n, w, np.int32)),
-        "height": pa.array(np.full(n, h, np.int32)),
-        "data": pa.ListArray.from_arrays(offsets, pa.array(data.reshape(-1))),
-        "mask": pa.ListArray.from_arrays(offsets, pa.array(mask.reshape(-1))),
-    }
-    return pa.RecordBatch.from_arrays([columns[k] for k in cols], names=cols)
-
-
 def _arrow_batch_for_range(o: dict, read_cols: list, start: int, end: int):
-    """Synthesis core for the batch and streaming readers: one Arrow
-    RecordBatch of cell rows for an id range, with channel projection
-    pushdown applied at synthesis time."""
-    c, w, h, sel = o["n_channels"], o["width"], o["height"], o["channels"]
-    ids = np.arange(start, end, dtype=np.int64)
-    data = np.empty((len(ids), len(sel), w * h), dtype=np.float64)
-    mask = np.empty((len(ids), len(sel), w * h), dtype=bool)
-    for i, image_id in enumerate(ids):
-        d, m = _gen_image(int(image_id), c, w, h)
-        data[i] = d.reshape(c, w * h)[sel]
-        mask[i] = m.reshape(c, w * h)[sel]
-    return _cells_batch(read_cols, ids, len(sel), w, h, data, mask)
+    """Shared generation core for the batch and streaming readers: one
+    Arrow RecordBatch of cell rows for an id range, with channel
+    projection pushdown applied at synthesis time."""
+    sel = o["channels"]
+    cols: dict[str, list] = {c: [] for c in read_cols}
+    for image_id in range(start, end):
+        data, mask = _gen_image(image_id, o["n_channels"],
+                                o["width"], o["height"])
+        wh = o["width"] * o["height"]
+        # channel projection pushdown: slice only requested channels
+        if "image_id" in cols:
+            cols["image_id"].append(image_id)
+        if "n_channels" in cols:
+            cols["n_channels"].append(len(sel))
+        if "width" in cols:
+            cols["width"].append(o["width"])
+        if "height" in cols:
+            cols["height"].append(o["height"])
+        if "data" in cols:
+            cols["data"].append(np.concatenate(
+                [data[c * wh:(c + 1) * wh] for c in sel]))
+        if "mask" in cols:
+            cols["mask"].append(np.concatenate(
+                [mask[c * wh:(c + 1) * wh] for c in sel]))
+    arrays, names = [], []
+    pa_types = {"image_id": pa.int64(), "n_channels": pa.int32(),
+                "width": pa.int32(), "height": pa.int32(),
+                "data": pa.list_(pa.float64()),
+                "mask": pa.list_(pa.bool_())}
+    for name in read_cols:
+        arrays.append(pa.array(cols[name], type=pa_types[name]))
+        names.append(name)
+    return pa.RecordBatch.from_arrays(arrays, names=names)
 
 
 class CellsStreamReader(DataSourceStreamReader):
@@ -229,7 +232,7 @@ class CellsStreamReader(DataSourceStreamReader):
 
     def partitions(self, start: dict, end: dict) -> list:
         lo, hi = start["next"], end["next"]
-        return _split(lo, hi, min(self.o["numpartitions"], max(0, hi - lo)))
+        return _split(lo, hi, self.o["numpartitions"]) if hi > lo else []
 
     def read(self, partition: _IdRange):
         yield _arrow_batch_for_range(self.o, self.read_cols,
@@ -417,15 +420,24 @@ LAST_STREAM_SINK_DIR: str | None = None
 def _decode_containers(batches):
     """The one container decoder (``mapInArrow``): each ``content`` value
     is one ``.npz`` container, emitted as one Arrow batch of its cells
-    rows. A real codec (scifio/pillow/pyav) slots in by replacing only
-    ``np.load``."""
+    rows. Both list columns are the container's flat numpy buffer plus
+    one shared offsets array — no per-row Python objects. A real codec
+    (scifio/pillow/pyav) slots in by replacing only ``np.load``."""
     for batch in batches:
         for content in batch.column("content").to_pylist():
             with np.load(io.BytesIO(content)) as z:
                 ids, data, mask = z["image_ids"], z["data"], z["mask"]
-            _, c, w, h = data.shape
-            yield _cells_batch(CELLS_SCHEMA.fieldNames(), ids, c, w, h,
-                               data, mask)
+            n, c, w, h = data.shape
+            # int32 list offsets: the cast raises rather than wraps past 2**31
+            offsets = pa.array(np.arange(n + 1) * (c * w * h), pa.int32())
+            yield pa.RecordBatch.from_arrays([
+                pa.array(ids, pa.int64()),
+                pa.array(np.full(n, c, np.int32)),
+                pa.array(np.full(n, w, np.int32)),
+                pa.array(np.full(n, h, np.int32)),
+                pa.ListArray.from_arrays(offsets, pa.array(data.reshape(-1))),
+                pa.ListArray.from_arrays(offsets, pa.array(mask.reshape(-1))),
+            ], names=CELLS_SCHEMA.fieldNames())
 
 
 def _decode_listed(spark, listed: list):

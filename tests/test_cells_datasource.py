@@ -101,6 +101,22 @@ def test_numpartitions_planning(spark):
     assert df.rdd.getNumPartitions() == 5
 
 
+def test_numpartitions_below_one_plans_one_partition(spark):
+    """``numpartitions`` <= 0 plans one partition covering every id, in
+    the batch reader and per micro-batch in the stream reader; more
+    partitions than images plan one per image."""
+    df = _fmt(spark).option("n_images", 5).option("numpartitions", 0).load()
+    assert df.rdd.getNumPartitions() == 1
+    assert sorted(r.image_id for r in df.select("image_id").collect()) == \
+        list(range(5))
+    dsrc = CD.CellsDataSource({"n_images": "5", "numpartitions": "0"})
+    parts = dsrc.streamReader(dsrc.schema()).partitions({"next": 0},
+                                                        {"next": 5})
+    assert [(p.start, p.end) for p in parts] == [(0, 5)]
+    assert _fmt(spark).option("n_images", 3).option("numpartitions", 8) \
+        .load().rdd.getNumPartitions() == 3
+
+
 def test_image_id_predicate_pushdown(spark):
     df = (_fmt(spark).option("n_images", 240).option("numpartitions", 4).load()
           .filter((F.col("image_id") >= 100) & (F.col("image_id") < 104)))
@@ -394,3 +410,49 @@ def test_binary_stream_scan_matches_batch_scan(spark):
     a = sorted(map(tuple, CD.cells_binary_stream_scan(spark).collect()))
     b = sorted(map(tuple, CD.cells_binary_scan(spark).collect()))
     assert a == b
+
+
+def _cells_scan_tables(spark, df) -> list[int]:
+    """The identity of the table behind every cells scan in ``df``'s
+    optimized plan, persisted fragments included (each fragment once)."""
+    ident = spark._jvm.System.identityHashCode
+    tables, seen = [], set()
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        kind = node.getClass().getSimpleName()
+        table = (node.relation().table() if kind == "DataSourceV2ScanRelation"
+                 else node.table() if kind == "BatchScanExec" else None)
+        if table is not None and table.name() == "cells":
+            tables.append(ident(table))
+        it = node.children().iterator()
+        while it.hasNext():
+            stack.append(it.next())
+        # a persisted fragment's plan hangs off every use of it
+        it = node.innerChildren().iterator()
+        while it.hasNext():
+            inner = it.next()
+            if ident(inner) not in seen:
+                seen.add(ident(inner))
+                stack.append(inner)
+    return tables
+
+
+def test_registry_cells_relations_feed_one_scan(spark, sf_dir, monkeypatch):
+    """Spark plans one read per Python data source relation: every scan
+    of one loaded cells DataFrame reads the id range pushed into any of
+    them, so a DataFrame feeding two branches where one filters on
+    ``image_id`` silently loses the other branch's images. No registry
+    query over the cells source may scan one relation twice."""
+    from big_data_science_project_spark.operators import (multimodal,
+                                                          segmentation)
+    from big_data_science_project_spark.sources import cells as cells_src
+
+    monkeypatch.setattr(spark, "_bdsp_plan_cache", {}, raising=False)
+    shared = {}
+    for mod in (cells_src, segmentation, multimodal):
+        for name, (fn, _) in mod.QUERIES.items():
+            tables = _cells_scan_tables(spark, fn(spark, sf_dir))
+            if len(tables) != len(set(tables)):
+                shared[name] = tables
+    assert not shared, shared

@@ -157,3 +157,22 @@ def test_surf_neardup_finds_planted_clones_only(spark):
         assert (r.dr, r.dc) == (0, 0)
         assert r.n_aligned >= SURF_MIN_ALIGNED
     assert sorted(r.image_a for r in rows) == list(range(SURF_DEDUP_CLONES))
+
+
+def test_surf_neardup_keypoints_cover_every_image(spark, monkeypatch):
+    """The keypoint input holds all SURF_DEDUP_IMAGES images plus the
+    clones: the negative controls are in it, not only the cloned ids
+    (the clone pairs alone come out the same either way)."""
+    from big_data_science_project_spark.operators import multimodal as M
+
+    seen = []
+    real = M._surf_keypoints
+
+    def spy(df):
+        seen.extend(r.image_id for r in df.select("image_id").collect())
+        return real(df)
+
+    monkeypatch.setattr(M, "_surf_keypoints", spy)
+    M.multimodal_surf_neardup(spark)
+    assert sorted(seen) == list(range(M.SURF_DEDUP_IMAGES)) + [
+        M.SURF_CLONE_OFFSET + i for i in range(M.SURF_DEDUP_CLONES)]

@@ -50,16 +50,18 @@ def surf_tier(spark, n_images: int):
         SURF_CLONE_OFFSET, SURF_DEDUP_CLONES, _surf_keypoints, _surf_votes)
     from big_data_science_project_spark.sources.cells import load_cells
 
-    cells = load_cells(spark, n_images=n_images, width=48, height=48)
     wh = F.col("width") * F.col("height")
-    ch0 = cells.select("image_id", "width", "height",
-                       F.slice("data", F.lit(1), wh).alias("data_ch"))
-    clones = (ch0.filter(F.col("image_id") < SURF_DEDUP_CLONES)
+
+    def ch0(n):
+        return load_cells(spark, n_images=n, width=48, height=48).select(
+            "image_id", "width", "height",
+            F.slice("data", F.lit(1), wh).alias("data_ch"))
+    clones = (ch0(SURF_DEDUP_CLONES)
               .select((F.col("image_id") + SURF_CLONE_OFFSET)
                       .alias("image_id"), "width", "height",
                       F.transform("data_ch", lambda x: x * F.lit(0.7))
                       .alias("data_ch")))
-    kp = _surf_keypoints(ch0.unionByName(clones))
+    kp = _surf_keypoints(ch0(n_images).unionByName(clones))
     try:
         rows = _surf_votes(kp, kp, same_table=True).collect()
     finally:
