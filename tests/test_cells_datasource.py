@@ -97,14 +97,11 @@ def test_masked_false_drops_mask_column(spark):
 
 
 def test_numpartitions_planning(spark):
+    """``numpartitions`` splits the ids; <= 0 plans one partition holding
+    every id (batch reader and each stream micro-batch); more partitions
+    than images plan one per image."""
     df = _fmt(spark).option("n_images", 40).option("numpartitions", 5).load()
     assert df.rdd.getNumPartitions() == 5
-
-
-def test_numpartitions_below_one_plans_one_partition(spark):
-    """``numpartitions`` <= 0 plans one partition covering every id, in
-    the batch reader and per micro-batch in the stream reader; more
-    partitions than images plan one per image."""
     df = _fmt(spark).option("n_images", 5).option("numpartitions", 0).load()
     assert df.rdd.getNumPartitions() == 1
     assert sorted(r.image_id for r in df.select("image_id").collect()) == \

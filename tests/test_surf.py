@@ -141,29 +141,17 @@ def test_cells_surf_query_matches_local(spark):
 
 
 @pytest.mark.usefixtures("spark")
-def test_surf_neardup_finds_planted_clones_only(spark):
+def test_surf_neardup_finds_planted_clones_only(spark, monkeypatch):
     """The structural image-dedup tier: exactly the four planted
     contrast-scaled clones pair with their originals, each on the
     identity translation with >= MIN_ALIGNED aligned keypoints, and no
-    cross-image conspiracy clears the vote (the fixture's best is 2)."""
-    from big_data_science_project_spark.operators.multimodal import (
-        SURF_CLONE_OFFSET, SURF_DEDUP_CLONES, SURF_MIN_ALIGNED,
-        multimodal_surf_neardup)
-
-    rows = multimodal_surf_neardup(spark).collect()
-    assert len(rows) == SURF_DEDUP_CLONES
-    for r in rows:
-        assert r.image_b == r.image_a + SURF_CLONE_OFFSET
-        assert (r.dr, r.dc) == (0, 0)
-        assert r.n_aligned >= SURF_MIN_ALIGNED
-    assert sorted(r.image_a for r in rows) == list(range(SURF_DEDUP_CLONES))
-
-
-def test_surf_neardup_keypoints_cover_every_image(spark, monkeypatch):
-    """The keypoint input holds all SURF_DEDUP_IMAGES images plus the
-    clones: the negative controls are in it, not only the cloned ids
-    (the clone pairs alone come out the same either way)."""
+    cross-image conspiracy clears the vote (the fixture's best is 2).
+    Every image, negative controls included, reaches the keypoint
+    stage: the clone pairs alone would come out the same without them."""
     from big_data_science_project_spark.operators import multimodal as M
+    from big_data_science_project_spark.operators.multimodal import (
+        SURF_CLONE_OFFSET, SURF_DEDUP_CLONES, SURF_DEDUP_IMAGES,
+        SURF_MIN_ALIGNED, multimodal_surf_neardup)
 
     seen = []
     real = M._surf_keypoints
@@ -173,6 +161,12 @@ def test_surf_neardup_keypoints_cover_every_image(spark, monkeypatch):
         return real(df)
 
     monkeypatch.setattr(M, "_surf_keypoints", spy)
-    M.multimodal_surf_neardup(spark)
-    assert sorted(seen) == list(range(M.SURF_DEDUP_IMAGES)) + [
-        M.SURF_CLONE_OFFSET + i for i in range(M.SURF_DEDUP_CLONES)]
+    rows = multimodal_surf_neardup(spark).collect()
+    assert sorted(seen) == list(range(SURF_DEDUP_IMAGES)) + [
+        SURF_CLONE_OFFSET + i for i in range(SURF_DEDUP_CLONES)]
+    assert len(rows) == SURF_DEDUP_CLONES
+    for r in rows:
+        assert r.image_b == r.image_a + SURF_CLONE_OFFSET
+        assert (r.dr, r.dc) == (0, 0)
+        assert r.n_aligned >= SURF_MIN_ALIGNED
+    assert sorted(r.image_a for r in rows) == list(range(SURF_DEDUP_CLONES))
