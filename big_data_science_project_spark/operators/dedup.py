@@ -999,8 +999,8 @@ _SWEEP_MUTS = (
 )
 
 # doc_id < SWEEP_OFF guards the clone-id arithmetic: clone identity is
-# doc_id + m*SWEEP_OFF, so a base id >= SWEEP_OFF (e.g. a replicated
-# corpus like tools/scale_probe.py builds, where ids reach 26M) would
+# doc_id + m*SWEEP_OFF, so a base id >= SWEEP_OFF (e.g. a corpus
+# replicated for a scale test, where ids reach 26M) would
 # collide with clone ids and silently corrupt the recall counts —
 # filtering the base keeps the sweep correct on ANY corpus size
 _SWEEP_BASE_PRED_SPARK = (f"doc_id % 13 = 3 AND doc_id < {SWEEP_OFF}"

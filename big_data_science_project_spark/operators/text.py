@@ -1243,9 +1243,8 @@ LM_HOT_BIGRAM = 100_000
 # for a fully-degenerate single-history corpus — one comfortable task
 # — while the split's three disjoint branches cost ~3x the plan
 # (~20 extra scheduling rounds, which DOMINATE wall at fixture sizes).
-# Above the gate the split bounds the hot partitions exactly as the
-# straggler probe documents (tools/straggler_probe.py's planted
-# million-occurrence history).
+# Above the gate the split bounds the hot partitions of a skewed
+# corpus (e.g. one planted million-occurrence history).
 LM_SKEW_SPLIT_MIN_BYTES = 64 * 1024 * 1024
 
 

@@ -1816,9 +1816,8 @@ def stream_ingest_excise_loop(spark: SparkSession, sf_dir: str,
     against the PRE-BURST store snapshot (so even two takedown rows
     sharing a digest across slices count identically however the burst
     is sliced — the in-process comment). The burst test pins ledger
-    equality against the K=1 run; tools/excise_probe.py's burst rung
-    times K=1 vs K>1 to price per-burst rebuild amortization (r11
-    verdict item 7).
+    equality against the K=1 run, so K=1 and K>1 differ only in cost:
+    the per-burst rebuild that batching amortizes.
 
     ``phases``/``work_dir`` simulate a driver restart exactly like
     ``stream_ingest_loop``'s resume: ``phases`` selects which of the
@@ -2146,9 +2145,9 @@ def stream_ingest_excise_loop(spark: SparkSession, sf_dir: str,
     # explicit driver-side listing, not a glob: passing "report/*"
     # makes FileStreamSink.hasMetadata stat the raw glob string as a
     # literal path during analysis and WARN-log a FileNotFoundException
-    # stack (harmless but it polluted BENCH_r11's stderr — r11 verdict
-    # item 4); enumerated paths stat clean. Committed parts only — a
-    # torn report write from a crashed run must not feed the sums
+    # stack (harmless, but it pollutes stderr); enumerated paths stat
+    # clean. Committed parts only — a torn report write from a crashed
+    # run must not feed the sums
     report_parts = sorted(
         f"{report_dir}/{d}" for d in os.listdir(report_dir)
         if os.path.exists(f"{report_dir}/{d}/_SUCCESS"))

@@ -160,66 +160,42 @@ def test_multimodal_scale_artifact_matches_probe_schema():
                     "collided with the scaled index")
 
 
-def test_driver_window_policy_invariants():
-    """The steady-state driver-window policy (r13 verdict item 2) is
-    COMPUTED, not hand-rotated — pin its invariants so it can neither
-    ossify nor skip a changed module: (a) the canaries lead; (b) every
-    value oracle implemented in a TOUCHED_MODULES module sits inside
-    the driver's 50-slot window; (c) the refill section is ordered
-    least-recently-verified first; (d) the generated history table
-    only names registry oracles (a rename would silently reset a
-    query's age)."""
-    from big_data_science_project_spark.operators import (
-        CANARIES, TOUCHED_MODULES, TOUCHED_QUERIES, WINDOW_SIZE)
-    from big_data_science_project_spark.operators._window_history import \
-        LAST_VERIFIED
+def test_cited_repo_files_exist():
+    """The docs a reader follows cite only files that are in the repo.
+    A cited path is one under tools/, tests/, perfbench/ or
+    big_data_science_project_spark/ (a directory counts when it holds
+    a tracked file; a ``file.py::name`` citation counts as its file),
+    or a bare ``*.py``/``*.json`` name, which must be a tracked file at
+    the root or the basename of one (README's layout tree names nested
+    modules bare). Deleting a file therefore fails this test until every
+    doc that still tells the reader to run or open it is rewritten.
+    FIXTURES.md also cites the reference code's ``feature extraction.py``
+    (outside the repo, with a space in its name), which is skipped."""
+    import subprocess
 
-    queries, oracles = collect_registry()
-    window = list(queries)[:WINDOW_SIZE]
-    assert window[:len(CANARIES)] == list(CANARIES)
-
-    # (b) touched-module oracles are mandatory window members
-    import importlib
-    pkg = "big_data_science_project_spark"
-    touched_oracles = set()
-    for short in TOUCHED_MODULES:
-        mod = None
-        for cand in (f"{pkg}.operators.{short}", f"{pkg}.streaming.{short}",
-                     f"{pkg}.sources.{short}"):
-            try:
-                mod = importlib.import_module(cand)
-                break
-            except ImportError:
-                continue
-        assert mod is not None, f"TOUCHED_MODULES names unknown module {short}"
-        touched_oracles |= {n for n, (fn, sql) in
-                            getattr(mod, "QUERIES", {}).items()
-                            if sql is not None}
-    # the surgical tier (sub-module reach sets) is mandatory too, and
-    # must name real value oracles
-    assert set(TOUCHED_QUERIES) <= set(oracles), (
-        "TOUCHED_QUERIES names a non-oracle or unknown query")
-    touched_oracles |= set(TOUCHED_QUERIES)
-    missing = touched_oracles - set(window)
-    assert not missing, (
-        f"touched-module oracles outside the driver window: {sorted(missing)}")
-
-    # (c) the refill tail is least-recent-first
-    n_mand = len(CANARIES) + len(touched_oracles - set(CANARIES))
-    refill_rounds = [LAST_VERIFIED.get(n, 0) for n in window[n_mand:]]
-    assert refill_rounds == sorted(refill_rounds), (
-        "refill section is not least-recently-verified-first")
-    # and nothing OUTSIDE the window is older than the refill's newest
-    # (the policy really picked the oldest)
-    if refill_rounds:
-        outside = [LAST_VERIFIED.get(n, 0)
-                   for n in oracles if n not in window]
-        assert all(r >= refill_rounds[-1] for r in outside), (
-            "an oracle older than the refill tail was left outside the window")
-
-    # (d) history names are registry names
-    unknown = set(LAST_VERIFIED) - set(oracles)
-    assert not unknown, f"history table names unknown oracles: {sorted(unknown)}"
+    repo = os.path.dirname(README)
+    tracked = subprocess.run(
+        ["git", "-C", repo, "ls-files"], capture_output=True, text=True,
+        check=True).stdout.splitlines()
+    basenames = {os.path.basename(t) for t in tracked}
+    cite = re.compile(
+        r"(?<![\w./-])((?:tools|tests|perfbench|big_data_science_project_spark)"
+        r"/[\w./-]*|[\w-]+\.(?:py|json))(?![\w-])")
+    missing = []
+    for doc in ("README.md", "FIXTURES.md", "TESTDATA.md",
+                ".claude/skills/verify/SKILL.md"):
+        with open(os.path.join(repo, doc)) as f:
+            text = f.read().replace("feature extraction.py", "")
+        for path in {m.group(1).rstrip(".") for m in cite.finditer(text)}:
+            if "/" not in path:
+                ok = path in basenames
+            elif path.endswith("/"):
+                ok = any(t.startswith(path) for t in tracked)
+            else:
+                ok = path in tracked
+            if not ok:
+                missing.append(f"{doc}: {path}")
+    assert not missing, f"docs cite files that are not in the repo: {missing}"
 
 
 def test_selfcheck_trio_generated_at_committed_engine_state():
@@ -227,14 +203,14 @@ def test_selfcheck_trio_generated_at_committed_engine_state():
     round's final engine commits): each cited selfcheck artifact must
     carry the git_head stamp tools/selfcheck.py records, the engine
     tree must have been CLEAN at generation time, and no engine source
-    (big_data_science_project_spark/, __spark_entry__.py, bench.py)
-    may have changed between that commit and the repo's HEAD — i.e.
+    (big_data_science_project_spark/, __spark_entry__.py) may have
+    changed between that commit and the repo's HEAD — i.e.
     the committed trio really describes the committed engine."""
     import subprocess
 
     repo = os.path.dirname(README)
     engine_paths = ["big_data_science_project_spark",
-                    "__spark_entry__.py", "bench.py"]
+                    "__spark_entry__.py"]
     for path in _selfcheck_artifacts(open(README).read()):
         full = os.path.join(repo, path)
         with open(full) as f:

@@ -980,8 +980,8 @@ def test_excise_burst_split_invariant(spark):
     its own generation rewrite + bloom rebuild) must produce the exact
     ledger of the single batched trigger — the slices are disjoint and
     excisions precede adds within each trigger. This is the semantic
-    floor under tools/excise_probe.py's burst rung: the K runs it
-    times are interchangeable in RESULT, differing only in cost."""
+    floor for timing K=1 against K>1: the K runs are interchangeable
+    in RESULT, differing only in cost."""
     import numpy as np
 
     from big_data_science_project_spark.functions.bloom import bloom_build

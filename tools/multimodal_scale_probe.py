@@ -3,9 +3,8 @@ landmark fingerprint, video frame fingerprint, composed image-ingest
 gate).
 
 These operators run on deterministic generator corpora rather than the
-sf-parametrized parquet, so tools/scale_probe.py's fixture replication
-does not reach them. This probe answers the same question at their own
-10x rung: does the banded candidate generation hide a quadratic term,
+sf-parametrized parquet, so replicating the parquet fixtures does not
+reach them. This probe asks, at their own 10x rung: does the banded candidate generation hide a quadratic term,
 and does the vote verdict stay clean (zero false pairs) when the corpus
 grows — the regime where a cosine-only matcher would drown.
 

@@ -11,11 +11,11 @@ The three committed configs (regenerate all three after registry
 changes, then point README's selfcheck sentence at the new files):
 
   python tools/selfcheck.py --sf /root/testdata/sf0.01 \
-      --out SELFCHECK_r07.json
+      --out SELFCHECK_r18.json
   python tools/selfcheck.py --sf /root/testdata/sf0.1 \
-      --out SELFCHECK_r07_sf01.json
+      --out SELFCHECK_r18_sf01.json
   python tools/selfcheck.py --sf /root/testdata/sf0.01 --master local[3] \
-      --shuffle-partitions 5 --out SELFCHECK_r07_altpartition.json
+      --shuffle-partitions 5 --out SELFCHECK_r18_altpartition.json
 """
 
 from __future__ import annotations
@@ -150,7 +150,7 @@ def main() -> None:
         ["git", "-C", repo, "rev-parse", "HEAD"], capture_output=True,
         text=True).stdout.strip()
     engine_paths = ["big_data_science_project_spark",
-                    "__spark_entry__.py", "bench.py"]
+                    "__spark_entry__.py"]
     engine_dirty = bool(subprocess.run(
         ["git", "-C", repo, "status", "--porcelain", "--"] + engine_paths,
         capture_output=True, text=True).stdout.strip())
