@@ -9,6 +9,7 @@ the driver then records a weaker rows-only check).
 from __future__ import annotations
 
 from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
