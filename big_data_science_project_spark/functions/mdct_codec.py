@@ -43,14 +43,20 @@ N_COEFF = 256  # MDCT coefficients per block (2N-sample window, hop N)
 
 _MAGIC = b"MDC1"
 
-# transform tables, built once at import: cosine kernel (2N, N) and the
-# Princen-Bradley sine window (2N,)
-_T = np.arange(2 * N_COEFF)
-_COS = np.cos(np.pi / N_COEFF
-              * (_T[:, None] + 0.5 + N_COEFF / 2)
-              * (np.arange(N_COEFF)[None, :] + 0.5))
-_WIN = np.sin(np.pi / (2 * N_COEFF) * (_T + 0.5))
-del _T
+# the Princen-Bradley sine window (2N,), built once at import
+_WIN = np.sin(np.pi / (2 * N_COEFF) * (np.arange(2 * N_COEFF) + 0.5))
+
+
+def _cos_kernel() -> np.ndarray:
+    """The (2N, N) cosine kernel, built per call: a module table would
+    be pickled by value into every worker closure that calls
+    :func:`mdct`, and at 1 MB it pushes the closure past PySpark's UDF
+    broadcast threshold, which makes each plan over it a new one (no
+    cache-manager reuse)."""
+    t = np.arange(2 * N_COEFF)
+    return np.cos(np.pi / N_COEFF
+                  * (t[:, None] + 0.5 + N_COEFF / 2)
+                  * (np.arange(N_COEFF)[None, :] + 0.5))
 
 
 def _frame(x: np.ndarray) -> np.ndarray:
@@ -79,12 +85,12 @@ def analysis_frames(x: np.ndarray) -> np.ndarray:
 
 def mdct(frames: np.ndarray) -> np.ndarray:
     """(B, 2N) windowed frames → (B, N) coefficients."""
-    return (frames * _WIN) @ _COS
+    return (frames * _WIN) @ _cos_kernel()
 
 
 def imdct_overlap_add(coeffs: np.ndarray, n: int) -> np.ndarray:
     """(B, N) coefficients → n reconstructed samples (float64)."""
-    y = (2.0 / N_COEFF) * (coeffs @ _COS.T) * _WIN
+    y = (2.0 / N_COEFF) * (coeffs @ _cos_kernel().T) * _WIN
     out = np.zeros((len(coeffs) + 1) * N_COEFF)
     for b in range(len(coeffs)):  # B is samples/256 — driver-trivial
         out[b * N_COEFF:(b + 2) * N_COEFF] += y[b]

@@ -558,34 +558,37 @@ QUERIES["dedup_simhash"] = (dedup_simhash, _simhash_sql())
 # iterative min-label propagation: each node adopts the smallest label
 # among itself and its neighbours until a fixpoint — O(diameter)
 # distributed join+agg rounds, and dup clusters are near-cliques so the
-# fixpoint lands in 1-2 rounds. Each round localCheckpoints the label
-# table: the driver loop would otherwise stack a lineage of joins that
-# Catalyst re-analyzes every round (on a cluster, swap for
-# ``checkpoint()`` on reliable storage). The oracle replays the same
-# closure as a recursive CTE.
+# fixpoint lands in 1-2 rounds. Every node carries a self-loop, so one
+# join of the labels per round yields both its neighbourhood minimum
+# and its old label: the plan grows linearly in the rounds. Each round
+# persists its labels for the driver's change count and releases the
+# round before; the plans are the same on every call, so a repeat call
+# reuses the cache entries. The oracle replays the same closure as a
+# recursive CTE.
 # ---------------------------------------------------------------------------
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup_minhash_verified(spark, sf_dir).select("doc_id1", "doc_id2")
     edges = (
         pairs.select(F.col("doc_id1").alias("src"), F.col("doc_id2").alias("dst"))
         .union(pairs.select(F.col("doc_id2").alias("src"),
-                            F.col("doc_id1").alias("dst")))
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)  # edge list ~ corpus-sized
-    )
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .select("node", F.col("node").alias("lbl"))
-              .localCheckpoint(eager=True))
+                            F.col("doc_id1").alias("dst"))))
+    nodes = edges.select(F.col("src").alias("node")).distinct()
+    edges = (edges.union(nodes.select(F.col("node").alias("src"),
+                                      F.col("node").alias("dst")))
+             .persist(StorageLevel.MEMORY_AND_DISK_DESER))  # ~ corpus-sized
+    labels = nodes.select("node", F.col("node").alias("lbl"))
+    prev = None
     for _ in range(20):  # >> any real dup-cluster diameter; loop exits on fixpoint
-        nbr_min = (edges.join(labels, edges.dst == labels.node)
-                   .groupBy("src").agg(F.min("lbl").alias("nbr_lbl")))
-        merged = (labels.join(nbr_min, labels.node == nbr_min.src, "left")
-                  .select(labels.node.alias("node"),
-                          F.least(labels.lbl,
-                                  F.coalesce(nbr_min.nbr_lbl, labels.lbl))
-                          .alias("lbl"),
-                          labels.lbl.alias("old_lbl"))
-                  .localCheckpoint(eager=True))
+        merged = (edges.join(labels, F.col("dst") == F.col("node"))
+                  .groupBy(F.col("src").alias("node"))
+                  .agg(F.min("lbl").alias("lbl"),
+                       F.max(F.when(F.col("src") == F.col("dst"),
+                                    F.col("lbl"))).alias("old_lbl"))
+                  .persist(StorageLevel.MEMORY_AND_DISK_DESER))
         changed = merged.filter(F.col("lbl") < F.col("old_lbl")).count()
+        if prev is not None:
+            prev.unpersist()
+        prev = merged
         labels = merged.select("node", "lbl")
         if changed == 0:
             break

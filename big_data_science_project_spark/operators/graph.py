@@ -28,7 +28,7 @@ the fixture.
 from __future__ import annotations
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.tables import load_table
@@ -143,9 +143,10 @@ def _cc_sym(edges: DataFrame) -> DataFrame:
 
     The persist is intentionally session-lifetime: the returned plan is
     lazy, so unpersisting inside the query function would evict the
-    blocks before the caller materializes the result. plan_cached reuse
-    means the same blocks back every rerun of either graph query, and
-    MEMORY_AND_DISK keeps eviction safe under memory pressure."""
+    blocks before the caller materializes the result. The plan is the
+    same on every call, so the cache manager backs every rerun of
+    either graph query with the same blocks, and MEMORY_AND_DISK keeps
+    eviction safe under memory pressure."""
     return (edges.union(edges.select(F.col("v").alias("u"),
                                      F.col("u").alias("v")))
             .persist(StorageLevel.MEMORY_AND_DISK_DESER))
@@ -369,28 +370,42 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     nodes = docs.select("doc_id")
     fwd = _synthetic_fwd_edges(nodes)
+    alive = nodes.select(F.col("doc_id").alias("v"))
+    # the surviving symmetric edge set: an edge lives while both ends do,
+    # so each round reads the previous round's edges once (plan linear in
+    # KCORE_ROUNDS) and a vertex's degree is its edge count per endpoint
     edges = (fwd.unionByName(fwd.select(F.col("dst").alias("src"),
                                         F.col("src").alias("dst")))
              .filter(F.col("src") != F.col("dst"))
              .distinct()
-             .persist(StorageLevel.MEMORY_AND_DISK_DESER))
-    alive = nodes.select(F.col("doc_id").alias("v"))
-    last_removed = None
-    for _ in range(KCORE_ROUNDS):
-        deg = (edges.join(alive.withColumnRenamed("v", "src"), "src")
-               .join(alive.withColumnRenamed("v", "dst"), "dst")
-               .groupBy("src").agg(F.count(F.lit(1)).alias("deg")))
-        keep = (deg.filter(F.col("deg") >= KCORE_K)
-                .select(F.col("src").alias("v")))
-        removed = (alive.join(keep, "v", "left_anti")
-                   .agg(F.count(F.lit(1)).alias("nr")))
-        alive = keep
-        last_removed = removed
-    return (alive.agg(F.count(F.lit(1)).cast("bigint").alias("core_size"),
-                      F.min("v").alias("min_v"), F.max("v").alias("max_v"),
-                      F.sum("v").cast("bigint").alias("v_checksum"))
-            .crossJoin(F.broadcast(last_removed.select(
-                F.col("nr").cast("bigint").alias("last_round_removed")))))
+             .join(alive.withColumnRenamed("v", "src"), "src", "left_semi")
+             .join(alive.withColumnRenamed("v", "dst"), "dst", "left_semi"))
+
+    def with_degrees(e: DataFrame) -> DataFrame:
+        return (e.withColumn("ds", F.count(F.lit(1)).over(
+                    Window.partitionBy("src")))
+                 .withColumn("dd", F.count(F.lit(1)).over(
+                    Window.partitionBy("dst"))))
+
+    for _ in range(KCORE_ROUNDS - 2):
+        edges = (with_degrees(edges)
+                 .filter((F.col("ds") >= KCORE_K) & (F.col("dd") >= KCORE_K))
+                 .select("src", "dst"))
+    # the last two rounds from one edge set: a vertex survives round
+    # R-1 on its degree, round R on its edges to other survivors
+    per_v = (with_degrees(edges)
+             .groupBy(F.col("src").alias("v"))
+             .agg((F.max("ds") >= KCORE_K).alias("prev"),
+                  (F.count(F.when(F.col("dd") >= KCORE_K, 1)) >= KCORE_K)
+                  .alias("last")))
+    core = F.col("prev") & F.col("last")
+    return per_v.agg(
+        F.count(F.when(core, 1)).cast("bigint").alias("core_size"),
+        F.min(F.when(core, F.col("v"))).alias("min_v"),
+        F.max(F.when(core, F.col("v"))).alias("max_v"),
+        F.sum(F.when(core, F.col("v"))).cast("bigint").alias("v_checksum"),
+        (F.count(F.when(F.col("prev"), 1)) - F.count(F.when(core, 1)))
+        .cast("bigint").alias("last_round_removed"))
 
 
 def _kcore_sql() -> str:
@@ -412,7 +427,7 @@ edges AS (
 a0 AS (SELECT doc_id AS v FROM nodes)"""]
     for r in range(KCORE_ROUNDS):
         cte.append(f""",
-a{r + 1} AS (
+a{r + 1} AS MATERIALIZED (
   SELECT e.src AS v
   FROM edges e
   JOIN a{r} s ON s.v = e.src

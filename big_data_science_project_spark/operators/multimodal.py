@@ -38,6 +38,7 @@ from ..functions.mdct_codec import (mdct_decode, mdct_decode_psycho,
 from ..functions.jpeg_codec import jpeg_decode, jpeg_encode
 from ..functions.png_codec import png_decode, png_encode
 from ..sources.cells import load_cells
+from ..sources.tables import literal_table
 
 QUERIES: dict = {}
 
@@ -804,11 +805,11 @@ _SURF_KP_SCHEMA = T.StructType([
 
 
 def _surf_keypoints(images: DataFrame) -> DataFrame:
-    """(image_id, width, height, data_ch) -> persisted keypoint table
+    """(image_id, width, height, data_ch) -> keypoint table
     (image_id, kp_r, kp_c, bands[4], desc[64]) — the expensive Python
     stage (decode + detect + describe), run once per image inside one
-    Arrow batch and PERSISTED because every caller fans it into
-    several join branches (cells.py:171 idiom)."""
+    Arrow batch, and checkpointed because every caller fans it into
+    several join branches (``cell_outlier_filter`` idiom)."""
     from ..functions import surf as S
     from ..functions.image_kernels import _to_uint8
 
@@ -834,7 +835,7 @@ def _surf_keypoints(images: DataFrame) -> DataFrame:
                                               for f in _SURF_KP_SCHEMA.fields])
 
     return images.mapInPandas(extract, _SURF_KP_SCHEMA) \
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        .localCheckpoint(eager=False)
 
 
 def _surf_votes(kp_left: DataFrame, kp_right: DataFrame,
@@ -1040,9 +1041,10 @@ def multimodal_ingest_dedup(spark: SparkSession, sf_dir: str = "",
             ((i / h).cast("long") >= 2) & ((i / h).cast("long") < 12)
             & ((i % h) >= 2) & ((i % h) < 12), F.lit(200.0)).otherwise(x))
     # batch and index each feed several subtrees (signature joins, the
-    # keypoint stage, the verdict base) — persist so the generator and
-    # the encode/hash Python stages run once per side (cells.py:171 idiom)
-    index = index.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    # keypoint stage, the verdict base) — checkpoint so the generator and
+    # the encode/hash Python stages run once per side
+    # (``cell_outlier_filter`` idiom)
+    index = index.localCheckpoint(eager=False)
     batch = (fresh
              .unionByName(plant([2], lambda c: c))                  # exact
              .unionByName(plant([5], lambda c: F.transform(
@@ -1051,7 +1053,7 @@ def multimodal_ingest_dedup(spark: SparkSession, sf_dir: str = "",
     if only_ids is not None:
         batch = batch.join(F.broadcast(only_ids.select("image_id")),
                            "image_id", "left_semi")
-    batch = batch.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    batch = batch.localCheckpoint(eager=False)
 
     def sig(df, id_alias):
         enc = df.select("image_id", "width", "height",
@@ -1060,7 +1062,7 @@ def multimodal_ingest_dedup(spark: SparkSession, sf_dir: str = "",
             F.col("image_id").alias(id_alias),
             F.md5("payload").alias("digest"),
             _ahash64("payload", F.lit(1), "width", "height")
-            .alias("phash")).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+            .alias("phash")).localCheckpoint(eager=False)
 
     idx_sig = sig(index, "index_id")
     bat_sig = sig(batch, "image_id")
@@ -1279,7 +1281,7 @@ def multimodal_audio_fingerprint_dedup(spark: SparkSession,
                                        sf_dir: str = "") -> DataFrame:
     ids = list(range(AUDIO_FP_CLIPS)) + [AUDIO_FP_CLONE_OFFSET + i
                                          for i in range(3)]
-    clips = spark.createDataFrame([(i,) for i in ids], "clip_id long") \
+    clips = literal_table(spark, [(i,) for i in ids], "clip_id long") \
         .repartition(8, "clip_id")
     lm = clips.mapInPandas(_audio_lm_extract(_fp_corpus_pcm),
                            _AUDIO_LM_SCHEMA) \
@@ -1407,7 +1409,7 @@ def multimodal_video_fingerprint_dedup(spark: SparkSession,
                                        sf_dir: str = "") -> DataFrame:
     ids = list(range(VIDEO_FP_CLIPS)) + [VIDEO_FP_CLONE_OFFSET + i
                                          for i in range(2)]
-    clips = spark.createDataFrame([(i,) for i in ids], "clip_id long") \
+    clips = literal_table(spark, [(i,) for i in ids], "clip_id long") \
         .repartition(8, "clip_id")
     fh = clips.mapInPandas(_video_fh_extract(_video_fp_corpus),
                            _VIDEO_FH_SCHEMA) \
@@ -1610,12 +1612,15 @@ def _fp_gate(spark: SparkSession, root: str, batch_ids: list,
     → one verdict row per batch clip, cheapest tier wins. ``clips``
     (one ``clip_id`` column) overrides ``batch_ids`` — the streaming
     unified gate feeds each micro-batch's media subset straight from
-    the stream, no driver-side collect."""
+    the stream, no driver-side collect. The returned DataFrame carries
+    the batch fingerprint cache as ``_cached_rows`` for that caller to
+    unpersist: a micro-batch's plan is new per trigger, so its cache
+    entry is never reused (``near_tier_vs_artifacts`` idiom)."""
     from .dedup import bucketed_artifact_table
 
     if clips is None:
-        clips = spark.createDataFrame([(i,) for i in batch_ids],
-                                      "clip_id long")
+        clips = literal_table(spark, [(i,) for i in batch_ids],
+                              "clip_id long")
     clips = clips.select("clip_id").repartition(4, "clip_id")
     bat_dg = clips.mapInPandas(_fp_digest_extract(gen), _FP_DG_SCHEMA)
     idx_dg = (spark.read.parquet(f"{root}/digests")
@@ -1635,15 +1640,17 @@ def _fp_gate(spark: SparkSession, root: str, batch_ids: list,
                                            -F.col("clip_a")))
                .alias("fp_src")))
 
-    return (clips.join(exact, "clip_id", "left")
-            .join(fp, "clip_id", "left")
-            .select("clip_id",
-                    F.when(F.col("exact_src").isNotNull(), F.lit("exact"))
-                     .when(F.col("fp_src").isNotNull(),
-                           F.lit("fingerprint"))
-                     .otherwise(F.lit("admitted")).alias("tier"),
-                    F.coalesce("exact_src", "fp_src").alias("evidence_id"))
-            .orderBy("clip_id"))
+    out = (clips.join(exact, "clip_id", "left")
+           .join(fp, "clip_id", "left")
+           .select("clip_id",
+                   F.when(F.col("exact_src").isNotNull(), F.lit("exact"))
+                    .when(F.col("fp_src").isNotNull(),
+                          F.lit("fingerprint"))
+                    .otherwise(F.lit("admitted")).alias("tier"),
+                   F.coalesce("exact_src", "fp_src").alias("evidence_id"))
+           .orderBy("clip_id"))
+    out._cached_rows = bat_rows
+    return out
 
 
 def multimodal_audio_ingest_gate(spark: SparkSession, sf_dir: str = "",

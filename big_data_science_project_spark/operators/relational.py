@@ -2387,7 +2387,7 @@ def q68_bag_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # unlike external UDFs (the right default for scalar logic; Python
 # enters only when expressions can't say it). The oracle inlines the
 # same bodies, proving the catalog indirection changes nothing.
-# Registration is a construction-time catalog effect → impure_names.
+# Registration is a construction-time catalog effect.
 # ---------------------------------------------------------------------------
 @q("q69_sql_udf", f"""
 SELECT l_returnflag,
@@ -2466,7 +2466,7 @@ def q70_named_params(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-aggregate makes the result independent of the salt entirely (the
 # oracle is the plain GROUP BY). The stats collect() is bounded by key
 # cardinality — the same broadcast-sized-artifact rule as the IVF
-# centroids. Construction-time job → impure_names.
+# centroids. It runs at construction time.
 # ---------------------------------------------------------------------------
 SALT_TARGET_ROWS = 500
 SALT_CAP = 16
@@ -2505,7 +2505,7 @@ def q71_skew_autosalt(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The variable is resolved to a literal at parse time of the consuming
 # query, so the filter pushes to the scan exactly like a constant. The
 # oracle inlines the defining subquery. DECLARE/SET execute at
-# construction → impure_names.
+# construction.
 # ---------------------------------------------------------------------------
 @q("q72_session_variable", f"""
 SELECT COUNT(*) AS n_above,

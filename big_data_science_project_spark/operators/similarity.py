@@ -38,7 +38,7 @@ from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.tables import load_table
+from ..sources.tables import literal_table, load_table
 
 QUERIES: dict = {}
 
@@ -921,7 +921,7 @@ QUERIES["ann_hybrid_rrf"] = (ann_hybrid_rrf, _hybrid_rrf_sql())
 # branch is the ladder's own plan; recall is |approx ∩ exact| / k via
 # semi-join-shaped inner joins on the bounded top-k tables (k-row
 # inputs — driver-scale). Deterministic end to end because every branch
-# is. Construction collects the IVF centroid table → impure_names.
+# is. Construction collects the IVF centroid table.
 # ---------------------------------------------------------------------------
 def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = (ann_bruteforce_topk(spark, sf_dir)
@@ -1336,8 +1336,8 @@ def dedup_recall_sweep_embedding(spark: SparkSession,
     base = (e.filter(F.expr(_EMB_BASE_PRED))
             .select("vec_id", "embedding")
             .withColumn("nrm", _norm_udf("embedding")))
-    params = spark.createDataFrame(_EMB_MUTS,
-                                   "m bigint, eps double, mutation string")
+    params = literal_table(spark, _EMB_MUTS,
+                           "m bigint, eps double, mutation string")
     # per-element: exact float32->double cast + eps*(|x|/8)*u; u's
     # integer hash fits int64 (max (10M + 5*OFF)*1315423911 ~ 7.9e16).
     # CAST(500001 AS DOUBLE), not the bare literal: Spark would type

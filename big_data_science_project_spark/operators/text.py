@@ -526,8 +526,7 @@ LIMIT 20
 # n-gram width chooses how many token columns exist. This is the one
 # §2.9 surface element a fixed returnType can't express; eval() then
 # yields one row per n-gram position with each token in its own column.
-# Same registration caveat as text_udtf_chunk: plan-time side effects,
-# so the registry leaves it un-plan-cached (impure_names).
+# Same registration caveat as text_udtf_chunk: plan-time side effects.
 # ---------------------------------------------------------------------------
 UDTF_NGRAM_N = 3
 UDTF_NGRAM_DOCS = 20

@@ -26,12 +26,9 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from .tables import plan_cached
 
 QUERIES: dict = {}
 
@@ -130,7 +127,6 @@ def select_channels(df: DataFrame, channels: list[int]) -> DataFrame:
 # tidy per-(image, channel) feature extraction — the reference's
 # calculate_features (feature extraction.py:86-98) as one declarative plan
 # ---------------------------------------------------------------------------
-@plan_cached
 def cell_features(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     from ..functions import image_kernels as K
 
@@ -157,12 +153,16 @@ def cell_features(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     )
 
 
-@plan_cached
 def cell_outlier_filter(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     """End-to-end reference flagship on image data: features → fit stats →
     vote filter (feature extraction.py:108-118 + outlier_detection.py).
-    plan_cached also means the persist() below registers ONE plan, not a
-    new in-memory relation per invocation."""
+    The tidy table feeds both the fit and the scoring, so it is kept
+    once with a lazy local checkpoint rather than a persist: the cells
+    relation is new on every call, so a persisted plan never matches an
+    earlier call's cache entry, and the cache manager would hold one
+    entry per call for the session's life. A local checkpoint lives as
+    long as the returned DataFrame; Spark's context cleaner drops it
+    once that is garbage."""
     from ..operators.outlier import OutlierModel
 
     feats = cell_features(spark, sf_dir)
@@ -171,9 +171,7 @@ def cell_outlier_filter(spark: SparkSession, sf_dir: str = "") -> DataFrame:
         F.expr("stack(3, 'area', CAST(area AS DOUBLE), "
                "'perimeter', CAST(perimeter AS DOUBLE), "
                "'mean_intensity', mean_intensity) AS (feature, value)"),
-    ).persist(StorageLevel.MEMORY_AND_DISK_DESER)  # consumed twice (fit stats + score fact); without this
-    # the generator + feature kernels — the expensive Python stages —
-    # run once per branch. The S3 cache analogue for train-then-score.
+    ).localCheckpoint(eager=False)
     model = OutlierModel().fit(tidy)
     return model.votes(tidy).filter(F.col("votes") < 0)
 

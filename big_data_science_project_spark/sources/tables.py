@@ -58,27 +58,18 @@ def configure_reads(spark: SparkSession) -> None:
     spark._bdsp_reads_configured = True
 
 
-def plan_cached(fn):
-    """Memoize a PURE plan builder ``(spark, sf_dir) -> DataFrame`` on the
-    session instance. Expression-heavy builders (image kernels, vote
-    models) cost hundreds of Py4J round-trips to construct; the logical
-    plan they return is deterministic in (session, sf_dir), so rebuilding
-    it per invocation is pure driver latency. Only for builders with no
-    construction-time side effects (no writes, no temp views, no streams).
-    """
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(spark: SparkSession, sf_dir: str) -> DataFrame:
-        cache = getattr(spark, "_bdsp_plan_cache", None)
-        if cache is None:
-            cache = {}
-            spark._bdsp_plan_cache = cache
-        key = (fn.__module__, fn.__qualname__, sf_dir)
-        if key not in cache:
-            cache[key] = fn(spark, sf_dir)
-        return cache[key]
-    return wrapper
+def literal_table(spark: SparkSession, rows: list[tuple],
+                  schema: str) -> DataFrame:
+    """``rows`` (typed by ``schema``, e.g. ``"m bigint, eps double"``) as
+    a plan literal. ``createDataFrame`` over a Python list plans a scan
+    of an RDD made for that call, so a persist above it never matches
+    the cache entry an earlier call registered; a literal plan is the
+    same on every call and the cache manager reuses one entry."""
+    fields = [f.strip().split(None, 1) for f in schema.split(",")]
+    return spark.range(1).select(F.inline(F.array(*[
+        F.struct(*[F.lit(v).cast(t).alias(n)
+                   for v, (n, t) in zip(row, fields)])
+        for row in rows])))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

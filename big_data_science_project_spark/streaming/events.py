@@ -1149,9 +1149,10 @@ def stream_unified_ingest_gate(spark: SparkSession, sf_dir: str,
             clips = (batch.filter(F.col("modality") == modality)
                      .select(F.col("item_id").alias("clip_id")))
             if not clips.isEmpty():
-                parts.append(_media_to_unified(
-                    gate(spark, sf_dir, clips=clips), modality,
-                    "clip_id"))
+                verdicts = gate(spark, sf_dir, clips=clips)
+                caches.append(verdicts._cached_rows)
+                parts.append(_media_to_unified(verdicts, modality,
+                                               "clip_id"))
         try:
             if parts:
                 report = parts[0]

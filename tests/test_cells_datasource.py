@@ -440,16 +440,27 @@ def test_registry_cells_relations_feed_one_scan(spark, sf_dir, monkeypatch):
     of one loaded cells DataFrame reads the id range pushed into any of
     them, so a DataFrame feeding two branches where one filters on
     ``image_id`` silently loses the other branch's images. No registry
-    query over the cells source may scan one relation twice."""
+    query over the cells source may scan one relation twice. A local
+    checkpoint hides the plan below it, so here checkpoints are built
+    as (unexecuted) persists, whose plans the walk can see."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
     from big_data_science_project_spark.operators import (multimodal,
                                                           segmentation)
     from big_data_science_project_spark.sources import cells as cells_src
 
-    monkeypatch.setattr(spark, "_bdsp_plan_cache", {}, raising=False)
+    kept = []
+    monkeypatch.setattr(DataFrame, "localCheckpoint",
+                        lambda self, eager=True, storageLevel=None:
+                        kept.append(self.persist()) or self)
     shared = {}
-    for mod in (cells_src, segmentation, multimodal):
-        for name, (fn, _) in mod.QUERIES.items():
-            tables = _cells_scan_tables(spark, fn(spark, sf_dir))
-            if len(tables) != len(set(tables)):
-                shared[name] = tables
+    try:
+        for mod in (cells_src, segmentation, multimodal):
+            for name, (fn, _) in mod.QUERIES.items():
+                tables = _cells_scan_tables(spark, fn(spark, sf_dir))
+                if len(tables) != len(set(tables)):
+                    shared[name] = tables
+    finally:
+        for df in kept:
+            df.unpersist()
     assert not shared, shared

@@ -8,7 +8,7 @@ import numpy as np
 import pytest
 
 from big_data_science_project_spark.functions.mdct_codec import (
-    N_COEFF, _COS, _WIN, _frame, imdct_overlap_add, mdct, mdct_decode,
+    N_COEFF, _WIN, _frame, imdct_overlap_add, mdct, mdct_decode,
     mdct_encode, mdct_sample_rate)
 
 

@@ -35,10 +35,7 @@ def test_q02_pushdown_and_pruning(spark):
 
 
 def test_q03_topk_no_full_sort(spark):
-    # _fresh: the broadcast-count and no-sort-merge assertions must read
-    # the un-executed plan — after test_oracle_parity collects the cached
-    # q03 DataFrame, the finalized adaptive plan formats differently
-    df = _fresh(spark, "q03_revenue_topn")
+    df = QUERIES["q03_revenue_topn"](spark, SF)
     plan = formatted_plan(df)
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
@@ -138,11 +135,9 @@ def test_resample_single_corpus_shuffle(spark):
     """ts_resample_ffill shuffles the corpus exactly once (the hourly
     aggregate's partial→final exchange); bounds/spine/window all run on
     compacted data. More corpus-sized exchanges = scale regression."""
-    plan = formatted_plan(_fresh(spark, "ts_resample_ffill"))
+    plan = formatted_plan(QUERIES["ts_resample_ffill"](spark, SF))
     # exchanges: hourly agg, bounds min/max partials, window sort — the
-    # raw-events-sized one appears once (hash by user_id+hour). _fresh:
-    # an already-collected cached plan formats AQE-finalized with extra
-    # exchange nodes, so the count must run on an un-executed build.
+    # raw-events-sized one appears once (hash by user_id+hour).
     assert node_count(plan, "Exchange") <= 3, plan
     assert "CartesianProduct" not in plan
 
@@ -181,17 +176,6 @@ def test_zorder_files_prune_both_dimensions(spark):
         assert touched <= n_files / 2, (key, touched, n_files)
 
 
-def _fresh(spark, name):
-    """Build the query OUTSIDE the session plan cache: plan tests must
-    inspect the un-executed logical plan, and a cached DataFrame that an
-    earlier test already collected formats as the FINALIZED adaptive plan
-    (extra AQEShuffleRead / coalesced exchanges)."""
-    cache = getattr(spark, "_bdsp_plan_cache", None)
-    if cache is not None:
-        cache.clear()
-    return QUERIES[name](spark, SF)
-
-
 def _nodes(plan: str, name: str) -> int:
     """Count physical-plan NODES (formatted output repeats each node in
     the detail section, so a plain substring count double-counts)."""
@@ -201,7 +185,7 @@ def _nodes(plan: str, name: str) -> int:
 def test_q43_unpivot_is_zero_shuffle_expand(spark):
     """unpivot must plan as a map-side Expand; the only exchange is the
     4-group aggregate that builds the wide input."""
-    plan = formatted_plan(_fresh(spark, "q43_unpivot"))
+    plan = formatted_plan(QUERIES["q43_unpivot"](spark, SF))
     assert "Expand" in plan
     assert _nodes(plan, "Exchange") <= 1, plan  # the wide-agg shuffle only
 
@@ -209,7 +193,7 @@ def test_q43_unpivot_is_zero_shuffle_expand(spark):
 def test_q44_array_hof_is_map_only(spark):
     """higher-order array functions: no shuffle, no Python — pure
     codegen'd per-row work."""
-    plan = formatted_plan(_fresh(spark, "q44_array_hof"))
+    plan = formatted_plan(QUERIES["q44_array_hof"](spark, SF))
     assert "Exchange" not in plan, plan
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
@@ -218,7 +202,7 @@ def test_q44_array_hof_is_map_only(spark):
 def test_q48_single_window_node(spark):
     """four window functions share one spec → exactly one Window node,
     one sort, one exchange."""
-    plan = formatted_plan(_fresh(spark, "q48_window_extras"))
+    plan = formatted_plan(QUERIES["q48_window_extras"](spark, SF))
     assert _nodes(plan, "Window") == 1, plan
     assert _nodes(plan, "Exchange") == 1, plan
 
@@ -226,7 +210,7 @@ def test_q48_single_window_node(spark):
 def test_q49_lateral_decorrelates_no_cartesian(spark):
     """LATERAL + LIMIT must decorrelate to a ranked window join — never
     a per-row re-execution or cartesian product."""
-    plan = formatted_plan(_fresh(spark, "q49_lateral_topn"))
+    plan = formatted_plan(QUERIES["q49_lateral_topn"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert "Window" in plan
@@ -235,7 +219,7 @@ def test_q49_lateral_decorrelates_no_cartesian(spark):
 def test_q51_scd2_single_exchange(spark):
     """SCD2: version + effective range + current flag share one window
     spec — one shuffle on the business key, one sort."""
-    plan = formatted_plan(_fresh(spark, "q51_scd2"))
+    plan = formatted_plan(QUERIES["q51_scd2"](spark, SF))
     assert _nodes(plan, "Window") == 1, plan
     assert _nodes(plan, "Exchange") == 1, plan
 
@@ -243,7 +227,7 @@ def test_q51_scd2_single_exchange(spark):
 def test_q47_variant_stays_jvm_side(spark):
     """VARIANT parse + typed extraction is JVM-native — no Python in
     the plan."""
-    plan = formatted_plan(_fresh(spark, "q47_variant_json"))
+    plan = formatted_plan(QUERIES["q47_variant_json"](spark, SF))
     assert "BatchEvalPython" not in plan
     assert "ArrowEvalPython" not in plan
 
@@ -252,7 +236,7 @@ def test_bm25_broadcasts_and_takeordered(spark):
     """BM25: df + corpus stats broadcast onto the tf rows; final top-k is
     TakeOrderedAndProject (no global sort); term filter reaches the scan
     side before any exchange."""
-    plan = formatted_plan(_fresh(spark, "text_bm25_search"))
+    plan = formatted_plan(QUERIES["text_bm25_search"](spark, SF))
     assert "TakeOrderedAndProject" in plan
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastHashJoin") >= 1
@@ -261,14 +245,14 @@ def test_bm25_broadcasts_and_takeordered(spark):
 def test_funnel_stages_broadcast(spark):
     """q58: the per-stage user tables are small vs events — every join
     must broadcast; no sort-merge on the event scan."""
-    plan = formatted_plan(_fresh(spark, "q58_funnel"))
+    plan = formatted_plan(QUERIES["q58_funnel"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan, plan
 
 
 def test_countmin_probe_broadcasts_sketch(spark):
     """q59: the 256-cell sketch must broadcast to the probe side."""
-    plan = formatted_plan(_fresh(spark, "q59_countmin_sketch"))
+    plan = formatted_plan(QUERIES["q59_countmin_sketch"](spark, SF))
     assert plan.count("BroadcastHashJoin") >= 1
     assert "CartesianProduct" not in plan
 
@@ -276,7 +260,7 @@ def test_countmin_probe_broadcasts_sketch(spark):
 def test_hypertable_rollup_two_branch_merge(spark):
     """ts_hypertable_rollup: both branches aggregate BEFORE the union —
     the merge re-aggregate runs on rollup-sized rows, never raw events."""
-    plan = formatted_plan(_fresh(spark, "ts_hypertable_rollup"))
+    plan = formatted_plan(QUERIES["ts_hypertable_rollup"](spark, SF))
     assert "Union" in plan
     assert "CartesianProduct" not in plan
     # exchanges: one per branch partial→final + one merge = ≤3 hash
@@ -286,7 +270,7 @@ def test_hypertable_rollup_two_branch_merge(spark):
 def test_pagerank_no_cartesian_no_python(spark):
     """graph_pagerank: K iterations of joins; the 1-row total is the only
     nested-loop broadcast; zero Python anywhere."""
-    plan = formatted_plan(_fresh(spark, "graph_pagerank"))
+    plan = formatted_plan(QUERIES["graph_pagerank"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
 
@@ -294,7 +278,7 @@ def test_pagerank_no_cartesian_no_python(spark):
 def test_graph_components_no_cartesian_no_python(spark):
     """graph_components: CC_ITERS join/agg rounds; no cartesian, no
     Python — pure JVM-side label propagation."""
-    plan = formatted_plan(_fresh(spark, "graph_components"))
+    plan = formatted_plan(QUERIES["graph_components"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
 
@@ -303,7 +287,7 @@ def test_graph_triangles_degree_tables_broadcast(spark):
     """graph_triangles: the per-vertex degree tables join in as
     broadcasts (|nodes| ≪ |edges|); the only nested-loop allowed is none —
     wedge join and closing-edge probe are equi-joins."""
-    df = _fresh(spark, "graph_triangles")
+    df = QUERIES["graph_triangles"](spark, SF)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert broadcast_join_count(df) >= 2
@@ -313,7 +297,7 @@ def test_multiprobe_range_is_single_scan(spark):
     """ann_multiprobe_range: the 1-row probe joins as a broadcast
     nested loop (non-equi Hamming predicate) and the corpus never
     crosses a hash exchange — zero shuffles, one scan."""
-    plan = formatted_plan(_fresh(spark, "ann_multiprobe_range"))
+    plan = formatted_plan(QUERIES["ann_multiprobe_range"](spark, SF))
     assert node_count(plan, "BroadcastNestedLoopJoin") >= 1
     assert "CartesianProduct" not in plan
     assert node_count(plan, "Exchange") == 0, plan
@@ -324,7 +308,7 @@ def test_gapfill_single_corpus_shuffle(spark):
     (same assertion as test_resample_single_corpus_shuffle): the raw
     corpus crosses one hash exchange (hourly agg); bounds partials and
     the window sort run on compacted hourly rows."""
-    plan = formatted_plan(_fresh(spark, "ts_gapfill_interpolate"))
+    plan = formatted_plan(QUERIES["ts_gapfill_interpolate"](spark, SF))
     assert node_count(plan, "Exchange") <= 3, plan
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
@@ -335,7 +319,7 @@ def test_kmeans_assignment_is_map_only(spark):
     literals — the scored corpus reaches its groupBy through a map-only
     pass (one exchange for the K-group aggregate; no join, no cartesian,
     no Python)."""
-    plan = formatted_plan(_fresh(spark, "ml_kmeans_lloyd"))
+    plan = formatted_plan(QUERIES["ml_kmeans_lloyd"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan
     assert "Join" not in plan
@@ -344,7 +328,7 @@ def test_kmeans_assignment_is_map_only(spark):
 def test_q64_asof_nearest_single_user_exchange(spark):
     """q64: the union-sort merge shuffles on the user key; both window
     passes ride the same partitioning — no range join, no cartesian."""
-    plan = formatted_plan(_fresh(spark, "q64_asof_nearest"))
+    plan = formatted_plan(QUERIES["q64_asof_nearest"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     assert node_count(plan, "Exchange") <= 2, plan
@@ -353,7 +337,7 @@ def test_q64_asof_nearest_single_user_exchange(spark):
 def test_q65_dynamic_session_no_cartesian(spark):
     """q65: session_window with an expression gap plans as one stateless
     session aggregation — no join of any kind."""
-    plan = formatted_plan(_fresh(spark, "q65_dynamic_session"))
+    plan = formatted_plan(QUERIES["q65_dynamic_session"](spark, SF))
     assert "CartesianProduct" not in plan
     assert "Join" not in plan
     assert "BatchEvalPython" not in plan
@@ -362,7 +346,7 @@ def test_q65_dynamic_session_no_cartesian(spark):
 def test_mad_medians_broadcast_back(spark):
     """ts_robust_mad: the per-type median/MAD stats join back as
     broadcasts (5-row dims) — the corpus never shuffles for the join."""
-    df = _fresh(spark, "ts_robust_mad")
+    df = QUERIES["ts_robust_mad"](spark, SF)
     plan = formatted_plan(df)
     assert "CartesianProduct" not in plan
     assert broadcast_join_count(df) >= 2
@@ -371,7 +355,7 @@ def test_mad_medians_broadcast_back(spark):
 def test_ewma_lag_pyramid_single_window(spark):
     """all 2*L lag expressions share one window spec → exactly one
     Window node; no Python anywhere in the smoothing path."""
-    plan = formatted_plan(_fresh(spark, "ts_ewma"))
+    plan = formatted_plan(QUERIES["ts_ewma"](spark, SF))
     assert _nodes(plan, "Window") == 1, plan
     assert "BatchEvalPython" not in plan
 
@@ -379,7 +363,7 @@ def test_ewma_lag_pyramid_single_window(spark):
 def test_weighted_sample_topk_no_full_sort(spark):
     """the global top-K by sample key must plan as TakeOrdered, never a
     full sort of the drawn keys; the weight explode stays map-side."""
-    plan = formatted_plan(_fresh(spark, "curate_weighted_sample"))
+    plan = formatted_plan(QUERIES["curate_weighted_sample"](spark, SF))
     assert "TakeOrderedAndProject" in plan, plan
     assert _nodes(plan, "Sort") == 0, plan
 
@@ -388,7 +372,7 @@ def test_prefix_jaccard_df_broadcasts_no_cartesian(spark):
     """the vocabulary-sized df table broadcasts back onto the token
     stream, and the prefix self-join is an equi hash join on (token,
     source) — never a cartesian."""
-    df = _fresh(spark, "dedup_prefix_jaccard")
+    df = QUERIES["dedup_prefix_jaccard"](spark, SF)
     plan = formatted_plan(df)
     assert broadcast_join_count(df) >= 1, plan
     assert "CartesianProduct" not in plan, plan
@@ -398,7 +382,7 @@ def test_hybrid_rrf_fusion_stays_bounded(spark):
     """both ranker pools are bounded top-POOL retrievals; the only
     cross-join is the broadcast 1-row query vector — no cartesian over
     the corpus, no row-at-a-time Python."""
-    plan = formatted_plan(_fresh(spark, "ann_hybrid_rrf"))
+    plan = formatted_plan(QUERIES["ann_hybrid_rrf"](spark, SF))
     assert "CartesianProduct" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
 
@@ -407,14 +391,14 @@ def test_q68_bag_ops_no_join(spark):
     """INTERSECT ALL / EXCEPT ALL must plan as aggregate-based counting
     (Spark rewrites to a union + count aggregate), never a join per
     duplicate row."""
-    plan = formatted_plan(_fresh(spark, "q68_bag_set_ops"))
+    plan = formatted_plan(QUERIES["q68_bag_set_ops"](spark, SF))
     assert "CartesianProduct" not in plan, plan
 
 
 def test_bfs_frontier_expansion_no_cartesian(spark):
     """each BFS round joins the frontier against the persisted edge
     table — equi joins only, no cartesian, no Python ops."""
-    plan = formatted_plan(_fresh(spark, "graph_bfs_levels"))
+    plan = formatted_plan(QUERIES["graph_bfs_levels"](spark, SF))
     assert "CartesianProduct" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
 
@@ -423,7 +407,7 @@ def test_naive_bayes_model_broadcasts(spark):
     """the trained model (counts/totals/priors/vocab) must broadcast
     onto the test tokens — the corpus-sized side never shuffles for the
     scoring join."""
-    df = _fresh(spark, "text_naive_bayes_langid")
+    df = QUERIES["text_naive_bayes_langid"](spark, SF)
     plan = formatted_plan(df)
     # counts/totals hash-broadcast; priors/vocab are 1-row broadcast
     # nested-loop crosses — no join may sort-merge the token stream
@@ -435,7 +419,7 @@ def test_q70_bound_params_push_to_scan(spark):
     """named-parameter binding must be transparent to the optimizer:
     the bound date/quantity predicates reach the parquet scan as pushed
     filters, same as hand-inlined literals."""
-    df = _fresh(spark, "q70_named_params")
+    df = QUERIES["q70_named_params"](spark, SF)
     assert has_pushed_filters(df), formatted_plan(df)
 
 
@@ -443,7 +427,7 @@ def test_q71_autosalt_two_stage_aggregate(spark):
     """the salted plan must show BOTH aggregate stages: the (key, salt)
     partial and the per-key final merge — at least two shuffle
     exchanges bracketing them, and no Python ops."""
-    df = _fresh(spark, "q71_skew_autosalt")
+    df = QUERIES["q71_skew_autosalt"](spark, SF)
     plan = formatted_plan(df)
     assert _nodes(plan, "HashAggregate") >= 4, plan  # partial+final × 2
     assert "BatchEvalPython" not in plan, plan
@@ -453,7 +437,7 @@ def test_logreg_weights_broadcast_no_python(spark):
     """each IRLS step aggregates 9 integer cells; the weight vector
     re-enters as a 1-row broadcast — no Python ops, no cartesian over
     data-sized inputs (the only cross joins are 1-row broadcasts)."""
-    df = _fresh(spark, "ml_logreg_irls")
+    df = QUERIES["ml_logreg_irls"](spark, SF)
     plan = formatted_plan(df)
     assert "BatchEvalPython" not in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -464,7 +448,7 @@ def test_rolling_distinct_compacts_before_range_join(spark):
     """q73: the corpus must collapse to the distinct (type, day, user)
     grid BEFORE the 7-day range join — the join inputs are aggregates,
     and no Python appears."""
-    plan = formatted_plan(_fresh(spark, "q73_rolling_distinct"))
+    plan = formatted_plan(QUERIES["q73_rolling_distinct"](spark, SF))
     assert _nodes(plan, "HashAggregate") >= 4, plan
     assert "BatchEvalPython" not in plan, plan
 
@@ -473,7 +457,7 @@ def test_sparse_cosine_df_broadcasts_no_cartesian(spark):
     """tf-idf weights join term df via broadcast; the doc-doc dot
     product is an equi join on (term, source) — no cartesian, no
     Python."""
-    df = _fresh(spark, "text_sparse_cosine_topk")
+    df = QUERIES["text_sparse_cosine_topk"](spark, SF)
     plan = formatted_plan(df)
     assert broadcast_join_count(df) >= 1, plan
     assert "CartesianProduct" not in plan, plan
@@ -484,7 +468,7 @@ def test_sparse_cosine_df_broadcasts_no_cartesian(spark):
 def test_q74_pivot_single_aggregate_pass(spark):
     """multi-agg pivot must plan as ONE partial+final aggregate over
     ONE scan — never a job per pivot value."""
-    plan = formatted_plan(_fresh(spark, "q74_pivot_multiagg"))
+    plan = formatted_plan(QUERIES["q74_pivot_multiagg"](spark, SF))
     assert _nodes(plan, "Scan parquet") == 1, plan
     # Spark plans pivot as two chained aggregates (pre-agg + pivot
     # agg), each partial+final — but still ONE scan, no per-value jobs
@@ -494,7 +478,7 @@ def test_q74_pivot_single_aggregate_pass(spark):
 def test_stump_histogram_no_python(spark):
     """the split search is explode + broadcast-grid + one cell
     aggregate — JVM-side end to end."""
-    plan = formatted_plan(_fresh(spark, "ml_decision_stump"))
+    plan = formatted_plan(QUERIES["ml_decision_stump"](spark, SF))
     assert "BatchEvalPython" not in plan, plan
     assert "CartesianProduct" not in plan, plan
 
@@ -502,15 +486,15 @@ def test_stump_histogram_no_python(spark):
 def test_downsample_single_corpus_aggregate(spark):
     """ts_downsample_triangle touches the raw events once (the hourly
     aggregate); buckets/windows run on hours only, no Python."""
-    plan = formatted_plan(_fresh(spark, "ts_downsample_triangle"))
+    plan = formatted_plan(QUERIES["ts_downsample_triangle"](spark, SF))
     assert _nodes(plan, "Scan parquet") <= 2, plan
     assert "BatchEvalPython" not in plan, plan
 
 
 def test_kcore_peeling_no_cartesian_no_python(spark):
-    """each peel round is degree-aggregate + semi-join on the shrinking
-    vertex set — equi joins only; the edge table is persisted once."""
-    plan = formatted_plan(_fresh(spark, "graph_kcore"))
+    """each peel round filters the surviving edge set on two window
+    degree counts — no joins past the first round, no Python."""
+    plan = formatted_plan(QUERIES["graph_kcore"](spark, SF))
     assert "CartesianProduct" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
 
@@ -518,7 +502,7 @@ def test_kcore_peeling_no_cartesian_no_python(spark):
 def test_cusum_single_corpus_aggregate(spark):
     """ts_cusum_changepoint reads events once into the hourly
     aggregate; prefix/total/rank all run on hours."""
-    plan = formatted_plan(_fresh(spark, "ts_cusum_changepoint"))
+    plan = formatted_plan(QUERIES["ts_cusum_changepoint"](spark, SF))
     assert _nodes(plan, "Scan parquet") == 1, plan
     assert "BatchEvalPython" not in plan, plan
 
@@ -527,7 +511,7 @@ def test_acf_single_corpus_aggregate(spark):
     """ts_autocorrelation reads events ONCE; all three lags unpivot
     from one 1-row-per-type aggregate (a 3-branch union that recomputes
     the corpus per lag was caught by review — this pins the fix)."""
-    plan = formatted_plan(_fresh(spark, "ts_autocorrelation"))
+    plan = formatted_plan(QUERIES["ts_autocorrelation"](spark, SF))
     assert _nodes(plan, "Scan parquet") == 1, plan
     assert "BatchEvalPython" not in plan, plan
 
@@ -541,13 +525,13 @@ def test_minhash_guard_is_windowed_not_antijoined(spark):
     sort-merge on the same exchange and the reuse rule collapses them);
     the stable invariant is: Window nodes present, zero anti-joins,
     and no aggregate between the window and the pair join."""
-    plan = formatted_plan(_fresh(spark, "dedup_minhash_candidates"))
+    plan = formatted_plan(QUERIES["dedup_minhash_candidates"](spark, SF))
     assert _nodes(plan, "Window") >= 2, plan
     assert "LeftAnti" not in plan, plan
 
 
 def test_substring_guard_is_windowed_not_antijoined(spark):
-    plan = formatted_plan(_fresh(spark, "dedup_substring_exact"))
+    plan = formatted_plan(QUERIES["dedup_substring_exact"](spark, SF))
     assert _nodes(plan, "Window") >= 2, plan
     assert "LeftAnti" not in plan, plan
 
@@ -556,14 +540,14 @@ def test_ridge_weights_broadcast_back(spark):
     """The in-plan ridge must broadcast the 1-row weight table onto the
     corpus (never shuffle the fact side) and keep the whole solve
     JVM-side (no Python at all in this plan)."""
-    plan = formatted_plan(_fresh(spark, "ml_ridge_predict"))
+    plan = formatted_plan(QUERIES["ml_ridge_predict"](spark, SF))
     assert _nodes(plan, "BroadcastNestedLoopJoin") >= 1, plan
     assert "CartesianProduct" not in plan
     assert "Python" not in plan  # pure expression pipeline
 
 
 def test_pca_spectrum_is_single_aggregate_no_python(spark):
-    plan = formatted_plan(_fresh(spark, "ml_pca_spectrum"))
+    plan = formatted_plan(QUERIES["ml_pca_spectrum"](spark, SF))
     assert "Python" not in plan
     assert "CartesianProduct" not in plan
 
@@ -575,7 +559,7 @@ def test_lm_perplexity_plan_shape(spark):
     same scalar-attach shape as text_sparse_cosine's n_docs), and every
     documents scan prunes to the three columns the query needs — at
     100 TB the scan width IS the cost."""
-    plan = formatted_plan(_fresh(spark, "text_lm_perplexity"))
+    plan = formatted_plan(QUERIES["text_lm_perplexity"](spark, SF))
     assert "CartesianProduct" not in plan, plan
     # at most ONE nested-loop join, and only as a broadcast (1-row gv)
     assert _nodes(plan, "BroadcastNestedLoopJoin") <= 1, plan
@@ -597,7 +581,7 @@ def test_tokenize_hoisted_out_of_lambdas(spark):
     for name in ("text_lm_perplexity", "lm_incremental_refresh",
                  "text_bigrams", "text_bpe_merges", "text_bpe_encode",
                  "dedup_minhash_verified", "dedup_incremental"):
-        plan = (_fresh(spark, name)._jdf.queryExecution()
+        plan = (QUERIES[name](spark, SF)._jdf.queryExecution()
                 .optimizedPlan().toString())
         assert not re.search(r"split\([^)]*\)\[", plan), name
 
@@ -644,7 +628,7 @@ def test_shard_shuffle_single_scan_partial_agg(spark):
     the audit is one parquet scan into a (partial, final) hash aggregate
     on shard — no join, no Python, no second corpus pass. (The distinct
     lang count plans as the standard expand, still off one scan.)"""
-    plan = formatted_plan(_fresh(spark, "curate_shard_shuffle"))
+    plan = formatted_plan(QUERIES["curate_shard_shuffle"](spark, SF))
     assert _nodes(plan, "Scan parquet") == 1, plan
     assert "BatchEvalPython" not in plan, plan
     assert "CartesianProduct" not in plan, plan
@@ -655,7 +639,7 @@ def test_corpus_drift_totals_broadcast(spark):
     per-language counts as a broadcast nested-loop on the 1-row build
     side (the pagerank scalar-join idiom) — never a shuffled join for a
     scalar."""
-    plan = formatted_plan(_fresh(spark, "curate_corpus_drift"))
+    plan = formatted_plan(QUERIES["curate_corpus_drift"](spark, SF))
     assert "BroadcastNestedLoopJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
@@ -665,7 +649,7 @@ def test_dup_rate_single_aggregate_no_join(spark):
     """curate_dup_rate_estimate: both estimators and the exact ground
     truth ride ONE global aggregate over the planted corpus (union of
     two scans of the same table) — no self-join, no Python."""
-    plan = formatted_plan(_fresh(spark, "curate_dup_rate_estimate"))
+    plan = formatted_plan(QUERIES["curate_dup_rate_estimate"](spark, SF))
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastHashJoin" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
@@ -675,6 +659,6 @@ def test_label_propagation_no_cartesian_no_python(spark):
     """graph_label_propagation: every round is an equi-join (votes on
     the candidate node id) + anti-join against the labeled set; the
     argmax is a count + one window, never a collect or cross product."""
-    plan = formatted_plan(_fresh(spark, "graph_label_propagation"))
+    plan = formatted_plan(QUERIES["graph_label_propagation"](spark, SF))
     assert "CartesianProduct" not in plan, plan
     assert "BatchEvalPython" not in plan, plan
