@@ -355,8 +355,9 @@ QUERIES["graph_bfs_levels"] = (graph_bfs_levels, _bfs_sql())
 # k-core decomposition (k = 5) — iterative peeling: repeatedly drop
 # vertices with degree < k until the remainder is stable; the survivors
 # are the k-core, the standard density filter before community
-# detection. Each round is one degree aggregate + one semi join on the
-# shrinking vertex set; the driver only composes plans (no collect).
+# detection. Each round filters the surviving edge set on its two
+# endpoint degrees (window counts), so the plan is linear in the
+# rounds; the driver only composes plans (no collect).
 # Convergence is ASSERTED IN-QUERY: the output carries the last round's
 # removal count, which must be 0 — so a fixture change that needs more
 # rounds fails loudly instead of silently under-peeling. Same synthetic
