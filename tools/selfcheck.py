@@ -8,14 +8,17 @@ cross-engine drift is a real bug, not noise. Queries without an oracle
 are executed and counted as rows_only.
 
 The three committed configs (regenerate all three after registry
-changes, then point README's selfcheck sentence at the new files):
+changes, then point README's selfcheck sentence at the new files). The
+default master is local[$SPARK_GRAFT_CPUS], local[32] when it is unset,
+so set it to the host's cores first:
 
+  export SPARK_GRAFT_CPUS=4
   python tools/selfcheck.py --sf /root/testdata/sf0.01 \
-      --out SELFCHECK_r18.json
+      --out SELFCHECK_r19.json
   python tools/selfcheck.py --sf /root/testdata/sf0.1 \
-      --out SELFCHECK_r18_sf01.json
+      --out SELFCHECK_r19_sf01.json
   python tools/selfcheck.py --sf /root/testdata/sf0.01 --master local[3] \
-      --shuffle-partitions 5 --out SELFCHECK_r18_altpartition.json
+      --shuffle-partitions 5 --out SELFCHECK_r19_altpartition.json
 """
 
 from __future__ import annotations
