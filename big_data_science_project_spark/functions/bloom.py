@@ -14,55 +14,23 @@ builds the identical structure from primitives that ARE public:
           fixed-size int64 bitmap. The aggregation is fully
           distributed and its output is AT MOST ``num_bits/64`` rows —
           the driver ``collect()`` is bloom-sized, never corpus-sized.
-          That is the whole point versus broadcasting the key set
-          itself: the bitmap's size is chosen up front (bits/key), so a
-          billion-key index compresses to a few GB of bitmap where the
-          raw digest set would be hundreds of GB.
+          That is the whole point versus shipping the key set itself:
+          the bitmap's size is chosen up front (bits/key), 2 bytes per
+          key at the default where a raw md5 digest takes 16.
 
-  probe:  two physical paths, picked by bitmap size:
-          - JVM literal (≤ ``literal_max_words`` words): the bitmap
-            embeds in the plan as an ``array<bigint>`` literal and the
-            probe is pure codegen (``element_at`` + ``shiftleft`` +
-            bitwise AND) — zero Python in the hot path. Right for
-            blooms up to a few hundred KiB; a plan literal ships with
-            every task, so it must stay small.
-          - broadcast + Arrow (above the cutoff): the bitmap ships
-            ONCE per executor as a TorrentBroadcast — the vehicle a
-            GB-scale bloom needs on a 1000-executor cluster — and the
-            probe is a vectorized numpy bit-test over the k
-            JVM-computed positions inside an Arrow-batched pandas UDF
-            (the hash work stays JVM-side; Python only indexes the
-            bitmap, ~memory-bandwidth per batch).
+  probe:  the bitmap embeds in the plan as an ``array<bigint>`` literal
+          and the probe is pure codegen (``element_at`` + ``shiftleft``
+          + bitwise AND): zero Python in the hot path.
 
 A Bloom filter answers "definitely absent" / "maybe present"; callers
 MUST exact-verify positives (see ``streaming/events.py``'s dedup gate,
 which joins only bloom-positive rows against the real index).
 
-OPERATING BOUNDARY (r9 verdict): the bitmap is corpus-COUNT-
-proportional — ``BITS_PER_KEY × n_keys`` bits, i.e. 2 bytes/key at the
-default 16 bits/key. Concretely:
-
-    1e8 keys  →   200 MB bitmap   plan-literal is out; broadcast fine
-    1e9 keys  →     2 GB bitmap   TorrentBroadcast upper comfort zone
-    2e10 keys →    40 GB bitmap   (100 TB corpus at ~5 KB/doc) — beyond
-                                  any broadcast, beyond the driver's
-                                  build-time collect() and OR-merge
-
-``BLOOM_BROADCAST_MAX_BITS`` (2^34 = 2 GB) marks the boundary. Above
-it, use the SHARDED form below: the filter lives as a bucketed
-``(w, bits)`` DataFrame — a sparse, distributed bitmap with no driver
-copy and no broadcast — and the probe is ONE co-partitioned join that
-exchanges only the batch side (the words side reads in place from its
-bucketed layout). The construction is a split-block Bloom filter (one
-64-bit block per key, k bits within the block — the same design
-Parquet's own bloom filters and Impala use, chosen here because the
-whole probe needs exactly one (w → bits) lookup: a classic k-position
-bloom would need an explode + per-key re-aggregation, which a pure
-streaming plan cannot even express before its stateful agg). Block
-blooms pay a small fpp penalty vs free-position blooms (~0.4% vs 0.2%
-at 16 bits/key, k=4, Poisson block-load analysis); positives
-exact-verify anyway, so the penalty is a few extra verify-join rows,
-never a wrong answer.
+The bitmap is corpus-COUNT-proportional (``BITS_PER_KEY × n_keys``
+bits, 2 bytes/key at the default 16 bits/key), lives on the driver and
+ships with every task as a plan literal. The fixtures' gates hold at
+most ~2k words (5 000 docs × 16 bits × 1.5); bitmaps past a few
+thousand words (about 32 KiB) are not a supported workload.
 """
 
 from __future__ import annotations
@@ -71,43 +39,28 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# plan-literal cutoff: 4096 words = 32 KiB of bitmap in the task binary.
-LITERAL_MAX_WORDS = 4096
-
 BITS_PER_KEY = 16  # default sizing: ~0.2% fpp at k=7
 DEFAULT_K = 7
-
-# driver-held/broadcast bitmaps stop here (2 GB ≈ 1e9 keys at 16
-# bits/key); larger gates use the sharded (w, bits) DataFrame form
-BLOOM_BROADCAST_MAX_BITS = 1 << 34
-BLOCK_SEED = 1000003   # block-address hash seed, disjoint from 0..k-1
-SHARDED_K = 4          # bits per 64-bit block: ~0.4% fpp at 16 bits/key
 
 
 class BloomFilter:
     """Driver-held bitmap: ``words[i]`` bit ``j`` = bloom bit ``64*i+j``.
 
-    The executor-side broadcast of ``words`` (large-bitmap probe path)
-    is created lazily and cached ON the instance — repeated probes over
-    one filter reuse one TorrentBroadcast instead of accumulating a new
-    executor-side copy per call; ``destroy()`` releases it when the
-    gate is torn down. ``merge_from`` is the driver-side bitmap OR —
-    blooms over the same (num_bits, k) universe are mergeable by
-    construction (the bit positions of a key do not depend on what else
-    is in the filter), which is what lets a streaming ingest loop fold
-    each batch's admitted keys into a live gate without rebuilding it.
-    A merge invalidates the cached broadcast: probes built AFTER the
-    merge see the new bits; plans built before keep their snapshot
-    (exactly the semantics the ingest loop needs — each micro-batch
-    gates against the bits as of its start)."""
+    ``merge_from`` is the driver-side bitmap OR — blooms over the same
+    (num_bits, k) universe are mergeable by construction (the bit
+    positions of a key do not depend on what else is in the filter),
+    which is what lets a streaming ingest loop fold each batch's
+    admitted keys into a live gate without rebuilding it. Probes built
+    AFTER a merge see the new bits; plans built before keep the literal
+    they embedded (each micro-batch gates against the bits as of its
+    start)."""
 
-    __slots__ = ("words", "num_bits", "k", "_bc")
+    __slots__ = ("words", "num_bits", "k")
 
     def __init__(self, words: np.ndarray, num_bits: int, k: int):
         self.words = words  # int64[ceil(num_bits / 64)]
         self.num_bits = num_bits
         self.k = k
-        self._bc = None
 
     def saturated(self) -> bool:
         """True iff every one of ``num_bits`` bits is set — then probes
@@ -127,26 +80,6 @@ class BloomFilter:
                 f"bloom merge across universes: ({other.num_bits}, "
                 f"{other.k}) into ({self.num_bits}, {self.k})")
         self.words = np.bitwise_or(self.words, other.words)
-        if self._bc is not None:
-            # unpersist, NOT destroy: executor copies of the stale
-            # bitmap are dropped, but a plan built before the merge can
-            # still re-fetch its snapshot from the driver if it is
-            # mid-flight; the next probe re-broadcasts the merged words
-            self._bc.unpersist()
-            self._bc = None
-
-    def _broadcast(self):
-        if self._bc is None:
-            from pyspark import SparkContext
-            sc = SparkContext._active_spark_context
-            self._bc = sc.broadcast(self.words)
-        return self._bc
-
-    def destroy(self) -> None:
-        """Release the executor-side broadcast copy, if one was made."""
-        if self._bc is not None:
-            self._bc.destroy()
-            self._bc = None
 
 
 def _positions(col: Column, num_bits: int, k: int) -> list[Column]:
@@ -182,157 +115,25 @@ def bloom_build(df: DataFrame, col_name: str, *,
     return BloomFilter(words=words, num_bits=num_bits, k=k)
 
 
-def bloom_might_contain(bloom: BloomFilter, col: Column, *,
-                        literal_max_words: int = LITERAL_MAX_WORDS
-                        ) -> Column:
+def bloom_might_contain(bloom: BloomFilter, col: Column) -> Column:
     """Boolean probe column for ``col`` against ``bloom`` (False ⇒ key
-    definitely absent). Physical path per the module docstring."""
-    if len(bloom.words) <= literal_max_words:
-        # ONE parsed SQL literal, not F.lit(list): PySpark expands
-        # lit([...]) into one Py4J lit() round-trip PER ELEMENT plus a
-        # CreateArray — ~1.9 s of pure driver latency at the gate's
-        # 1.5k words (measured r14; the parser path is ~7 ms). Both
-        # constant-fold to the identical array<bigint> literal, so the
-        # probe expression and every value are unchanged.
-        words_lit = F.expr(
-            "array(" + ",".join(f"{int(w)}L" for w in bloom.words) + ")")
-        hit = None
-        for pos in _positions(col, bloom.num_bits, bloom.k):
-            word = F.element_at(
-                words_lit, F.shiftright(pos, 6).cast("int") + F.lit(1))
-            mask = F.call_function(
-                "shiftleft", F.lit(1).cast("bigint"),
-                F.pmod(pos, F.lit(64)).cast("int"))
-            term = word.bitwiseAND(mask) != F.lit(0)
-            hit = term if hit is None else hit & term
-        return hit
-
-    from pyspark.sql.pandas.functions import pandas_udf
-
-    bc = bloom._broadcast()  # created once per filter, reused per probe
-
-    @pandas_udf("boolean")
-    def _probe(positions):
-        import pandas as pd
-        if len(positions) == 0:  # Arrow may hand the UDF an empty batch
-            return pd.Series([], dtype=bool)
-        w = bc.value
-        p = np.stack(positions.to_numpy())  # (rows, k) int64
-        # arithmetic >> keeps bit s of the two's-complement word at
-        # position 0, so signed int64 words need no unsigned dance
-        hits = ((w[p >> 6] >> (p & 63)) & 1).all(axis=1)
-        return pd.Series(hits)
-
-    return _probe(F.array(*_positions(col, bloom.num_bits, bloom.k)))
-
-
-# ---------------------------------------------------------------------------
-# Sharded (split-block) bloom — the above-the-boundary form. See the
-# module docstring's OPERATING BOUNDARY section for when and why.
-# ---------------------------------------------------------------------------
-class ShardedBloom:
-    """A bloom filter stored as a bucketed catalog table of non-empty
-    64-bit blocks — ``(w bigint, bits bigint)``, bucketed and sorted on
-    ``w``. Sparse by construction (empty blocks take no rows), fully
-    distributed (no driver bitmap, no broadcast), probed by ONE
-    co-partitioned left join that exchanges only the batch side."""
-
-    __slots__ = ("table", "num_words", "k")
-
-    def __init__(self, table: str, num_words: int, k: int):
-        self.table = table
-        self.num_words = num_words
-        self.k = k
-
-
-def _block_addr(col: Column, num_words: int) -> Column:
-    return F.pmod(F.xxhash64(col, F.lit(BLOCK_SEED)), F.lit(num_words))
-
-
-def _block_mask(col: Column, k: int) -> Column:
-    """OR of the key's k in-block bits (each from its own hash seed)."""
-    mask = None
-    for i in range(k):
-        bit = F.call_function(
+    definitely absent), as one codegen expression over the plan
+    literal."""
+    # ONE parsed SQL literal, not F.lit(list): PySpark expands
+    # lit([...]) into one Py4J lit() round-trip PER ELEMENT plus a
+    # CreateArray — ~1.9 s of pure driver latency at the gate's 1.5k
+    # words (measured r14; the parser path is ~7 ms). Both
+    # constant-fold to the identical array<bigint> literal, so the
+    # probe expression and every value are unchanged.
+    words_lit = F.expr(
+        "array(" + ",".join(f"{int(w)}L" for w in bloom.words) + ")")
+    hit = None
+    for pos in _positions(col, bloom.num_bits, bloom.k):
+        word = F.element_at(
+            words_lit, F.shiftright(pos, 6).cast("int") + F.lit(1))
+        mask = F.call_function(
             "shiftleft", F.lit(1).cast("bigint"),
-            F.pmod(F.xxhash64(col, F.lit(i)), F.lit(64)).cast("int"))
-        mask = bit if mask is None else mask.bitwiseOR(bit)
-    return mask
-
-
-def bloom_build_sharded(spark, df: DataFrame, col_name: str, *,
-                        num_bits: int | None = None, k: int = SHARDED_K,
-                        n_items: int | None = None,
-                        n_buckets: int = 32,
-                        cache_key: str | None = None) -> ShardedBloom:
-    """One distributed pass over ``df[col_name]`` → bucketed block
-    table. The groupBy(w) is the single extra shuffle vs the driver
-    build; its output is at most min(num_words, k·n) rows and never
-    touches the driver. ``n_buckets`` is the fixture default — a
-    deployment sizes it like any bucketed artifact (the probe's batch
-    side repartitions to match).
-
-    ``cache_key``: callers whose input is write-once per key (e.g. a
-    gate over a fixed index) pass one so the block table is built ONCE
-    per (session, key) — the bucketed_artifact_table discipline —
-    instead of rewriting an index-sized table per call. Callers over
-    varying inputs omit it and get a throwaway uuid-named table."""
-    import hashlib
-    import os
-    import tempfile
-    import uuid
-
-    if num_bits is None:
-        n = n_items if n_items is not None else df.count()
-        num_bits = max(64, BITS_PER_KEY * n)
-    num_words = (num_bits + 63) // 64
-    if cache_key is not None:
-        tag = hashlib.md5(
-            f"{cache_key}:{col_name}:{num_words}:{k}:{n_buckets}"
-            .encode()).hexdigest()[:12]
-        tbl = f"bloom_blocks_{tag}"
-        if spark.catalog.tableExists(tbl):
-            return ShardedBloom(table=tbl, num_words=num_words, k=k)
-    else:
-        tbl = f"bloom_blocks_{uuid.uuid4().hex[:12]}"
-    col = F.col(col_name)
-    words = (df.select(_block_addr(col, num_words).alias("w"),
-                       _block_mask(col, k).alias("m"))
-             .groupBy("w").agg(F.bit_or("m").alias("bits")))
-    try:
-        (words.repartition(n_buckets, F.col("w"))
-         .write.bucketBy(n_buckets, "w").sortBy("w")
-         .option("path", os.path.join(
-             tempfile.mkdtemp(prefix="bloom_blocks_"), "tbl"))
-         .mode("overwrite").saveAsTable(tbl))
-    except Exception as e:  # noqa: BLE001 — the deterministic-name
-        # path has the same check-then-create race as
-        # dedup.bucketed_artifact_table: two racers both see
-        # tableExists False; the loser falls through to the winner's
-        # identical table. Anything else re-raises.
-        from ..operators.dedup import _is_already_exists
-        if cache_key is None or not _is_already_exists(e):
-            raise
-    return ShardedBloom(table=tbl, num_words=num_words, k=k)
-
-
-def bloom_probe_sharded(spark, bloom: ShardedBloom, df: DataFrame,
-                        col_name: str, out_col: str = "bloom_hit"
-                        ) -> DataFrame:
-    """``df`` + boolean ``out_col`` (False ⇒ key definitely absent).
-    One left join on the block address: the words side reads IN PLACE
-    from its bucketed layout (never exchanged — plan-asserted in
-    tests/test_bloom.py); only the batch side repartitions, so the
-    probe is batch-sized at any filter size. Safe inside a streaming
-    plan (a stream-static equi-join, no intermediate aggregation)."""
-    col = F.col(col_name)
-    words = spark.table(bloom.table).hint("merge")
-    probed = (df.withColumn("_bw", _block_addr(col, bloom.num_words))
-              .withColumn("_bm", _block_mask(col, bloom.k))
-              .join(words, F.col("_bw") == F.col("w"), "left")
-              .withColumn(out_col,
-                          F.col("bits").isNotNull()
-                          & (F.col("bits").bitwiseAND(F.col("_bm"))
-                             == F.col("_bm")))
-              .drop("_bw", "_bm", "w", "bits"))
-    return probed
+            F.pmod(pos, F.lit(64)).cast("int"))
+        term = word.bitwiseAND(mask) != F.lit(0)
+        hit = term if hit is None else hit & term
+    return hit

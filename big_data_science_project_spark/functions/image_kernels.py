@@ -307,21 +307,6 @@ def canny_mask_np(img: np.ndarray, t1: float, t2: float,
     return _numpy_canny_np(img, t1, t2, shape)
 
 
-def make_threshold_mask_udf(t1: float, t2: float):
-    """Per-channel mask predictor (reference calculate_masks,
-    image_masking.py:83-90, with the cv2 call stubbed)."""
-
-    @F.pandas_udf(T.ArrayType(T.BooleanType()))
-    def predict_mask(data_ch: pd.Series, width: pd.Series, height: pd.Series) -> pd.Series:
-        out = []
-        for d, w, h in zip(data_ch, width, height):
-            img = np.asarray(d, dtype=np.float64).reshape(int(w), int(h))
-            out.append(canny_mask_np(img, t1, t2).reshape(-1).tolist())
-        return pd.Series(out)
-
-    return predict_mask
-
-
 # ---------------------------------------------------------------------------
 # median blur (K14): k×k median filter with edge-replicate padding —
 # the reference's cv.medianBlur(cell, 5) pre-Canny smoothing

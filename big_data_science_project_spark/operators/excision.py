@@ -218,15 +218,14 @@ def lm_excise_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the excision left the model exactly as if D had never been
     ingested — including the recounted affected-language vocabulary
     and the merged global vocabulary."""
-    from .text import _score_against_lm, lm_skew_split
+    from .text import _score_against_lm
 
     x = excised_artifacts(spark, sf_dir)
     rd = spark.read.parquet
     batch = (load_table(spark, sf_dir, "documents")
              .filter(_bucket(F.col("doc_id")) >= INDEX_PCT))
     return _score_against_lm(batch, rd(f"{x}/c12"), rd(f"{x}/c1"),
-                             rd(f"{x}/vocab"), rd(f"{x}/gvocab"),
-                             skew_split=lm_skew_split(sf_dir))
+                             rd(f"{x}/vocab"), rd(f"{x}/gvocab"))
 
 
 def _excise_report_sql() -> str:

@@ -57,8 +57,7 @@ from .curation import _bucket
 from .dedup import (INDEX_PCT, _INCREMENTAL_SQL, _index_artifacts,
                     bucketed_digest_table, near_tier_vs_artifacts)
 from .similarity import _ANN_INCREMENTAL_SQL, ann_incremental_persisted
-from .text import (_LM_PERPLEXITY_SQL, lm_artifacts, lm_score_vs_artifacts,
-                   lm_skew_split)
+from .text import _LM_PERPLEXITY_SQL, lm_artifacts, lm_score_vs_artifacts
 
 QUERIES: dict = {}
 
@@ -103,9 +102,7 @@ def ingest_gate_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                        spark.table(bucketed_digest_table(spark, sf_dir)))
     near = near_tier_vs_artifacts(
         spark, batch, _index_artifacts(spark, sf_dir))
-    lm = lm_score_vs_artifacts(spark, batch,
-                               lm_artifacts(spark, sf_dir),
-                               skew_split=lm_skew_split(sf_dir))
+    lm = lm_score_vs_artifacts(spark, batch, lm_artifacts(spark, sf_dir))
     ann = ann_incremental_persisted(spark, sf_dir)
     return assemble_verdicts(near, exact, lm, ann)
 

@@ -20,6 +20,12 @@ exact at any partitioning. Both engines evaluate the identical IEEE
 double expression before the floor, so each quantized cell matches
 bit-for-bit. |x_i·x_j| ≤ ~1e2 and n ≤ 1e7 keeps the int64 far from
 overflow at any tested SF.
+
+Lloyd's assignment (``_lloyd_assign``) has one plan: every centroid
+inlines as a literal struct in one ``array_min`` expression, evaluated
+interpreted at N × K × D steps. Codebooks far above the fixtures' K·D =
+8 × 64 (hundreds of centroids) are not a supported workload; no
+fixture, test or registry query builds one.
 """
 
 from __future__ import annotations
@@ -442,80 +448,27 @@ def _km_trunc_div(s: int, n: int) -> int:
     return q if s >= 0 else -q
 
 
-#: codebooks with at most this many total literal cells (K x D) assign
-#: through the inline-literal expression; larger ones use the Arrow
-#: kernel. 16 centroids x 64 dims keeps the expression tree small
-#: enough that analysis cost is negligible while covering every
-#: fixture-constant codebook (KM_K, N_CENTROIDS = 8).
-_LLOYD_INLINE_MAX_CELLS = 16 * 64
-
-
 def _lloyd_assign(pts: DataFrame, cents: dict) -> DataFrame:
     """One map-only assignment pass: per point, the (distance², cid)
     struct of its nearest centroid; ties break on the LOWER cid.
 
-    SIZE-GATED on the codebook, same discipline as the exact/sketch
-    percentile gate: a SMALL codebook (<= _LLOYD_INLINE_MAX_CELLS
-    literal cells) inlines each centroid as a literal struct inside one
-    array_min expression — pure JVM, no Python worker round-trip, the
-    fastest shape at the fixture's K=8 where per-job Arrow overhead
-    would dominate. A LARGE codebook rides into an Arrow-batched
-    kernel as a plain numpy matrix (the broadcast-variable pattern):
-    Catalyst evaluates the aggregate/zip_with folds INTERPRETED, so
-    the literal expression tree grows as K x D and the pass costs
-    N x K x D interpreted steps — at the composed pipeline probe's
-    production sizing (K ~ sqrt(N), 400 at the x100 rung) that put
-    ~10 minutes of pure expression interpretation into every index
-    build, where the kernel is vectorized numpy. The two paths are
-    value-IDENTICAL, not approximately so: all arithmetic is EXACT
-    int64 (micros in, squared diffs ≤ ~1e14 per term, sums far under
-    2^63), integer sums are order-independent so chunking changes
-    nothing, and ties break to the lower cid on both (struct ordering
-    of array_min; ascending-cid scan with strict improvement in the
-    kernel — np.argmin also returns the first minimum within a
-    block). The kernel's centroid axis is chunked so the B x K x D
-    difference intermediate stays ~128 MB per Arrow batch at any K."""
-    if len(cents) * DIM <= _LLOYD_INLINE_MAX_CELLS:
-        # {cid}L: a LONG literal, so the struct's cid field is BIGINT
-        # exactly like the Arrow kernel's — the declared output schema
-        # must not depend on which side of the size gate the codebook
-        # lands (a full-width checksum hashes int32 and int64
-        # differently even when every value prints the same)
-        structs = ", ".join(
-            "struct(aggregate(zip_with(em, array({vals}), (a, b) ->"
-            " (a - b) * (a - b)), 0L, (acc, v) -> acc + v) as d,"
-            " {cid}L as cid)".format(
-                vals=", ".join(f"{v}L" for v in cents[cid]), cid=cid)
-            for cid in sorted(cents))
-        return pts.select(
-            "vec_id", "em",
-            F.expr(f"array_min(array({structs}))").alias("best"))
-
-    cids = np.array(sorted(cents), dtype=np.int64)
-    cmat = np.asarray([cents[int(c)] for c in cids], dtype=np.int64)
-    n_k = len(cids)
-
-    @F.pandas_udf("d bigint, cid bigint")
-    def best_centroid(em: pd.Series) -> pd.DataFrame:
-        bsz = len(em)
-        if bsz == 0:
-            return pd.DataFrame({"d": pd.Series(dtype="int64"),
-                                 "cid": pd.Series(dtype="int64")})
-        m = np.asarray(em.tolist(), dtype=np.int64)
-        dmin = np.full(bsz, np.iinfo(np.int64).max, dtype=np.int64)
-        amin = np.zeros(bsz, dtype=np.int64)
-        kb = max(1, (1 << 24) // max(1, bsz * DIM))
-        for s in range(0, n_k, kb):
-            diff = m[:, None, :] - cmat[None, s:s + kb, :]
-            d = (diff * diff).sum(axis=2)
-            j = d.argmin(axis=1)
-            dblk = d[np.arange(bsz), j]
-            better = dblk < dmin
-            dmin[better] = dblk[better]
-            amin[better] = s + j[better]
-        return pd.DataFrame({"d": dmin, "cid": cids[amin]})
-
-    return pts.select("vec_id", "em", best_centroid("em").alias("best"))
+    Each centroid inlines as a literal struct inside one array_min
+    expression — pure JVM, no Python worker round-trip. All arithmetic
+    is EXACT int64 (micros in, squared diffs ≤ ~1e14 per term, sums far
+    under 2^63), and struct ordering makes array_min break ties to the
+    lower cid."""
+    # {cid}L: a LONG literal, so the struct's cid field is BIGINT (a
+    # full-width checksum hashes int32 and int64 differently even when
+    # every value prints the same)
+    structs = ", ".join(
+        "struct(aggregate(zip_with(em, array({vals}), (a, b) ->"
+        " (a - b) * (a - b)), 0L, (acc, v) -> acc + v) as d,"
+        " {cid}L as cid)".format(
+            vals=", ".join(f"{v}L" for v in cents[cid]), cid=cid)
+        for cid in sorted(cents))
+    return pts.select(
+        "vec_id", "em",
+        F.expr(f"array_min(array({structs}))").alias("best"))
 
 
 def lloyd_iterations(pts: DataFrame, cents: dict, iters: int) -> dict:

@@ -639,36 +639,11 @@ def q23_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q24: ordered-set / statistical aggregates — exact percentiles (Spark
 # `percentile` == DuckDB `quantile_cont`, both linear interpolation),
 # Pearson correlation, sample covariance. Exact percentile sorts within
-# groups, which is intrinsic O(n log n) per group and the wrong plan at
-# 100 TB — so the swap to approx_percentile is a REAL SIZE-GATED PATH
-# (r10 verdict item 5), the same size-dispatch idiom as the bloom
-# gate's broadcast-vs-sharded split (streaming/events.py). Below
-# PERCENTILE_EXACT_MAX_BYTES of input the exact sort engages (and the
-# DuckDB oracle is value-exact); above it the one-pass fixed-memory
-# sketch engages, whose 1%-accuracy contract is validated by q52 and
-# re-asserted by tests/test_relational_gates.py on this very query.
-# The gate reads file sizes from the fixture listing (no Spark job);
-# on a real cluster the same decision comes from catalog statistics.
-# corr/covar are single-pass exact at any scale and never gated.
+# groups, O(n log n) per group with every group value buffered: lineitem
+# beyond a few hundred MiB of parquet is not a supported workload here
+# (the largest fixture, sf0.1, is 10.8 MB). The sketch form lives in its
+# own query, q52. corr/covar are single-pass exact at any scale.
 # ---------------------------------------------------------------------------
-PERCENTILE_EXACT_MAX_BYTES = 256 << 20  # 256 MiB of parquet per table
-
-
-def _table_file_bytes(sf_dir: str, name: str) -> int | None:
-    """Total on-disk parquet bytes for a fixture table, or None when the
-    path isn't locally listable (treat as LARGE — never pick the exact
-    sort blind)."""
-    import os
-    p = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        if os.path.isdir(p):
-            return sum(os.path.getsize(os.path.join(root, f))
-                       for root, _, files in os.walk(p) for f in files)
-        return os.path.getsize(p)
-    except OSError:
-        return None
-
-
 @q("q24_percentiles", """
 SELECT l_returnflag,
        ROUND(quantile_cont(l_extendedprice, 0.5), 6)  AS p50,
@@ -679,26 +654,14 @@ FROM lineitem
 GROUP BY l_returnflag
 """)
 def q24_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # oracle note: the exact-path SQL above is the oracle; every driver
-    # fixture (sf0.001..sf0.1, ≤ ~11 MB) sits far below the gate, so the
-    # exact path is what the driver hash-checks. The sketch path's value
-    # contract (within 1% of exact) is pytest-asserted, q52-style.
     li = load_table(spark, sf_dir, "lineitem")
-    nbytes = _table_file_bytes(sf_dir, "lineitem")
     # BOTH quantiles from ONE aggregate buffer: percentile(col,
-    # array(p...)) sorts/sketches the group's values once and reads two
+    # array(p...)) sorts the group's values once and reads two
     # interpolation points, where two scalar percentile() calls each
-    # buffered every value (the exact path's cost is that buffer, and
-    # Catalyst dedupes identical aggregate expressions, so the [0]/[1]
-    # extractions below share one partial_percentile — plan-asserted).
-    # Values are identical: same sort/sketch, same per-p interpolation.
-    if nbytes is not None and nbytes <= PERCENTILE_EXACT_MAX_BYTES:
-        pcts = F.percentile("l_extendedprice",
-                            F.array(F.lit(0.5), F.lit(0.95)))
-    else:
-        pcts = F.expr(
-            "approx_percentile(l_extendedprice, array(0.5D, 0.95D),"
-            " 10000)")
+    # buffered every value (Catalyst dedupes identical aggregate
+    # expressions, so the [0]/[1] extractions below share one
+    # partial_percentile — plan-asserted).
+    pcts = F.percentile("l_extendedprice", F.array(F.lit(0.5), F.lit(0.95)))
     p50, p95 = pcts.getItem(0), pcts.getItem(1)
     return li.groupBy("l_returnflag").agg(
         F.round(p50, 6).alias("p50"),

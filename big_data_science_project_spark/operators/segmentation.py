@@ -36,27 +36,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions import image_kernels as K
-from ..sources.cells import load_cells
+from ..sources.cells import load_cells, per_channel
 
 QUERIES: dict = {}
 
 INTENSITY_WEIGHT = 10.0  # reference image_masking.py:33
-
-
-# ---------------------------------------------------------------------------
-# per-(image, channel) exploded view with one channel's data+mask slices
-# ---------------------------------------------------------------------------
-def _per_channel(cells: DataFrame) -> DataFrame:
-    wh = F.col("width") * F.col("height")
-    return cells.select(
-        "image_id", "width", "height",
-        F.explode(F.sequence(F.lit(0), F.col("n_channels") - 1)).alias("channel"),
-        "data", "mask",
-    ).select(
-        "image_id", "channel", "width", "height",
-        K.channel_slice(F.col("data"), F.col("channel"), wh).alias("data_ch"),
-        K.channel_slice(F.col("mask"), F.col("channel"), wh).alias("mask_ch"),
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -94,7 +78,7 @@ def kmeans_segment(cells: DataFrame) -> DataFrame:
     """(image_id, channel, predicted_mask) via grouped-map pandas —
     reference predict (image_masking.py:166-167, which dropped its return
     value; SURVEY.md §Pitfalls 7 — here it returns)."""
-    per_ch = _per_channel(cells)
+    per_ch = per_channel(cells, "data", "mask")
     schema = T.StructType([
         T.StructField("image_id", T.LongType()),
         T.StructField("channel", T.IntegerType()),
@@ -146,7 +130,7 @@ def cells_kmeans_mllib(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     from pyspark.ml.feature import VectorAssembler
 
     cells = load_cells(spark, n_images=8)
-    per_ch = _per_channel(cells).filter(F.col("channel") == 0)
+    per_ch = per_channel(cells, "data", "mask").filter(F.col("channel") == 0)
     pixels = K.pixel_features(per_ch)
     assembled = VectorAssembler(
         inputCols=["fx", "x", "y"], outputCol="features").transform(pixels)
@@ -205,7 +189,7 @@ DBSCAN_THRESHOLD = 200.0
 
 def cells_dbscan_segment(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     cells = load_cells(spark, n_images=48)
-    per_ch = _per_channel(cells)
+    per_ch = per_channel(cells, "data", "mask")
     schema = T.StructType([
         T.StructField("image_id", T.LongType()),
         T.StructField("channel", T.IntegerType()),
@@ -247,7 +231,7 @@ QUERIES["cells_dbscan_segment"] = (cells_dbscan_segment, None)  # rows-only
 def cells_blur_threshold(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     from ..functions.image_kernels import make_median_blur_udf
 
-    per_ch = _per_channel(load_cells(spark, n_images=64))
+    per_ch = per_channel(load_cells(spark, n_images=64), "data", "mask")
     blurred = per_ch.withColumn(
         "data_ch", make_median_blur_udf(3)(
             F.col("data_ch"), F.col("width"), F.col("height")))
@@ -335,7 +319,7 @@ def grid_search_threshold(cells: DataFrame,
                  c[f"fp{k}"].alias("fp"))
         for k, t in enumerate(grid)])
     scored = (
-        _per_channel(cells)
+        per_channel(cells, "data", "mask")
         .select("image_id", "channel",
                 _grid_counts(F.col("mask_ch"), F.col("data_ch"), grid)
                 .alias("c"))
@@ -513,7 +497,7 @@ def grid_search_canny(cells: DataFrame,
               for a in t1_grid for b in t2_grid for s in shape_grid]
     grid_df = spark.createDataFrame(
         combos, "t1 double, t2 double, sw int, sh int")
-    per_ch = _per_channel(cells)
+    per_ch = per_channel(cells, "data", "mask")
     pred = make_canny_mask_udf()(
         F.col("data_ch"), F.col("width"), F.col("height"),
         F.col("t1"), F.col("t2"), F.col("sw"), F.col("sh"))

@@ -4,6 +4,13 @@ LLM-data-pipeline surface; SURVEY.md Phase 5).
 All tokenization/scoring stays JVM-side (split/regexp/higher-order array
 functions) — no Python UDFs in any hot path, so every operator is
 whole-stage-codegen'd and scales linearly with input splits.
+
+LM scoring (``_score_against_lm``) has one plan: the batch joins the
+history and bigram counts by two plain equi-joins. A reduce task of
+those joins holds every batch bigram of one key, so a corpus with
+million-occurrence histories (or over ~64 MiB of documents) is not a
+supported workload; no fixture, test or registry query comes near it
+(the largest history count is ~3.8k at sf0.1).
 """
 
 from __future__ import annotations
@@ -1206,64 +1213,8 @@ def _lm_tables(idx: DataFrame
     return c12, c1, vocab, gvocab
 
 
-# history keys with c(w1) at/above this are the Zipf HEAD: their batch
-# bigrams are exactly the rows that would pile into one reduce
-# partition of the c1 join (pre-split probe iterations measured
-# 200-375x max/median task stragglers — ~20 s join-stage tasks — from
-# one planted million-occurrence history), so they
-# resolve MAP-SIDE through a broadcast of the head slice instead. The
-# head is bounded by construction — at most total_bigrams/threshold
-# keys can exceed the threshold — and the index itself knows it (c1 IS
-# the frequency table). Production sizes the threshold to
-# total_bigrams / tolerable_rows_per_task; 1e5 sits well above the
-# fixtures' natural maximum (~3.8k at sf0.1), so every oracle config
-# runs the plain cold path and the head path is exercised by the
-# straggler probe and its unit test.
-#
-# The SAME split applies to the exact-bigram join (r9 verdict item 3):
-# per-bigram multiplicity sits orders below per-history counts on Zipf
-# averages, but a 100 TB corpus has 1e6-occurrence exact bigrams ("of
-# the") whose batch rows would bypass the c1 broadcast fix only to
-# pile into one (lang, w1, w2) partition of the c12 join. Head bigrams
-# resolve map-side through a broadcast of the c12 head slice (bounded
-# by construction exactly like the c1 head: at most
-# total_bigrams/threshold keys); the tail joins shuffled as before.
-LM_HOT_HISTORY = 100_000
-LM_HOT_BIGRAM = 100_000
-
-# corpus size below which the in-plan trainer skips the Zipf-head
-# split entirely (r14, the q24 exact/sketch-gate discipline): the two
-# formulations are value-IDENTICAL for every input (the disjointness
-# argument in _score_against_lm works in both directions — a key
-# matches its head xor its tail xor neither, with the same count
-# either way), so the split is purely a straggler bound. The worst
-# plain-path reduce partition holds at most the batch's bigrams for
-# one (lang, w1); below ~64 MB of documents that is <= ~1e7 rows even
-# for a fully-degenerate single-history corpus — one comfortable task
-# — while the split's three disjoint branches cost ~3x the plan
-# (~20 extra scheduling rounds, which DOMINATE wall at fixture sizes).
-# Above the gate the split bounds the hot partitions of a skewed
-# corpus (e.g. one planted million-occurrence history).
-LM_SKEW_SPLIT_MIN_BYTES = 64 * 1024 * 1024
-
-
-def lm_skew_split(sf_dir: str) -> bool:
-    """Shared size gate for every LM scoring site: split above
-    LM_SKEW_SPLIT_MIN_BYTES of corpus documents (the batch a gate
-    scores is at most corpus-sized in every fixture path); unlistable
-    paths count as LARGE so production object-store deployments keep
-    the straggler bound."""
-    from .relational import _table_file_bytes
-
-    nbytes = _table_file_bytes(sf_dir, "documents")
-    return nbytes is None or nbytes > LM_SKEW_SPLIT_MIN_BYTES
-
-
 def _score_against_lm(batch: DataFrame, c12: DataFrame, c1: DataFrame,
-                      vocab: DataFrame, gvocab: DataFrame,
-                      hot_history: int = LM_HOT_HISTORY,
-                      hot_bigram: int = LM_HOT_BIGRAM,
-                      skew_split: bool = True) -> DataFrame:
+                      vocab: DataFrame, gvocab: DataFrame) -> DataFrame:
     """Per-doc NLL report for ``batch`` against a trained LM — shared by
     the in-plan batch query and the streaming gate (which trains once to
     parquet artifacts and scores every micro-batch here).
@@ -1275,33 +1226,8 @@ def _score_against_lm(batch: DataFrame, c12: DataFrame, c1: DataFrame,
     bigram (an earlier version fell back to V=1, which made p = 1 and
     ranked unindexed-language junk as the best doc in the batch).
 
-    SKEW SHAPE (r9 histories, r10 exact bigrams): both count joins
-    split hot/cold on the trained counts themselves — batch bigrams
-    whose history (c1 >= hot_history) or exact bigram
-    (c12 >= hot_bigram) is in the Zipf head resolve MAP-SIDE against
-    broadcast head slices (never shuffled on their hot key); the tails
-    join as before (bucketed layout intact for artifact callers, since
-    a filter preserves the scan's partitioning). Physically: one tag
-    pass (two broadcast joins) then three disjoint branches —
-    both-hot (no shuffled joins at all), history-hot (c12 tail only),
-    cold (both tails) — re-scanning the batch once per branch,
-    map-only, the same trade the bloom gate makes. Values are
-    identical to the single-join formulation by disjointness: a key
-    matches its head xor its tail xor neither (NULL count either way),
-    and hot_bigram >= hot_history (enforced) makes a hot bigram imply
-    a hot history, so the three branches are exhaustive. The
-    degenerate adversary ("of the" at 1e6 occurrences, which bypasses
-    the c1 fix and piles into one (lang, w1, w2) partition) is exactly
-    what the lm_bigram straggler probe plants."""
-    if hot_bigram < hot_history:
-        # a hot bigram implies a hot history (c1 = Σ_w2 c12 >= c12),
-        # so with hot_bigram >= hot_history the three branches below
-        # are exhaustive; a LOWER bigram threshold would create rows
-        # that are bigram-hot yet history-cold, routing a hot history
-        # key around the head broadcast and into the tail shuffle
-        raise ValueError(
-            f"hot_bigram ({hot_bigram}) must be >= hot_history "
-            f"({hot_history})")
+    One batch scan and two count joins: c1 on (lang, w1), c12 on
+    (lang, w1, w2)."""
     bigrams = F.explode(F.expr(_BIGRAMS_EXPR)).alias("b")
     # hoisted tokenize projection — see _lm_tables for why (O(tokens²)
     # per doc otherwise; the batch a gate scores can be corpus-sized)
@@ -1309,48 +1235,8 @@ def _score_against_lm(batch: DataFrame, c12: DataFrame, c1: DataFrame,
           .select("doc_id", "lang", bigrams)
           .select("doc_id", "lang", F.col("b.w1").alias("w1"),
                   F.col("b.w2").alias("w2")))
-    if not skew_split:
-        # plain two-join form (LM_SKEW_SPLIT_MIN_BYTES): one batch
-        # scan, two count joins, no head/tail branches — the same
-        # counts reach every bigram, so p and every NLL below are
-        # bit-identical to the split form
-        nb_c12 = (nb.join(c1, ["lang", "w1"], "left")
-                  .join(c12, ["lang", "w1", "w2"], "left"))
-        return _lm_nll_report(batch, nb_c12, vocab, gvocab)
-    c1_head = c1.filter(F.col("c1") >= hot_history) \
-        .withColumnRenamed("c1", "c1_head")
-    c12_head = c12.filter(F.col("c12") >= hot_bigram) \
-        .withColumnRenamed("c12", "c12_head")
-    # ONE tag pass (two map-side broadcast joins), then three DISJOINT
-    # branches — chaining the two splits instead (filter over a union
-    # over a filter over a union) would re-inline the batch subtree
-    # 2x2 = 4 times; this shape scans it 3 times, map-only (r10 review)
-    tagged = (nb.join(F.broadcast(c1_head), ["lang", "w1"], "left")
-              .join(F.broadcast(c12_head), ["lang", "w1", "w2"], "left"))
-    c1_tail = c1.filter(F.col("c1") < hot_history)
-    c12_tail = c12.filter(F.col("c12") < hot_bigram)
-    both_hot = (tagged.filter(F.col("c12_head").isNotNull())
-                .withColumn("c1", F.col("c1_head"))
-                .withColumn("c12", F.col("c12_head"))
-                .drop("c1_head", "c12_head"))
-    hist_hot = (tagged.filter(F.col("c12_head").isNull()
-                              & F.col("c1_head").isNotNull())
-                .withColumn("c1", F.col("c1_head"))
-                .drop("c1_head", "c12_head")
-                .join(c12_tail, ["lang", "w1", "w2"], "left"))
-    cold = (tagged.filter(F.col("c1_head").isNull())
-            .drop("c1_head", "c12_head")
-            .join(c1_tail, ["lang", "w1"], "left")
-            .join(c12_tail, ["lang", "w1", "w2"], "left"))
-    nb_c12 = both_hot.unionByName(hist_hot).unionByName(cold)
-    return _lm_nll_report(batch, nb_c12, vocab, gvocab)
-
-
-def _lm_nll_report(batch: DataFrame, nb_c12: DataFrame,
-                   vocab: DataFrame, gvocab: DataFrame) -> DataFrame:
-    """Per-doc NLL tail shared by the split and plain count-join
-    shapes: identical expressions over identical counts, so the two
-    shapes return identical values."""
+    nb_c12 = (nb.join(c1, ["lang", "w1"], "left")
+              .join(c12, ["lang", "w1", "w2"], "left"))
     # greatest(..., 1) guards the fully-empty-index degenerate case
     v_eff = F.greatest(F.coalesce("v", F.col("gv")), F.lit(1))
     p = ((F.coalesce("c12", F.lit(0)) + 1)
@@ -1389,8 +1275,7 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket = _bucket(F.col("doc_id"))
     c12, c1, vocab, gvocab = _lm_tables(d.filter(bucket < INDEX_PCT))
     return _score_against_lm(
-        d.filter(bucket >= INDEX_PCT), c12, c1, vocab, gvocab,
-        skew_split=lm_skew_split(sf_dir))
+        d.filter(bucket >= INDEX_PCT), c12, c1, vocab, gvocab)
 
 
 def _wdoc_counts(docs: DataFrame) -> DataFrame:
@@ -1440,8 +1325,7 @@ def lm_artifacts(spark: SparkSession, sf_dir: str) -> str:
 
 
 def lm_score_vs_artifacts(spark: SparkSession, batch: DataFrame,
-                          root: str,
-                          skew_split: bool = True) -> DataFrame:
+                          root: str) -> DataFrame:
     """Score a batch against the persisted LM — shared by the streaming
     quality gate and the composed ingest pipeline (they must not drift).
     The two large LM tables read through BUCKETED layouts on their join
@@ -1459,12 +1343,7 @@ def lm_score_vs_artifacts(spark: SparkSession, batch: DataFrame,
         spark, root, "c1", ["lang", "w1"])).hint("merge")
     vocab = spark.read.parquet(f"{root}/vocab")
     gvocab = spark.read.parquet(f"{root}/gvocab")
-    # skew_split: callers gate on corpus size (lm_skew_split) — the
-    # plain path still reads the bucketed layouts in place (the merge
-    # hints travel with c12/c1), it just scans the batch once instead
-    # of once per head/tail branch
-    return _score_against_lm(batch, c12, c1, vocab, gvocab,
-                             skew_split=skew_split)
+    return _score_against_lm(batch, c12, c1, vocab, gvocab)
 
 
 from ..operators.curation import _bucket_sql as _lm_bucket_sql  # noqa: E402
@@ -1595,8 +1474,7 @@ def lm_incremental_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab_m = wdoc_u.groupBy("lang").agg(F.countDistinct("w").alias("v"))
     gvocab_m = wdoc_u.agg(F.countDistinct("w").alias("gv"))
 
-    return _score_against_lm(rest, c12_m, c1_m, vocab_m, gvocab_m,
-                             skew_split=lm_skew_split(sf_dir))
+    return _score_against_lm(rest, c12_m, c1_m, vocab_m, gvocab_m)
 
 
 QUERIES["lm_incremental_refresh"] = (lm_incremental_refresh,

@@ -41,8 +41,3 @@ def shuffle_exchange_count(df: DataFrame) -> int:
     distinctly and are excluded by the word boundary."""
     return node_count(formatted_plan(df), "Exchange")
 
-
-def python_op_count(df: DataFrame) -> int:
-    """Row-at-a-time Python evals (BatchEvalPython) — should always be 0;
-    ArrowEvalPython (pandas UDFs) is the only acceptable Python operator."""
-    return formatted_plan(df).count("BatchEvalPython")

@@ -33,20 +33,30 @@ from pyspark.sql import types as T
 QUERIES: dict = {}
 
 
+def per_channel(cells: DataFrame, *cols: str) -> DataFrame:
+    """One row per (image, channel): ``image_id, channel, width,
+    height`` plus ``<col>_ch``, that channel's slice of each of
+    ``cols`` — the one per-channel view every cells operator reads."""
+    from ..functions.image_kernels import channel_slice
+
+    wh = F.col("width") * F.col("height")
+    return cells.select(
+        "image_id", "width", "height",
+        F.explode(F.sequence(F.lit(0), F.col("n_channels") - 1))
+        .alias("channel"), *cols,
+    ).select(
+        "image_id", "channel", "width", "height",
+        *[channel_slice(F.col(c), F.col("channel"), wh).alias(f"{c}_ch")
+          for c in cols])
+
+
 def per_channel_mask_rollup(df: DataFrame) -> DataFrame:
     """Per-channel (total_area, n_images) over a cells DataFrame — the
     shared verification rollup every scan/sink round-trip query returns,
     factored once so the five call sites can't drift."""
     from ..functions import image_kernels as K
 
-    wh = F.col("width") * F.col("height")
-    per_ch = df.select(
-        "image_id",
-        F.explode(F.sequence(F.lit(0), F.col("n_channels") - 1))
-        .alias("channel"),
-        K.channel_slice(F.col("mask"), F.col("channel"), wh)
-        .alias("mask_ch"))
-    return (per_ch.groupBy("channel")
+    return (per_channel(df, "mask").groupBy("channel")
             .agg(F.sum(K.area(F.col("mask_ch"))).alias("total_area"),
                  F.count(F.lit(1)).alias("n_images")))
 
@@ -130,18 +140,7 @@ def select_channels(df: DataFrame, channels: list[int]) -> DataFrame:
 def cell_features(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     from ..functions import image_kernels as K
 
-    cells = load_cells(spark)
-    wh = F.col("width") * F.col("height")
-    per_ch = cells.select(
-        "image_id", "width", "height",
-        F.explode(F.sequence(F.lit(0), F.col("n_channels") - 1)).alias("channel"),
-        "data", "mask",
-    ).select(
-        "image_id", "channel", "width", "height",
-        K.channel_slice(F.col("data"), F.col("channel"), wh).alias("data_ch"),
-        K.channel_slice(F.col("mask"), F.col("channel"), wh).alias("mask_ch"),
-    )
-    feats = per_ch.select(
+    feats = per_channel(load_cells(spark), "data", "mask").select(
         "image_id", "channel",
         K.area(F.col("mask_ch")).alias("area"),
         K.perimeter_udf(F.col("mask_ch"), F.col("width"), F.col("height")).alias("perimeter"),
@@ -358,17 +357,8 @@ def cells_surf_descriptors(spark: SparkSession, sf_dir: str = "",
     # 48px images: the 9..51 box filters need room (default 16px fixtures
     # leave no interior for the NMS middle layers); blob radii scale with
     # the image so every channel has a detectable feature
-    from ..functions.image_kernels import channel_slice
-
-    cells = load_cells(spark, n_images=n_images, width=48, height=48)
-    wh = F.col("width") * F.col("height")
-    per_ch = cells.select(
-        "image_id", "width", "height",
-        F.explode(F.sequence(F.lit(0), F.col("n_channels") - 1))
-        .alias("channel"), "data",
-    ).select(
-        "image_id", "channel", "width", "height",
-        channel_slice(F.col("data"), F.col("channel"), wh).alias("data_ch"))
+    per_ch = per_channel(
+        load_cells(spark, n_images=n_images, width=48, height=48), "data")
 
     schema = T.StructType([
         T.StructField("image_id", T.LongType()),

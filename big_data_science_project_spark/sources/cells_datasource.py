@@ -56,8 +56,8 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
 from pyspark.sql.types import StructType
 
 from .cells import (CELLS_SCHEMA, DEFAULT_C, DEFAULT_H, DEFAULT_N, DEFAULT_W,
-                    _gen_image, per_channel_mask_rollup, rollup_oracle_sql,
-                    select_channels)
+                    _gen_image, per_channel, per_channel_mask_rollup,
+                    rollup_oracle_sql, select_channels)
 
 
 @dataclass
@@ -630,12 +630,8 @@ def cells_stream_scan(spark, sf_dir: str = ""):
     stream = (spark.readStream.format("cells")
               .option("imagelimit", n_images).option("channels", "0,1")
               .option("numpartitions", 4).option("streambatch", 40).load())
-    wh = F.col("width") * F.col("height")
-    per_ch = stream.select(
-        "image_id",
-        F.explode(F.sequence(F.lit(0), F.col("n_channels") - 1)).alias("channel"),
-        K.channel_slice(F.col("mask"), F.col("channel"), wh).alias("mask_ch")
-    ).select("image_id", "channel", K.area(F.col("mask_ch")).alias("area"))
+    per_ch = per_channel(stream, "mask").select(
+        "image_id", "channel", K.area(F.col("mask_ch")).alias("area"))
 
     name = "stream_result_cells_scan"
     spark.catalog.dropTempView(name)
@@ -706,12 +702,8 @@ def cells_binary_stream_scan(spark, sf_dir: str = ""):
            .select("content"))
     cells = select_channels(
         raw.mapInArrow(_decode_containers, CELLS_SCHEMA), [0, 1])
-    wh = F.col("width") * F.col("height")
-    per_ch = cells.select(
-        "image_id",
-        F.explode(F.sequence(F.lit(0), F.col("n_channels") - 1)).alias("channel"),
-        K.area(K.channel_slice(F.col("mask"), F.col("channel"), wh))
-        .alias("area"))
+    per_ch = per_channel(cells, "mask").select(
+        "image_id", "channel", K.area(F.col("mask_ch")).alias("area"))
 
     name = "stream_result_cells_containers"
     spark.catalog.dropTempView(name)

@@ -626,20 +626,10 @@ def _exact_gate_report(new: DataFrame, idx: DataFrame,
     # misses now contribute to the report without being hashed against
     # the bloom a second time or shuffled on dg.
     hit = bloom_might_contain(bloom, F.col("dg"))
-    return _gate_report_tail(new, new.filter(hit), idx)
-
-
-def _gate_report_tail(new: DataFrame, positives: DataFrame,
-                      idx: DataFrame) -> DataFrame:
-    """The everyone-branch + verify-join + report aggregation shared
-    by BOTH physical gates (broadcast bloom and sharded block bloom) —
-    one place, so the two paths cannot drift on report semantics
-    (exactly the discipline _exact_gate_report's docstring promises
-    for the streaming/batch twins)."""
     everyone = new.select("lang", F.lit(1).cast("bigint").alias("is_new"),
                           F.lit(0).cast("bigint").alias("dup"))
     verified = (
-        positives.hint("shuffle_hash")
+        new.filter(hit).hint("shuffle_hash")
         .join(idx, F.col("dg") == F.col("idg"), "left")
         .select("lang", F.lit(0).cast("bigint").alias("is_new"),
                 F.col("idg").isNotNull().cast("bigint").alias("dup")))
@@ -647,21 +637,6 @@ def _gate_report_tail(new: DataFrame, positives: DataFrame,
             .groupBy("lang")
             .agg(F.sum("is_new").cast("bigint").alias("n_new"),
                  F.sum("dup").cast("bigint").alias("n_exact_dup")))
-
-
-def _exact_gate_report_sharded(spark: SparkSession, new: DataFrame,
-                               idx: DataFrame, sbloom) -> DataFrame:
-    """The _exact_gate_report twin for gates past the broadcast
-    boundary (functions/bloom.py OPERATING BOUNDARY): same report
-    semantics, but the bloom is a bucketed block table probed by one
-    stream-static co-partitioned join — no driver bitmap, no broadcast,
-    only the batch side exchanges. Misses still skip the verify join;
-    block-bloom positives (~0.4% FPs) exact-verify exactly as before."""
-    from ..functions.bloom import bloom_probe_sharded
-
-    probed = bloom_probe_sharded(spark, sbloom, new, "dg", "hit")
-    return _gate_report_tail(new, probed.filter(F.col("hit")).drop("hit"),
-                             idx)
 
 
 def _index_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -672,8 +647,7 @@ def _index_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_dedup_against_index(spark: SparkSession, sf_dir: str, *,
                                bloom_bits: int | None = None) -> DataFrame:
-    from ..functions.bloom import (BITS_PER_KEY, BLOOM_BROADCAST_MAX_BITS,
-                                   bloom_build, bloom_build_sharded)
+    from ..functions.bloom import BITS_PER_KEY, bloom_build
 
     docs = _stream_table(spark, sf_dir, "documents")
     new = (docs.filter(_bucket(F.col("doc_id")) >= INDEX_PCT)
@@ -681,20 +655,9 @@ def stream_dedup_against_index(spark: SparkSession, sf_dir: str, *,
     idx = _index_digests(spark, sf_dir)
     if bloom_bits is None:
         bloom_bits = max(64, BITS_PER_KEY * idx.count())
-    if bloom_bits > BLOOM_BROADCAST_MAX_BITS:
-        # past the broadcast boundary: the gate lives as a bucketed
-        # block table (sparse — rows ∝ keys, not bits, so an oversized
-        # universe costs nothing), probed by a co-partitioned join
-        sbloom = bloom_build_sharded(
-            spark, idx, "idg", num_bits=bloom_bits,
-            # the index digests are fixed per sf_dir → build once per
-            # session instead of one index-sized table per stream run
-            cache_key=f"dedup_index:{sf_dir}")
-        report = _exact_gate_report_sharded(spark, new, idx, sbloom)
-    else:
-        bloom = bloom_build(idx, "idg", num_bits=bloom_bits)
-        report = _exact_gate_report(new, idx, bloom)
-    return _run_to_table(report, "complete", "dedup_index")
+    bloom = bloom_build(idx, "idg", num_bits=bloom_bits)
+    return _run_to_table(_exact_gate_report(new, idx, bloom), "complete",
+                         "dedup_index")
 
 
 QUERIES["stream_dedup_against_index"] = (stream_dedup_against_index, f"""
@@ -869,17 +832,14 @@ QUERIES["stream_dedup_near_index"] = (stream_dedup_near_index,
 # twin's.
 # ---------------------------------------------------------------------------
 def stream_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.text import (lm_artifacts, lm_score_vs_artifacts,
-                                  lm_skew_split)
+    from ..operators.text import lm_artifacts, lm_score_vs_artifacts
 
     root = lm_artifacts(spark, sf_dir)
-    _lm_split = lm_skew_split(sf_dir)
     out_dir = tempfile.mkdtemp(prefix="lm_gate_out_")
     seen: dict = {}
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        scored = lm_score_vs_artifacts(spark, batch_df, root,
-                                       skew_split=_lm_split)
+        scored = lm_score_vs_artifacts(spark, batch_df, root)
         seen["schema"] = scored.schema
         scored.write.mode("overwrite").parquet(
             f"{out_dir}/batch={batch_id}")
@@ -971,12 +931,10 @@ def stream_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ingest import assemble_verdicts, exact_gate
     from ..operators.similarity import (_read_codebook, ann_artifacts,
                                         ann_gate_vs_artifacts)
-    from ..operators.text import (lm_artifacts, lm_score_vs_artifacts,
-                                  lm_skew_split)
+    from ..operators.text import lm_artifacts, lm_score_vs_artifacts
 
     root_d = _index_artifacts(spark, sf_dir)
     root_lm = lm_artifacts(spark, sf_dir)
-    _lm_split = lm_skew_split(sf_dir)
     root_ann = ann_artifacts(spark, sf_dir)
     cents = _read_codebook(spark, root_ann)  # fixed per stream
     base_dg = spark.table(bucketed_digest_table(spark, sf_dir))
@@ -991,8 +949,7 @@ def stream_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch = batch_df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
         exact = exact_gate(batch, base_dg)
         near = near_tier_vs_artifacts(spark, batch, root_d)
-        lm = lm_score_vs_artifacts(spark, batch, root_lm,
-                                   skew_split=_lm_split)
+        lm = lm_score_vs_artifacts(spark, batch, root_lm)
         batch_vecs = emb.join(
             F.broadcast(batch.select(F.col("doc_id").alias("vec_id"))),
             "vec_id", "left_semi")
@@ -1062,15 +1019,13 @@ def stream_unified_ingest_gate(spark: SparkSession, sf_dir: str,
                                     assemble_verdicts, exact_gate)
     from ..operators.similarity import (_read_codebook, ann_artifacts,
                                         ann_gate_vs_artifacts)
-    from ..operators.text import (lm_artifacts, lm_score_vs_artifacts,
-                                  lm_skew_split)
+    from ..operators.text import lm_artifacts, lm_score_vs_artifacts
 
     # persisted text artifacts + fingerprint indexes, built before the
     # stream starts (production state, same as the batch gate)
     if not media_only:
         root_d = _index_artifacts(spark, sf_dir)
         root_lm = lm_artifacts(spark, sf_dir)
-        _lm_split = lm_skew_split(sf_dir)
         root_ann = ann_artifacts(spark, sf_dir)
         cents = _read_codebook(spark, root_ann)
         base_dg = spark.table(bucketed_digest_table(spark, sf_dir))
@@ -1127,8 +1082,7 @@ def stream_unified_ingest_gate(spark: SparkSession, sf_dir: str,
         if not docs.isEmpty():
             exact = exact_gate(docs, base_dg)
             near = near_tier_vs_artifacts(spark, docs, root_d)
-            lm = lm_score_vs_artifacts(spark, docs, root_lm,
-                                       skew_split=_lm_split)
+            lm = lm_score_vs_artifacts(spark, docs, root_lm)
             vecs = emb.join(
                 F.broadcast(docs.select(F.col("doc_id")
                                         .alias("vec_id"))),
@@ -1704,7 +1658,6 @@ def stream_ingest_loop(spark: SparkSession, sf_dir: str,
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(f"{work}/in/*"))
     _run_foreachbatch(spark, stream, process)
-    bloom.destroy()  # release the gate's executor-side bitmap, if any
     # end-of-stream sweep: the last trigger can leave >= COMPACT_EVERY
     # partitions behind (compaction is start-of-trigger-fenced and no
     # next trigger comes); the stream is finished so no retry can race
@@ -2051,7 +2004,6 @@ def stream_ingest_excise_loop(spark: SparkSession, sf_dir: str,
                                     num_bits=num_bits, k=old.k),
                 _write_excise_report)
             state["bloom"] = nb
-            old.destroy()
             # keep the cache live until the LM ledger write below has
             # consumed the decrement plans
             exc_cached = excs
@@ -2134,7 +2086,6 @@ def stream_ingest_excise_loop(spark: SparkSession, sf_dir: str,
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", 1).parquet(f"{work}/in/*"))
     _run_foreachbatch(spark, stream, process)
-    state["bloom"].destroy()
     # end-of-stream sweep (see stream_ingest_loop): fold any residual
     # >= COMPACT_EVERY tail the fenced start-of-trigger compaction
     # couldn't touch — the stream is done, so no retry can race it

@@ -1,7 +1,6 @@
-"""functions/bloom.py: build/probe correctness on BOTH physical probe
-paths, the saturation escape hatch, and the streaming dedup gate's
-scale shape (no corpus-derived broadcast, deterministic false-positive
-handling)."""
+"""functions/bloom.py: build/probe correctness, the saturation escape
+hatch, and the streaming dedup gate's scale shape (no corpus-derived
+broadcast, deterministic false-positive handling)."""
 
 from __future__ import annotations
 
@@ -29,15 +28,10 @@ def bloom_and_dfs(spark):
     return bloom_build(keys, "t"), keys, probe
 
 
-@pytest.mark.parametrize("literal_max_words", [4096, 0],
-                         ids=["jvm-literal", "broadcast-arrow"])
-def test_no_false_negatives_and_low_fp(spark, bloom_and_dfs,
-                                       literal_max_words):
+def test_no_false_negatives_and_low_fp(spark, bloom_and_dfs):
     bloom, _, probe = bloom_and_dfs
     out = probe.select(
-        "t", bloom_might_contain(bloom, F.col("t"),
-                                 literal_max_words=literal_max_words)
-        .alias("hit"))
+        "t", bloom_might_contain(bloom, F.col("t")).alias("hit"))
     member_hits = (out.filter(F.col("t").startswith("key-"))
                    .agg(F.sum(F.col("hit").cast("int"))).first()[0])
     assert member_hits == MEMBERS  # bloom guarantee: zero false negatives
@@ -45,16 +39,6 @@ def test_no_false_negatives_and_low_fp(spark, bloom_and_dfs,
            .agg(F.sum(F.col("hit").cast("int"))).first()[0])
     # sized at 16 bits/key, k=7 → ~0.2% expected; 2% is a loose x10 bound
     assert fps <= PROBES * 0.02, fps
-
-
-def test_probe_paths_agree_exactly(spark, bloom_and_dfs):
-    bloom, _, probe = bloom_and_dfs
-    jvm = probe.select("t", bloom_might_contain(
-        bloom, F.col("t"), literal_max_words=4096).alias("hit"))
-    py = probe.select("t", bloom_might_contain(
-        bloom, F.col("t"), literal_max_words=0).alias("hit"))
-    assert (sorted(map(tuple, jvm.collect()))
-            == sorted(map(tuple, py.collect())))
 
 
 def test_undersized_bloom_saturates(spark, bloom_and_dfs):
@@ -66,11 +50,10 @@ def test_undersized_bloom_saturates(spark, bloom_and_dfs):
         bloom_might_contain(bloom8, F.col("t"))).first()[0] is True
 
 
-def test_merge_from_is_union_and_reuses_one_broadcast(spark):
+def test_merge_from_is_union_and_rejects_other_universes(spark):
     """merge_from(other) must behave as the bloom of the UNION of key
-    sets (zero false negatives for both sides), and the large-bitmap
-    probe path must cache ONE broadcast per filter instance across
-    probes (the r8 ADVICE leak: a fresh sc.broadcast per probe call)."""
+    sets (zero false negatives for both sides), and refuse a bloom over
+    a different (num_bits, k) universe."""
     a = spark.createDataFrame([(f"a-{i}",) for i in range(50)], "t string")
     b = spark.createDataFrame([(f"b-{i}",) for i in range(50)], "t string")
     bits = 4096
@@ -79,34 +62,12 @@ def test_merge_from_is_union_and_reuses_one_broadcast(spark):
     bl.merge_from(delta)
     probe = a.unionByName(b)
     hits = probe.select(
-        bloom_might_contain(bl, F.col("t"), literal_max_words=0)
+        bloom_might_contain(bl, F.col("t"))
         .alias("h")).agg(F.sum(F.col("h").cast("int"))).first()[0]
     assert hits == 100  # no false negatives across the merged sets
-    bc1 = bl._broadcast()
-    probe.select(bloom_might_contain(bl, F.col("t"),
-                                     literal_max_words=0)).count()
-    assert bl._broadcast() is bc1  # probes reuse the instance broadcast
-    bl.merge_from(bloom_build(a, "t", num_bits=bits))
-    assert bl._bc is None  # merge invalidates the cached broadcast
-    bl.destroy()
-    assert bl._bc is None
 
-    import pytest as _pytest
-    with _pytest.raises(ValueError):
+    with pytest.raises(ValueError):
         bl.merge_from(bloom_build(a, "t", num_bits=128))
-
-
-def test_broadcast_probe_handles_empty_partitions(spark):
-    """Zero-row Arrow batches must not crash the numpy probe (r8
-    ADVICE: np.stack raises on an empty series). 32 partitions over 3
-    rows guarantees empty partitions reach the UDF."""
-    bl = bloom_build(
-        spark.createDataFrame([("x",)], "t string"), "t", num_bits=4096)
-    probe = spark.createDataFrame(
-        [("x",), ("y",), ("z",)], "t string").repartition(32)
-    out = probe.select(bloom_might_contain(
-        bl, F.col("t"), literal_max_words=0).alias("h"))
-    assert out.filter(F.col("h")).count() >= 1  # 'x' always hits
 
 
 def test_checksum_count_hashes_nested_maps(spark):
@@ -206,8 +167,8 @@ def test_ingest_admission_gate_index_side_never_shuffles(spark):
 def test_gate_streaming_plan_has_no_broadcast(spark):
     """The r7 verdict's weak item: nothing corpus-derived may broadcast.
     Assert on the REAL micro-batch executed plan — the bloom bitmap
-    travels as a plan literal / TorrentBroadcast variable, never as a
-    BroadcastExchange, and the verify join is a shuffled join."""
+    travels as a plan literal, never as a BroadcastExchange, and the
+    verify join is a shuffled join."""
     import big_data_science_project_spark.streaming.events as ev
 
     ev.stream_dedup_against_index(spark, _planted_docs_dir())
@@ -215,82 +176,3 @@ def test_gate_streaming_plan_has_no_broadcast(spark):
     assert "BroadcastExchange" not in plan, plan
     assert "BroadcastHashJoin" not in plan, plan
     assert ("ShuffledHashJoin" in plan) or ("SortMergeJoin" in plan), plan
-
-
-# ---------------------------------------------------------------------------
-# Sharded (split-block) bloom — the above-the-boundary form
-# ---------------------------------------------------------------------------
-def test_sharded_bloom_no_false_negatives_and_low_fp(spark):
-    from big_data_science_project_spark.functions.bloom import (
-        bloom_build_sharded, bloom_probe_sharded)
-
-    keys = spark.createDataFrame(
-        [(f"key-{i}",) for i in range(MEMBERS)], "t string")
-    probe = spark.createDataFrame(
-        [(f"key-{i}",) for i in range(MEMBERS)]
-        + [(f"absent-{i}",) for i in range(PROBES)], "t string")
-    sb = bloom_build_sharded(spark, keys, "t")
-    out = {r["t"]: r["hit"] for r in
-           bloom_probe_sharded(spark, sb, probe, "t", "hit").collect()}
-    assert all(out[f"key-{i}"] for i in range(MEMBERS)), \
-        "bloom false negative"
-    fps = sum(out[f"absent-{i}"] for i in range(PROBES))
-    # block blooms run ~0.4% fpp at 16 bits/key, k=4; allow 5x headroom
-    assert fps / PROBES < 0.02, f"fp rate {fps / PROBES:.4f}"
-
-
-def test_sharded_bloom_is_sparse_rows_scale_with_keys_not_bits(spark):
-    """The property that makes the sharded form safe past the
-    boundary: an oversized bit universe costs NOTHING (rows ∝ keys),
-    so there is no driver bitmap, no broadcast, and no reason to
-    undersize. 400 keys into a 2^35-bit universe → ≤ 400 block rows."""
-    from big_data_science_project_spark.functions.bloom import (
-        bloom_build_sharded)
-
-    keys = spark.createDataFrame(
-        [(f"key-{i}",) for i in range(MEMBERS)], "t string")
-    sb = bloom_build_sharded(spark, keys, "t", num_bits=1 << 35)
-    assert sb.num_words == (1 << 35) // 64
-    assert spark.table(sb.table).count() <= MEMBERS
-
-
-def test_sharded_probe_plan_shuffles_only_batch_side(spark):
-    """r9 verdict item 2(c): the sharded probe must exchange ONLY the
-    batch side — the block table reads in place from its bucketed
-    layout, and nothing broadcasts."""
-    import re
-
-    from big_data_science_project_spark.functions.bloom import (
-        bloom_build_sharded, bloom_probe_sharded)
-
-    keys = spark.createDataFrame(
-        [(f"key-{i}",) for i in range(MEMBERS)], "t string")
-    batch = spark.createDataFrame(
-        [("key-1",), ("nope-1",), ("nope-2",)], "t string")
-    sb = bloom_build_sharded(spark, keys, "t")
-    out = bloom_probe_sharded(spark, sb, batch, "t", "hit")
-    out.count()  # finalize the adaptive plan
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Bucketed: true" in plan, plan
-    assert "BroadcastExchange" not in plan, plan
-    # exactly one hash exchange: the batch side moving into the block
-    # table's bucketing — the block side contributes none
-    assert len(re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
-    assert "SortMergeJoin" in plan, plan
-
-
-def test_stream_dedup_gate_sharded_path_matches_broadcast_path(spark):
-    """r9 verdict item 2(d): stream_dedup_against_index flips to the
-    sharded gate above BLOOM_BROADCAST_MAX_BITS and must produce the
-    identical report (the oracle doesn't know which gate ran)."""
-    from big_data_science_project_spark.functions.bloom import (
-        BLOOM_BROADCAST_MAX_BITS)
-    from big_data_science_project_spark.streaming.events import (
-        stream_dedup_against_index)
-
-    sf = "/root/testdata/sf0.001"
-    base = {tuple(r) for r in
-            stream_dedup_against_index(spark, sf).collect()}
-    sharded = {tuple(r) for r in stream_dedup_against_index(
-        spark, sf, bloom_bits=BLOOM_BROADCAST_MAX_BITS + 64).collect()}
-    assert base == sharded and len(base) > 0

@@ -359,16 +359,3 @@ def test_morph_close_fills_gap_and_is_idempotent_on_solid():
     solid[6:14, 6:14] = 255
     again = K._morph_close_np(solid, (3, 3))
     assert np.array_equal(again >= 255, solid >= 255)
-
-
-def test_threshold_mask_udf_uses_dispatcher(spark):
-    """The pandas-UDF plumbing yields the dispatcher's exact pixels."""
-    from big_data_science_project_spark.sources.cells import _gen_image
-
-    data, _ = _gen_image(3, 1, 16, 16)
-    df = spark.createDataFrame(
-        [(data.tolist(), 16, 16)], "data_ch array<double>, width int, height int")
-    udf = K.make_threshold_mask_udf(100.0, 300.0)
-    got = df.select(udf("data_ch", "width", "height").alias("m")).first()["m"]
-    want = K.canny_mask_np(data.reshape(16, 16), 100.0, 300.0).reshape(-1).tolist()
-    assert got == want

@@ -600,10 +600,10 @@ def test_gate_votes_land_at_true_offsets(spark):
 
 
 def test_gate_fingerprint_join_shuffles_only_batch_side(spark):
-    """The gates' scale claim, plan-pinned (the sharded-bloom idiom):
-    the persisted fingerprint index reads IN PLACE from its bucketed
-    layout — the votes join exchanges only the batch side's hashes, so
-    per-batch cost is independent of index growth."""
+    """The gates' scale claim, plan-pinned: the persisted fingerprint
+    index reads IN PLACE from its bucketed layout — the votes join
+    exchanges only the batch side's hashes, so per-batch cost is
+    independent of index growth."""
     import re
 
     import big_data_science_project_spark.operators.multimodal as MM

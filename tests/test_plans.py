@@ -58,6 +58,14 @@ def test_q05_dimension_broadcasts(spark):
     assert "CartesianProduct" not in formatted_plan(df)
 
 
+def test_q24_percentiles_are_exact(spark):
+    """q24 carries the exact `percentile` aggregate and no sketch (the
+    sketch is q52's own query)."""
+    plan = formatted_plan(QUERIES["q24_percentiles"](spark, SF))
+    assert "percentile(" in plan
+    assert "approx_percentile" not in plan
+
+
 def test_q17_stats_join_is_broadcast(spark):
     # the 3-row stats table must never shuffle the fact side
     assert broadcast_join_count(QUERIES["q17_outlier_votes"](spark, SF)) >= 1

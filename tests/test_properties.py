@@ -383,15 +383,11 @@ def test_kmeans_lloyd_matches_local_mirror(spark):
     assert got == want
 
 
-def test_lloyd_assign_inline_and_kernel_paths_agree(spark):
-    """_lloyd_assign is size-gated: codebooks up to
-    _LLOYD_INLINE_MAX_CELLS literal cells assign through the inline
-    array_min expression, larger ones through the Arrow int64 kernel.
-    Both are exact integer arithmetic, so they must agree on every
-    (d, cid) — pin it on a codebook straddling the gate (the same
-    points assigned under a forced-inline and a forced-kernel run),
-    including a crafted equidistant tie that must break to the LOWER
-    cid on both paths."""
+def test_lloyd_assign_matches_numpy_and_ties_to_lower_cid(spark):
+    """_lloyd_assign's inline array_min expression is exact integer
+    arithmetic: every (d, cid) equals a numpy argmin over the same
+    codebook, including a crafted equidistant tie that must break to
+    the LOWER cid, and the cid field is BIGINT."""
     import numpy as np
 
     from big_data_science_project_spark.operators import linear as L
@@ -408,28 +404,20 @@ def test_lloyd_assign_inline_and_kernel_paths_agree(spark):
     cents[9] = list(pts[0][1])
     df = spark.createDataFrame(pts, "vec_id bigint, em array<bigint>")
 
-    orig = L._LLOYD_INLINE_MAX_CELLS
-    try:
-        L._LLOYD_INLINE_MAX_CELLS = 10 ** 9  # force inline literals
-        inline_df = L._lloyd_assign(df, cents)
-        inline = {r["vec_id"]: (r["best"]["d"], r["best"]["cid"])
-                  for r in inline_df.collect()}
-        L._LLOYD_INLINE_MAX_CELLS = 0        # force the Arrow kernel
-        kernel_df = L._lloyd_assign(df, cents)
-        kernel = {r["vec_id"]: (r["best"]["d"], r["best"]["cid"])
-                  for r in kernel_df.collect()}
-    finally:
-        L._LLOYD_INLINE_MAX_CELLS = orig
-    assert inline == kernel
-    assert inline[0] == (0, 3)  # tie broke to the lower cid
-    # the declared TYPES must not depend on the gate either: a
-    # full-width checksum hashes int32 and int64 differently even when
-    # every value prints the same (r14 "latent blemish"). Nullability
-    # legitimately differs (pandas_udf outputs are always nullable);
-    # simpleString compares exactly the type widths a checksum hashes.
-    assert (inline_df.schema.simpleString()
-            == kernel_df.schema.simpleString())
-    assert (inline_df.schema["best"].dataType["cid"].dataType
+    out = L._lloyd_assign(df, cents)
+    got = {r["vec_id"]: (r["best"]["d"], r["best"]["cid"])
+           for r in out.collect()}
+    cmat = np.asarray([cents[c] for c in range(20)], dtype=np.int64)
+    want = {}
+    for vid, em in pts:
+        d = ((np.asarray(em, dtype=np.int64) - cmat) ** 2).sum(axis=1)
+        j = int(d.argmin())  # first minimum: the lower cid
+        want[vid] = (int(d[j]), j)
+    assert got == want
+    assert got[0] == (0, 3)  # tie broke to the lower cid
+    # a full-width checksum hashes int32 and int64 differently even
+    # when every value prints the same
+    assert (out.schema["best"].dataType["cid"].dataType
             .simpleString() == "bigint")
 
 
@@ -953,49 +941,6 @@ def test_lm_refresh_equals_full_retrain_and_learns_new_language(spark):
     assert fresh[8] < stale[8], (fresh, stale)  # xx learned
 
 
-def test_lm_hot_history_split_changes_no_values(spark, lm_planted_dir):
-    """The Zipf-head/tail split of the c(w1) join (the r9 straggler
-    mitigation) is a PLAN change only: forcing every history key hot
-    (threshold 1) and every key cold (huge threshold) must produce
-    identical per-doc scores — the planted corpus exercises matched,
-    unmatched, and unindexed-language histories."""
-    from big_data_science_project_spark.operators.curation import _bucket
-    from big_data_science_project_spark.operators.dedup import INDEX_PCT
-    from big_data_science_project_spark.operators.text import (
-        _lm_tables, _score_against_lm)
-    from big_data_science_project_spark.sources.tables import load_table
-    from pyspark.sql import functions as F
-
-    d = load_table(spark, lm_planted_dir, "documents")
-    bk = _bucket(F.col("doc_id"))
-    parts = _lm_tables(d.filter(bk < INDEX_PCT))
-    batch = d.filter(bk >= INDEX_PCT)
-    import pytest
-
-    # the three disjoint branches (both-hot / history-hot / cold),
-    # each forced to carry EVERY row in turn, must score identically
-    # (r9 c1 split + r10 c12 split, one disjointness proof)
-    all_cold = sorted(map(tuple, _score_against_lm(
-        batch, *parts, hot_history=1 << 60,
-        hot_bigram=1 << 60).collect()))
-    hist_hot = sorted(map(tuple, _score_against_lm(
-        batch, *parts, hot_history=1, hot_bigram=1 << 60).collect()))
-    both_hot = sorted(map(tuple, _score_against_lm(
-        batch, *parts, hot_history=1, hot_bigram=1).collect()))
-    # r14 size gate: the PLAIN two-join form (skew_split=False, what
-    # every scoring site uses below LM_SKEW_SPLIT_MIN_BYTES of corpus)
-    # must also score identically — same counts reach every bigram
-    plain = sorted(map(tuple, _score_against_lm(
-        batch, *parts, skew_split=False).collect()))
-    assert plain == both_hot == hist_hot == all_cold
-    assert any(r[2] > 0 for r in all_cold)  # non-degenerate: bigrams scored
-    # a bigram threshold below the history threshold would route
-    # hot-history rows around the head broadcast — rejected loudly
-    with pytest.raises(ValueError, match="hot_bigram"):
-        _score_against_lm(batch, *parts,
-                          hot_history=1 << 60, hot_bigram=1)
-
-
 # ---------------------------------------------------------------------------
 # segmentation scoring: K9 confusion counts and the one-pass threshold grid
 # search, against numpy. The null rule: a pixel whose ground truth or
@@ -1078,10 +1023,11 @@ def test_grid_counts_match_numpy(spark, rows, grid):
     from pyspark.sql import functions as F
 
     from big_data_science_project_spark.operators.segmentation import (
-        _grid_counts, _per_channel)
+        _grid_counts)
+    from big_data_science_project_spark.sources.cells import per_channel
     grid = sorted(set(grid))
     got = {(r["image_id"], r["channel"]): r["c"].asDict() for r in
-           _per_channel(_cells_df(spark, rows)).select(
+           per_channel(_cells_df(spark, rows), "data", "mask").select(
                "image_id", "channel",
                _grid_counts(F.col("mask_ch"), F.col("data_ch"), grid)
                .alias("c")).collect()}

@@ -9,16 +9,15 @@ are executed and counted as rows_only.
 
 The three committed configs (regenerate all three after registry
 changes, then point README's selfcheck sentence at the new files). The
-default master is local[$SPARK_GRAFT_CPUS], local[32] when it is unset,
-so set it to the host's cores first:
+default master is local[N] with N from ``session.default_cpus()``:
+$SPARK_GRAFT_CPUS, else the CPUs this process may run on.
 
-  export SPARK_GRAFT_CPUS=4
   python tools/selfcheck.py --sf /root/testdata/sf0.01 \
-      --out SELFCHECK_r19.json
+      --out SELFCHECK_r20.json
   python tools/selfcheck.py --sf /root/testdata/sf0.1 \
-      --out SELFCHECK_r19_sf01.json
+      --out SELFCHECK_r20_sf01.json
   python tools/selfcheck.py --sf /root/testdata/sf0.01 --master local[3] \
-      --shuffle-partitions 5 --out SELFCHECK_r19_altpartition.json
+      --shuffle-partitions 5 --out SELFCHECK_r20_altpartition.json
 """
 
 from __future__ import annotations
@@ -60,10 +59,12 @@ def _normalize(rows, colnames):
 
 
 def main() -> None:
+    from big_data_science_project_spark.session import (default_cpus,
+                                                         default_driver_memory)
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
-    ap.add_argument("--master",
-                    default=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    ap.add_argument("--master", default=f"local[{default_cpus()}]")
     ap.add_argument("--shuffle-partitions", default="32")
     ap.add_argument("--out", required=True)
     ap.add_argument("names", nargs="*",
@@ -73,7 +74,6 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
-    from big_data_science_project_spark.session import default_driver_memory
     spark = (SparkSession.builder.master(args.master)
              .config("spark.sql.shuffle.partitions", args.shuffle_partitions)
              .config("spark.sql.adaptive.enabled", "true")
