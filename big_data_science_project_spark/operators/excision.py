@@ -85,14 +85,15 @@ def _doc_excised() -> F.Column:
 
 
 def excised_artifacts(spark: SparkSession, sf_dir: str) -> str:
-    """Write-once excised copies of every artifact family (shared
-    lifecycle — sources/tables.write_once_artifacts)."""
-    from ..sources.tables import write_once_artifacts
+    """Excised copies of every artifact family, written once per
+    (session, sf_dir) into a session scratch dir."""
+    from ..session import memo, scratch_dir
     from .dedup import _index_artifacts
     from .similarity import ann_artifacts
     from .text import _lm_tables, _wdoc_counts, lm_artifacts
 
-    def build(root: str) -> None:
+    def build() -> str:
+        root = scratch_dir(spark, "excised_")
         dd_root = _index_artifacts(spark, sf_dir)
         lm_root = lm_artifacts(spark, sf_dir)
         an_root = ann_artifacts(spark, sf_dir)
@@ -156,9 +157,9 @@ def excised_artifacts(spark: SparkSession, sf_dir: str) -> str:
          .filter(~F.expr(_EXC_VEC_SQL))
          .write.mode("overwrite").partitionBy("centroid_id")
          .parquet(f"{root}/assigned"))
+        return root
 
-    return write_once_artifacts(spark, "_bdsp_excised", sf_dir,
-                                "excised_", build)
+    return memo(spark, ("excised", sf_dir), build)
 
 
 def _fam(name: str, before: DataFrame, after: DataFrame,

@@ -1157,16 +1157,17 @@ QUERIES["ml_adaboost_stumps"] = (ml_adaboost_stumps, _adaboost_sql())
 # excision family uses (fourth use).
 # ---------------------------------------------------------------------------
 def _adaboost_artifacts(spark: SparkSession, sf_dir: str) -> str:
-    from ..sources.tables import write_once_artifacts
+    from ..session import memo, scratch_dir
 
-    def build(root: str) -> None:
+    def build() -> str:
+        root = scratch_dir(spark, "adaboost_model_")
         stumps, _ = _adaboost_train(spark, sf_dir, report=False)
         (spark.createDataFrame(
             stumps, "round int, j int, t bigint, p int, alpha_micro bigint")
          .coalesce(1).write.mode("overwrite").parquet(f"{root}/stumps"))
+        return root
 
-    return write_once_artifacts(spark, "_bdsp_adaboost_model", sf_dir,
-                                "adaboost_model_", build)
+    return memo(spark, ("adaboost_model", sf_dir), build)
 
 
 def ml_adaboost_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -289,10 +289,10 @@ def export_payloads(encoded: DataFrame, base_dir: str) -> DataFrame:
 
 
 def multimodal_export(spark: SparkSession, sf_dir: str = "") -> DataFrame:
-    import tempfile
+    from ..session import scratch_dir
 
     enc = encode_cells(load_cells(spark, n_images=32))
-    base = tempfile.mkdtemp(prefix="payload_export_")
+    base = scratch_dir(spark, "payload_export_")
     written = export_payloads(enc, base)
     return written.agg(
         F.sum("n_files").alias("n_files"),
@@ -326,9 +326,9 @@ def _png_encode_gray(data_ch: pd.Series, width: pd.Series,
 
 def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     import os
-    import tempfile
 
     from ..functions.image_kernels import channel_slice
+    from ..session import scratch_dir
 
     n_images = 32
     cells = load_cells(spark, n_images=n_images)
@@ -340,7 +340,7 @@ def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str = "") -> DataFrame
         "image_id",
         _png_encode_gray("data_ch", "width", "height").alias("payload"))
 
-    base = tempfile.mkdtemp(prefix="png_export_")
+    base = scratch_dir(spark, "png_export_")
     schema = T.StructType([
         T.StructField("image_id", T.LongType()),
         T.StructField("path", T.StringType()),
@@ -1473,11 +1473,12 @@ def _fp_digest_extract(gen):
 def audio_fp_artifacts(spark: SparkSession, sf_dir: str) -> str:
     """Write-once audio fingerprint index (digests + BUILD-TIME-capped
     landmarks) over the base corpus clips — the persisted state the
-    ingest gate screens against (write_once_artifacts lifecycle, like
-    the dedup index and LM tables)."""
-    from ..sources.tables import write_once_artifacts
+    ingest gate screens against (written once per session, like the
+    dedup index and LM tables)."""
+    from ..session import memo, scratch_dir
 
-    def build(root: str) -> None:
+    def build() -> str:
+        root = scratch_dir(spark, "audiofp_")
         clips = spark.createDataFrame(
             [(i,) for i in range(AUDIO_FP_CLIPS)], "clip_id long") \
             .repartition(8, "clip_id")
@@ -1490,17 +1491,18 @@ def audio_fp_artifacts(spark: SparkSession, sf_dir: str) -> str:
         clips.mapInPandas(_fp_digest_extract(_gen_chirp), _FP_DG_SCHEMA) \
             .write.mode("overwrite").parquet(f"{root}/digests")
         lm.unpersist()
+        return root
 
-    return write_once_artifacts(spark, "_bdsp_audio_fp", sf_dir,
-                                "audiofp_", build)
+    return memo(spark, ("audio_fp", sf_dir), build)
 
 
 def video_fp_artifacts(spark: SparkSession, sf_dir: str) -> str:
     """Write-once video fingerprint index (digests + capped frame
     hashes) — the video twin of ``audio_fp_artifacts``."""
-    from ..sources.tables import write_once_artifacts
+    from ..session import memo, scratch_dir
 
-    def build(root: str) -> None:
+    def build() -> str:
+        root = scratch_dir(spark, "videofp_")
         clips = spark.createDataFrame(
             [(i,) for i in range(VIDEO_FP_CLIPS)], "clip_id long") \
             .repartition(8, "clip_id")
@@ -1513,9 +1515,9 @@ def video_fp_artifacts(spark: SparkSession, sf_dir: str) -> str:
                           _FP_DG_SCHEMA) \
             .write.mode("overwrite").parquet(f"{root}/digests")
         fh.unpersist()
+        return root
 
-    return write_once_artifacts(spark, "_bdsp_video_fp", sf_dir,
-                                "videofp_", build)
+    return memo(spark, ("video_fp", sf_dir), build)
 
 
 # gate batch plants — id space disjoint from the dedup fixtures' clones

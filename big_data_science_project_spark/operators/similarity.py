@@ -1127,7 +1127,7 @@ def ann_recall_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("recall_pct")))
 
 
-def _sweep_sql() -> str:
+def _ann_recall_sweep_sql() -> str:
     q = QUERY_VEC_ID
     cos = _COS_SQL_TEMPLATE
     lsh_ctes, ivf_ctes, rows = [], [], []
@@ -1255,7 +1255,7 @@ FROM rows_u r, corpus c
 """
 
 
-QUERIES["ann_recall_sweep"] = (ann_recall_sweep, _sweep_sql())
+QUERIES["ann_recall_sweep"] = (ann_recall_sweep, _ann_recall_sweep_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -1734,11 +1734,11 @@ QUERIES["ann_incremental_assign"] = (ann_incremental_assign,
 # stores the trained doubles exactly).
 # ---------------------------------------------------------------------------
 def ann_artifacts(spark: SparkSession, sf_dir: str) -> str:
-    """Write-once per (session, sf_dir) via the shared artifact
-    lifecycle (sources/tables.write_once_artifacts)."""
-    from ..sources.tables import write_once_artifacts
+    """Written once per (session, sf_dir) into a session scratch dir."""
+    from ..session import memo, scratch_dir
 
-    def build(root: str) -> None:
+    def build() -> str:
+        root = scratch_dir(spark, "ann_index_")
         e = load_table(spark, sf_dir, "embeddings")
         cids, cmat, cn = _train_index_centroids(e)
         spark.createDataFrame(
@@ -1750,9 +1750,9 @@ def ann_artifacts(spark: SparkSession, sf_dir: str) -> str:
         (_assign_centroids(idx, (cids, cmat, cn))
          .write.mode("overwrite").partitionBy("centroid_id")
          .parquet(f"{root}/assigned"))
+        return root
 
-    return write_once_artifacts(spark, "_bdsp_ann_index", sf_dir,
-                                "ann_index_", build)
+    return memo(spark, ("ann_index", sf_dir), build)
 
 
 def _read_codebook(spark: SparkSession, root: str):

@@ -1296,11 +1296,12 @@ def lm_artifacts(spark: SparkSession, sf_dir: str) -> str:
     ``_index_artifacts``, on the shared write-once lifecycle: the LM
     trains once over the existing corpus and every ingest re-reads the
     tables instead of re-counting."""
-    from ..sources.tables import write_once_artifacts
+    from ..session import memo, scratch_dir
     from .curation import _bucket
     from .dedup import INDEX_PCT
 
-    def build(root: str) -> None:
+    def build() -> str:
+        root = scratch_dir(spark, "lm_artifacts_")
         idx = (load_table(spark, sf_dir, "documents")
                .filter(_bucket(F.col("doc_id")) < INDEX_PCT))
         c12, c1, vocab, gvocab = _lm_tables(idx)
@@ -1319,9 +1320,9 @@ def lm_artifacts(spark: SparkSession, sf_dir: str) -> str:
         # sizes re-derive as row counts per lang, the global vocab as
         # COUNT(DISTINCT w) over the vocab-sized table.
         _wdoc_counts(idx).write.mode("overwrite").parquet(f"{root}/wdoc")
+        return root
 
-    return write_once_artifacts(spark, "_bdsp_lm_artifacts", sf_dir,
-                                "lm_artifacts_", build)
+    return memo(spark, ("lm_artifacts", sf_dir), build)
 
 
 def lm_score_vs_artifacts(spark: SparkSession, batch: DataFrame,

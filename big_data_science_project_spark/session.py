@@ -10,11 +10,17 @@ Here one factory pins the settings every operator relies on:
   a pickled row loop like the reference's ``df.rdd.map`` path.
 - UTC session timezone — parquet timestamps compare identically across
   engines (DuckDB oracle parity).
+
+It also owns what a session holds between queries: ``memo``,
+``scratch_dir`` and ``release``.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import tempfile
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
 
@@ -71,3 +77,46 @@ def get_spark(app_name: str = "big_data_science_project_spark",
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _memo(spark: SparkSession) -> dict:
+    return vars(spark).setdefault("_bdsp_memo", {})
+
+
+def memo(spark: SparkSession, key, build):
+    """``build()``'s value, computed once per (session, ``key``) until
+    ``release``. Keyed on the session instance, so a new driver-supplied
+    session starts clean."""
+    d = _memo(spark)
+    if key not in d:
+        d[key] = build()
+    return d[key]
+
+
+def scratch_dir(spark: SparkSession, prefix: str) -> str:
+    """A fresh directory under the session's scratch root, which is
+    created on first use and deleted by ``release``."""
+    root = memo(spark, "scratch_root",
+                lambda: tempfile.mkdtemp(prefix="bdsp_session_"))
+    return tempfile.mkdtemp(prefix=prefix, dir=root)
+
+
+def release(spark: SparkSession) -> None:
+    """Free what the session holds: uncache every cached plan, drop the
+    catalog tables stored under the scratch root, delete the root and
+    forget every memoized value. DataFrames built before the call that
+    read from the root are invalid after it; build them again."""
+    spark.catalog.clearCache()
+    d = _memo(spark)
+    root = d.get("scratch_root")
+    if root is not None:
+        for t in spark.catalog.listTables():
+            if t.isTemporary:
+                continue
+            loc = next((r.data_type for r in spark.sql(
+                f"DESCRIBE TABLE EXTENDED `{t.name}`").collect()
+                if r.col_name == "Location"), "")
+            if urlparse(loc).path.startswith(root + os.sep):
+                spark.sql(f"DROP TABLE `{t.name}`")
+        shutil.rmtree(root, ignore_errors=True)
+    d.clear()

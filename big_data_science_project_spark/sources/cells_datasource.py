@@ -35,8 +35,6 @@ import glob
 import io
 import json
 import os
-import shutil
-import tempfile
 import time
 import uuid
 from dataclasses import dataclass
@@ -55,6 +53,7 @@ from pyspark.sql.datasource import (DataSource, DataSourceReader,
                                     WriterCommitMessage)
 from pyspark.sql.types import StructType
 
+from ..session import scratch_dir
 from .cells import (CELLS_SCHEMA, DEFAULT_C, DEFAULT_H, DEFAULT_N, DEFAULT_W,
                     _gen_image, per_channel, per_channel_mask_rollup,
                     rollup_oracle_sql, select_channels)
@@ -465,7 +464,7 @@ def cells_stream_sink(spark, sf_dir: str = ""):
 
     register(spark)
     n_images = 120
-    out = tempfile.mkdtemp(prefix="cells_ssink_")
+    out = scratch_dir(spark, "cells_ssink_")
     stream = (spark.readStream.format("cells")
               .option("imagelimit", n_images)
               .option("numpartitions", 4).option("streambatch", 40).load())
@@ -485,13 +484,10 @@ def cells_stream_sink(spark, sf_dir: str = ""):
     # stream needs repeated triggers (availableNow would bound itself to
     # the first latestOffset) — same drain pattern as cells_stream_scan
     with contextlib.ExitStack() as stack:
-        ckpt = stack.enter_context(_scratch_checkpoint())
-        if not ckpt:  # no /dev/shm: own the fallback dir's cleanup too
-            ckpt = tempfile.mkdtemp(prefix="ck_")
-            stack.callback(shutil.rmtree, ckpt, True)
-        writer = (stream.writeStream.format("cells").option("path", out)
-                  .option("checkpointLocation", ckpt))
-        q = writer.trigger(processingTime="0 seconds").start()
+        ckpt = stack.enter_context(_scratch_checkpoint(spark))
+        q = (stream.writeStream.format("cells").option("path", out)
+             .option("checkpointLocation", ckpt)
+             .trigger(processingTime="0 seconds").start())
         stack.callback(q.awaitTermination)
         stack.callback(q.stop)
         deadline = time.time() + 120
@@ -514,7 +510,7 @@ def _write_source(spark, n_images: int, numpartitions: int) -> str:
     """Write the first ``n_images`` source images through the cells sink
     (one container per partition) into a fresh directory; return it."""
     register(spark)
-    out = tempfile.mkdtemp(prefix="cells_dsw_")
+    out = scratch_dir(spark, "cells_dsw_")
     (spark.read.format("cells").option("n_images", n_images)
      .option("numpartitions", numpartitions).load()
      .write.format("cells").option("path", out).mode("append").save())
@@ -561,7 +557,7 @@ def cells_snapshot_timetravel(spark, sf_dir: str = ""):
     the latest read sees both. Output: one row per snapshot with its
     row count and id bounds."""
     register(spark)
-    out = tempfile.mkdtemp(prefix="cells_tt_")
+    out = scratch_dir(spark, "cells_tt_")
     first = (spark.read.format("cells")
              .option("imagelimit", 10).option("numpartitions", 2).load())
     second = (spark.read.format("cells")
@@ -640,12 +636,10 @@ def cells_stream_scan(spark, sf_dir: str = ""):
     # writer construction or start() raises, and the query is always
     # stopped before the checkpoint teardown
     with contextlib.ExitStack() as stack:
-        ckpt = stack.enter_context(_scratch_checkpoint())
-        writer = (per_ch.writeStream.format("memory").queryName(name)
-                  .outputMode("append"))
-        if ckpt:
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.trigger(processingTime="0 seconds").start()
+        ckpt = stack.enter_context(_scratch_checkpoint(spark))
+        q = (per_ch.writeStream.format("memory").queryName(name)
+             .outputMode("append").option("checkpointLocation", ckpt)
+             .trigger(processingTime="0 seconds").start())
         stack.callback(q.awaitTermination)
         stack.callback(q.stop)
         deadline = time.time() + 120
@@ -707,14 +701,10 @@ def cells_binary_stream_scan(spark, sf_dir: str = ""):
 
     name = "stream_result_cells_containers"
     spark.catalog.dropTempView(name)
-    with contextlib.ExitStack() as stack:
-        ckpt = stack.enter_context(_scratch_checkpoint())
-        writer = (per_ch.writeStream.format("memory").queryName(name)
-                  .outputMode("append"))
-        if ckpt:
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.trigger(availableNow=True).start()
-        stack.callback(q.awaitTermination)
+    with _scratch_checkpoint(spark) as ckpt:
+        (per_ch.writeStream.format("memory").queryName(name)
+         .outputMode("append").option("checkpointLocation", ckpt)
+         .trigger(availableNow=True).start().awaitTermination())
     got = spark.table(name).count()
     expected = 120 * 2
     if got < expected:

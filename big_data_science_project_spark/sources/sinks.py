@@ -20,25 +20,20 @@ Scale notes baked into the shapes:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.numeric import dsum, dsum_expr
+from ..session import memo, scratch_dir
 from .tables import load_table
 
 QUERIES: dict = {}
 
-_scratch: dict[str, str] = {}
 
-
-def _dir(tag: str, sf_dir: str) -> str:
-    key = f"{tag}:{sf_dir}"
-    if key not in _scratch:
-        _scratch[key] = os.path.join(
-            tempfile.mkdtemp(prefix=f"sink_{tag}_"), "out")
-    return _scratch[key]
+def _dir(spark: SparkSession, tag: str, sf_dir: str) -> str:
+    return memo(spark, ("sink", tag, sf_dir), lambda: os.path.join(
+        scratch_dir(spark, f"sink_{tag}_"), "out"))
 
 
 # ---------------------------------------------------------------------------
@@ -51,7 +46,7 @@ def sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(dsum("o_totalprice", "revenue"),
              F.count(F.lit(1)).alias("n_orders"))
     )
-    path = _dir("csv", sf_dir)
+    path = _dir(spark, "csv", sf_dir)
     result.write.mode("overwrite").option("header", True).csv(path)
     return spark.read.schema("yr int, revenue double, n_orders bigint") \
                 .option("header", True).csv(path)
@@ -78,7 +73,7 @@ def sink_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n_customers"),
              dsum("c_acctbal", "total_acctbal"))
     )
-    path = _dir("json", sf_dir)
+    path = _dir(spark, "json", sf_dir)
     result.write.mode("overwrite").json(path)
     return spark.read.schema(
         "n_name string, n_customers bigint, total_acctbal double").json(path)
@@ -100,7 +95,7 @@ GROUP BY n.n_name
 # ---------------------------------------------------------------------------
 def sink_parquet_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    path = _dir("parq", sf_dir)
+    path = _dir(spark, "parq", sf_dir)
     if not os.path.isdir(path):  # write once per (format, sf) — reads repeat
         (o.select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
          .write.mode("overwrite").partitionBy("o_orderpriority").parquet(path))
@@ -145,13 +140,13 @@ def _ensure_bucketed(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
          .select("l_orderkey", "l_extendedprice", "l_discount")
          .write.bucketBy(N_BUCKETS, "l_orderkey").sortBy("l_orderkey")
          # external-table path: never write into the caller's cwd warehouse
-         .option("path", _dir(f"bkt_li_{tag}", sf_dir))
+         .option("path", _dir(spark, f"bkt_li_{tag}", sf_dir))
          .mode("overwrite").saveAsTable(li_tbl))
     if o_tbl not in existing:
         (load_table(spark, sf_dir, "orders")
          .select("o_orderkey", "o_orderpriority")
          .write.bucketBy(N_BUCKETS, "o_orderkey").sortBy("o_orderkey")
-         .option("path", _dir(f"bkt_o_{tag}", sf_dir))
+         .option("path", _dir(spark, f"bkt_o_{tag}", sf_dir))
          .mode("overwrite").saveAsTable(o_tbl))
     return li_tbl, o_tbl
 
@@ -194,7 +189,7 @@ N_RANGE_FILES = 8
 
 def sink_sorted_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    path = _dir("clustered", sf_dir)
+    path = _dir(spark, "clustered", sf_dir)
     if not os.path.isdir(path):  # write once per sf — reads repeat
         (li.select("l_orderkey", "l_extendedprice")
          .repartitionByRange(N_RANGE_FILES, "l_orderkey")
@@ -242,8 +237,8 @@ COMPACT_TARGET = 4
 def sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice")
-    frag = _dir("frag", sf_dir)
-    compact = _dir("compact", sf_dir)
+    frag = _dir(spark, "frag", sf_dir)
+    compact = _dir(spark, "compact", sf_dir)
     if not os.path.isdir(frag):  # write once per sf — reads repeat
         o.repartition(FRAG_FILES).write.mode("overwrite").parquet(frag)
     if not os.path.isdir(compact):
@@ -288,7 +283,7 @@ EVOLVE_SPLIT_KEY = 7500
 
 def sink_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    path = _dir("evolve", sf_dir)
+    path = _dir(spark, "evolve", sf_dir)
     if not os.path.isdir(path):  # write once per sf — reads repeat
         (o.filter(F.col("o_orderkey") < EVOLVE_SPLIT_KEY)
          .select("o_orderkey", "o_totalprice")
@@ -330,7 +325,7 @@ GROUP BY COALESCE(o_orderpriority, '<v1>')
 def sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice", "o_orderpriority")
-    path = _dir("dynover", sf_dir)
+    path = _dir(spark, "dynover", sf_dir)
     if not os.path.isdir(path):
         o.write.mode("overwrite").partitionBy("o_orderpriority").parquet(path)
         urgent_half = (o.filter((F.col("o_orderpriority") == "1-URGENT")
@@ -392,7 +387,7 @@ def _norm_grid(col, lo: int, hi: int):
 def sink_zorder_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_extendedprice")
-    path = _dir("zorder", sf_dir)
+    path = _dir(spark, "zorder", sf_dir)
     if not os.path.isdir(path):  # write once per sf — reads repeat
         lo_o, hi_o, lo_p, hi_p = li.agg(
             F.min("l_orderkey"), F.max("l_orderkey"),
@@ -433,7 +428,7 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"),
              dsum("l_extendedprice", "total_price"),
              F.max(F.col("l_shipdate").cast("date")).alias("last_ship")))
-    path = _dir("orc", sf_dir)
+    path = _dir(spark, "orc", sf_dir)
     result.write.mode("overwrite").orc(path)
     return spark.read.orc(path)
 

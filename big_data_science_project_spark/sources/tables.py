@@ -14,6 +14,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..session import memo
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -46,16 +48,18 @@ def configure_reads(spark: SparkSession) -> None:
     all; inferTimestampNTZ=false keeps tz-less parquet timestamps as
     instants (TIMESTAMP) so event-time ops (unix_micros, watermarks,
     window()) behave identically across writer generations."""
-    if getattr(spark, "_bdsp_reads_configured", False):
-        return
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-    # Pin the session timezone: the NTZ→TIMESTAMP fallback cast in
-    # normalize_event_ts and string rendering of event-time results are only
-    # oracle-exact (DuckDB runs in UTC) when the Spark session is UTC too —
-    # a driver-supplied session may carry any local zone.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark._bdsp_reads_configured = True
+    def configure() -> None:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled",
+                       "false")
+        # Pin the session timezone: the NTZ→TIMESTAMP fallback cast in
+        # normalize_event_ts and string rendering of event-time results
+        # are only oracle-exact (DuckDB runs in UTC) when the Spark
+        # session is UTC too — a driver-supplied session may carry any
+        # local zone.
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+    memo(spark, "reads_configured", configure)
 
 
 def literal_table(spark: SparkSession, rows: list[tuple],
@@ -73,44 +77,15 @@ def literal_table(spark: SparkSession, rows: list[tuple],
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Driver-side PLAN cache (not a data cache): the returned DataFrame is
+    """Driver-side PLAN memo (not a data cache): the returned DataFrame is
     an immutable logical plan, so each (session, dir, table) needs exactly
     one ``spark.read.parquet`` — repeated construction otherwise re-lists
     the path and re-reads parquet footers on the driver for every query,
-    pure per-query latency. Keyed on the session instance so a new
-    driver-supplied session starts clean; fixtures are read-only, so no
-    invalidation is needed."""
+    pure per-query latency. Fixtures are read-only, so no invalidation is
+    needed."""
     configure_reads(spark)
-    cache = getattr(spark, "_bdsp_table_cache", None)
-    if cache is None:
-        cache = {}
-        spark._bdsp_table_cache = cache
-    key = (sf_dir, name)
-    if key not in cache:
-        cache[key] = normalize_event_ts(
-            spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return cache[key]
-
-
-def write_once_artifacts(spark: SparkSession, cache_attr: str,
-                         sf_dir: str, prefix: str, build) -> str:
-    """Session-cached write-once artifact lifecycle shared by every
-    persisted-derived-table family (the dedup index, the LM tables):
-    per (session, sf_dir), ``build(root)`` runs exactly once to
-    populate a scratch root, and every later call re-READS. Same
-    session-attribute pattern as load_table — fixtures are read-only so
-    no invalidation; a deployment points the root at durable storage."""
-    import tempfile
-
-    cache = getattr(spark, cache_attr, None)
-    if cache is None:
-        cache = {}
-        setattr(spark, cache_attr, cache)
-    if sf_dir not in cache:
-        root = tempfile.mkdtemp(prefix=prefix)
-        build(root)
-        cache[sf_dir] = root
-    return cache[sf_dir]
+    return memo(spark, ("table", sf_dir, name), lambda: normalize_event_ts(
+        spark.read.parquet(f"{sf_dir}/{name}.parquet")))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

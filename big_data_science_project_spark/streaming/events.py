@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import contextlib
 import os
+import shutil
 import tempfile
 
 from pyspark import StorageLevel
@@ -39,12 +40,10 @@ from pyspark.sql import functions as F
 from ..functions.numeric import davg, davg_expr, dsum, dsum_expr
 from ..operators.curation import _bucket, _bucket_sql
 from ..operators.dedup import INDEX_PCT
+from ..session import memo, scratch_dir
 from ..sources.tables import configure_reads, load_table, normalize_event_ts
 
 QUERIES: dict = {}
-
-_stage_dirs: dict[str, str] = {}
-_schema_cache: dict[str, object] = {}
 
 # the most recent drained StreamingQuery — plan tests read its
 # lastExecution to assert physical shape (e.g. no corpus-derived
@@ -76,31 +75,24 @@ def _state_partitions(spark: SparkSession):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _staged_dir(sf_dir: str, table: str = "events") -> str:
-    """The file stream source requires a directory; stage a symlink to the
-    fixture parquet in a temp dir (fixtures are read-only)."""
-    key = (table, sf_dir)
-    if key not in _stage_dirs:
-        d = tempfile.mkdtemp(prefix=f"{table}_stream_")
-        os.symlink(os.path.abspath(f"{sf_dir}/{table}.parquet"),
-                   os.path.join(d, f"{table}.parquet"))
-        _stage_dirs[key] = d
-    return _stage_dirs[key]
-
-
 def _stream_table(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
     """readStream over one staged fixture table — the shared staging +
-    schema-caching path for every file-stream source in this module.
-    Sets the read confs up front: a driver-supplied session that runs a
-    stream_* query FIRST would otherwise crash on TIMESTAMP(NANOS) /
-    TIMESTAMP_NTZ fixtures."""
+    schema-caching path for every file-stream source in this module. The
+    file stream source requires a directory, so a symlink to the fixture
+    parquet is staged in a scratch dir (fixtures are read-only). Sets the
+    read confs up front: a driver-supplied session that runs a stream_*
+    query FIRST would otherwise crash on TIMESTAMP(NANOS) / TIMESTAMP_NTZ
+    fixtures."""
     configure_reads(spark)
-    key = (table, sf_dir)
-    if key not in _schema_cache:
-        _schema_cache[key] = spark.read.parquet(
-            f"{sf_dir}/{table}.parquet").schema
-    return spark.readStream.schema(
-        _schema_cache[key]).parquet(_staged_dir(sf_dir, table))
+
+    def stage():
+        d = scratch_dir(spark, f"{table}_stream_")
+        os.symlink(os.path.abspath(f"{sf_dir}/{table}.parquet"),
+                   os.path.join(d, f"{table}.parquet"))
+        return spark.read.parquet(f"{sf_dir}/{table}.parquet").schema, d
+
+    schema, d = memo(spark, ("stream_stage", table, sf_dir), stage)
+    return spark.readStream.schema(schema).parquet(d)
 
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,7 +102,7 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @contextlib.contextmanager
-def _scratch_checkpoint():
+def _scratch_checkpoint(spark: SparkSession):
     """RAM-backed checkpoint dir for the short-lived availableNow runs:
     state-store and offset/commit-log fsyncs dominate micro-batch
     overhead on disk (~15% of wall here). These checkpoints are
@@ -118,15 +110,12 @@ def _scratch_checkpoint():
     the dir is deleted afterwards. A production deployment does the
     opposite: durable checkpoints on reliable shared storage, because
     there the checkpoint IS the exactly-once recovery state. Falls back
-    to Spark's default temp location when /dev/shm is absent."""
-    if not os.path.isdir("/dev/shm"):
-        yield None
-        return
-    d = tempfile.mkdtemp(prefix="ckpt_", dir="/dev/shm")
+    to a session scratch dir when /dev/shm is absent."""
+    d = (tempfile.mkdtemp(prefix="ckpt_", dir="/dev/shm")
+         if os.path.isdir("/dev/shm") else scratch_dir(spark, "ckpt_"))
     try:
         yield d
     finally:
-        import shutil
         shutil.rmtree(d, ignore_errors=True)
 
 
@@ -138,12 +127,11 @@ def _run_to_table(result: DataFrame, mode: str, tag: str) -> DataFrame:
     name = f"stream_result_{tag}"
     spark = result.sparkSession
     spark.catalog.dropTempView(name)
-    with _state_partitions(spark), _scratch_checkpoint() as ckpt:
-        writer = (result.writeStream.format("memory")
-                  .queryName(name).outputMode(mode))
-        if ckpt:
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.trigger(availableNow=True).start()
+    with _state_partitions(spark), _scratch_checkpoint(spark) as ckpt:
+        q = (result.writeStream.format("memory")
+             .queryName(name).outputMode(mode)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
         q.awaitTermination()
     global LAST_QUERY
     LAST_QUERY = q
@@ -348,25 +336,24 @@ GROUP BY p.event_id
 # Each batch emits the group's cumulative stats; the final per-user row is
 # the one with the largest n (max_by), which equals the batch-mode answer.
 # ---------------------------------------------------------------------------
-def _split_staged_dir(spark: SparkSession, sf_dir: str, n_files: int = 4) -> str:
-    key = f"split:{sf_dir}"
-    if key not in _stage_dirs:
-        d = tempfile.mkdtemp(prefix="events_split_")
+def _split_stream(spark: SparkSession, sf_dir: str,
+                  n_files: int = 4) -> DataFrame:
+    def stage():
+        d = scratch_dir(spark, "events_split_")
         load_table(spark, sf_dir, "events").repartition(n_files) \
             .write.mode("overwrite").parquet(d)
-        _stage_dirs[key] = d
-    return _stage_dirs[key]
+        return spark.read.parquet(d).schema, d
+
+    schema, d = memo(spark, ("stream_split", sf_dir), stage)
+    return (spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1).parquet(d))
 
 
 def stream_user_stats_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    d = _split_staged_dir(spark, sf_dir)
-    if d not in _schema_cache:
-        _schema_cache[d] = spark.read.parquet(d).schema
-    stream = (spark.readStream.schema(_schema_cache[d])
-              .option("maxFilesPerTrigger", 1).parquet(d))
+    stream = _split_stream(spark, sf_dir)
 
     out_schema = "user_id long, n long, cents long"
     state_schema = "n long, cents long"
@@ -454,7 +441,7 @@ GROUP BY user_id, session_id
 # ---------------------------------------------------------------------------
 def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _stream_events(spark, sf_dir)
-    outdir = tempfile.mkdtemp(prefix="events_febatch_")
+    outdir = scratch_dir(spark, "events_febatch_")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (batch_df.groupBy("event_type")
@@ -463,11 +450,10 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
          .withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(outdir))
 
-    with _state_partitions(spark), _scratch_checkpoint() as ckpt:
-        writer = ev.writeStream.foreachBatch(write_batch)
-        if ckpt:
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.trigger(availableNow=True).start()
+    with _state_partitions(spark), _scratch_checkpoint(spark) as ckpt:
+        q = (ev.writeStream.foreachBatch(write_batch)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
         q.awaitTermination()
     return (
         spark.read.parquet(outdir)
@@ -707,11 +693,10 @@ def _run_foreachbatch(spark: SparkSession, source: DataFrame,
     loop) — one place for the checkpoint/trigger/LAST_QUERY protocol
     instead of a per-site copy."""
     global LAST_QUERY
-    with _state_partitions(spark), _scratch_checkpoint() as ckpt:
-        writer = source.writeStream.foreachBatch(process)
-        if ckpt:
-            writer = writer.option("checkpointLocation", ckpt)
-        q = writer.trigger(availableNow=True).start()
+    with _state_partitions(spark), _scratch_checkpoint(spark) as ckpt:
+        q = (source.writeStream.foreachBatch(process)
+             .option("checkpointLocation", ckpt)
+             .trigger(availableNow=True).start())
         q.awaitTermination()
     LAST_QUERY = q
 
@@ -785,7 +770,7 @@ def stream_dedup_near_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import _index_artifacts, near_tier_vs_artifacts
 
     root = _index_artifacts(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="near_index_out_")
+    out_dir = scratch_dir(spark, "near_index_out_")
     seen: dict = {}
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -835,7 +820,7 @@ def stream_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.text import lm_artifacts, lm_score_vs_artifacts
 
     root = lm_artifacts(spark, sf_dir)
-    out_dir = tempfile.mkdtemp(prefix="lm_gate_out_")
+    out_dir = scratch_dir(spark, "lm_gate_out_")
     seen: dict = {}
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -879,7 +864,7 @@ def stream_ann_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     root = ann_artifacts(spark, sf_dir)
     cents = _read_codebook(spark, root)  # fixed per stream: read once
-    out_dir = tempfile.mkdtemp(prefix="ann_gate_out_")
+    out_dir = scratch_dir(spark, "ann_gate_out_")
     seen: dict = {}
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -939,7 +924,7 @@ def stream_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _read_codebook(spark, root_ann)  # fixed per stream
     base_dg = spark.table(bucketed_digest_table(spark, sf_dir))
     emb = load_table(spark, sf_dir, "embeddings")
-    out_dir = tempfile.mkdtemp(prefix="ingest_pipe_out_")
+    out_dir = scratch_dir(spark, "ingest_pipe_out_")
     seen: dict = {}
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -1061,7 +1046,7 @@ def stream_unified_ingest_gate(spark: SparkSession, sf_dir: str,
     mixed = (media_rows if media_only
              else text_rows.unionByName(media_rows))
 
-    work = tempfile.mkdtemp(prefix="unified_gate_")
+    work = scratch_dir(spark, "unified_gate_")
     out_dir = f"{work}/out"
     for j in range(2):
         p = f"{work}/in/f{j}"
@@ -1325,8 +1310,6 @@ def _recover_store(root: str) -> int:
     redone operation merge stale partial partitions into its own
     output. Complete generations are never deleted, so the fallback
     target always exists."""
-    import shutil
-
     g = _cur_gen(root)
     if os.path.isdir(root):
         for d in os.listdir(root):
@@ -1533,7 +1516,6 @@ def stream_ingest_loop(spark: SparkSession, sf_dir: str,
     dir is cleared first — without a checkpoint, already-processed
     files must not be re-admitted to the source (a checkpointed
     deployment gets that from the source's own log)."""
-    import shutil
     import time as _time
 
     from ..functions.bloom import BITS_PER_KEY, bloom_build
@@ -1541,7 +1523,7 @@ def stream_ingest_loop(spark: SparkSession, sf_dir: str,
 
     base_tbl = bucketed_digest_table(spark, sf_dir)
     base_dg = spark.table(base_tbl)
-    work = work_dir or tempfile.mkdtemp(prefix="ingest_loop_")
+    work = work_dir or scratch_dir(spark, "ingest_loop_")
     admitted_dir, report_dir = f"{work}/admitted", f"{work}/report"
     shutil.rmtree(f"{work}/in", ignore_errors=True)
 
@@ -1790,7 +1772,6 @@ def stream_ingest_excise_loop(spark: SparkSession, sf_dir: str,
     row (n_new for adds, n_excised for excises) even though the store
     itself stays correct — admissions dedupe through the gate and
     excise rewrites are idempotent."""
-    import shutil
     import time as _time
 
     from ..functions.bloom import BITS_PER_KEY, bloom_build
@@ -1798,7 +1779,7 @@ def stream_ingest_excise_loop(spark: SparkSession, sf_dir: str,
 
     base_tbl = bucketed_digest_table(spark, sf_dir)
     base_dg = spark.table(base_tbl)
-    work = work_dir or tempfile.mkdtemp(prefix="ingest_excise_")
+    work = work_dir or scratch_dir(spark, "ingest_excise_")
     report_dir, lm_root = f"{work}/report", f"{work}/lm_ledger"
     shutil.rmtree(f"{work}/in", ignore_errors=True)
 
@@ -1848,7 +1829,7 @@ def stream_ingest_excise_loop(spark: SparkSession, sf_dir: str,
     # restart recovery mirrors the ingest loop: resume at the highest
     # COMPLETE on-disk generation (clearing torn-fold/rewrite trash
     # above it — _recover_store, ADVICE r13) and cover its partitions
-    # in the initial gate (in-repo the dir is a fresh mkdtemp, so this
+    # in the initial gate (in-repo the dir is a fresh scratch dir, so this
     # starts at gen 0)
     gate_src = base_dg.select("dg")
     g0 = _recover_store(admitted_root)

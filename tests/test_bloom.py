@@ -4,9 +4,6 @@ broadcast, deterministic false-positive handling)."""
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -96,7 +93,7 @@ def test_bitmap_is_bloom_sized_not_corpus_sized(spark):
 # ---------------------------------------------------------------------------
 # streaming dedup gate: scale shape + false-positive path
 # ---------------------------------------------------------------------------
-def _planted_docs_dir() -> str:
+def _planted_docs_dir(tmp_path) -> str:
     """doc 1 → index bucket (<80), docs 5/14 → stream batch (≥80); doc 5
     duplicates doc 1's text, doc 14 is novel (same fixture as the
     planted-dup test in test_streaming_incremental.py)."""
@@ -107,12 +104,11 @@ def _planted_docs_dir() -> str:
         "lang": ["en"] * 3, "source": ["s"] * 3,
         "n_chars": pd.array([len(base), len(base), 36], dtype="int64"),
     })
-    d = tempfile.mkdtemp(prefix="bloomgate_")
-    docs.to_parquet(os.path.join(d, "documents.parquet"))
-    return d
+    docs.to_parquet(tmp_path / "documents.parquet")
+    return str(tmp_path)
 
 
-def test_gate_false_positive_is_exact_rejected(spark):
+def test_gate_false_positive_is_exact_rejected(spark, tmp_path):
     """Force a saturated 8-bit bloom: EVERY streamed doc bloom-hits, so
     the novel doc 14 is a guaranteed false positive — it must enter the
     verify join and come out NOT counted as a dup (n_exact_dup stays 1,
@@ -120,7 +116,7 @@ def test_gate_false_positive_is_exact_rejected(spark):
     import big_data_science_project_spark.streaming.events as ev
 
     rows = ev.stream_dedup_against_index(
-        spark, _planted_docs_dir(), bloom_bits=8).collect()
+        spark, _planted_docs_dir(tmp_path), bloom_bits=8).collect()
     assert len(rows) == 1
     assert (rows[0].n_new, rows[0].n_exact_dup) == (2, 1)
 
@@ -164,14 +160,14 @@ def test_ingest_admission_gate_index_side_never_shuffles(spark):
     assert "xxhash64(dg" in plan, plan  # the bloom probe gates the join
 
 
-def test_gate_streaming_plan_has_no_broadcast(spark):
+def test_gate_streaming_plan_has_no_broadcast(spark, tmp_path):
     """The r7 verdict's weak item: nothing corpus-derived may broadcast.
     Assert on the REAL micro-batch executed plan — the bloom bitmap
     travels as a plan literal, never as a BroadcastExchange, and the
     verify join is a shuffled join."""
     import big_data_science_project_spark.streaming.events as ev
 
-    ev.stream_dedup_against_index(spark, _planted_docs_dir())
+    ev.stream_dedup_against_index(spark, _planted_docs_dir(tmp_path))
     plan = ev.LAST_QUERY._jsq.explainInternal(True)
     assert "BroadcastExchange" not in plan, plan
     assert "BroadcastHashJoin" not in plan, plan

@@ -10,7 +10,6 @@ from __future__ import annotations
 import json
 import os
 import shutil
-import tempfile
 from urllib.parse import urlparse
 
 import pytest
@@ -160,16 +159,15 @@ def test_stream_reader_offsets_and_partitions():
     assert r.partitions({"next": 100}, {"next": 100}) == []
 
 
-def test_writer_roundtrip_row_identity(spark):
+def test_writer_roundtrip_row_identity(spark, tmp_path):
     """df.write.format("cells") → .npz containers + manifest →
     binaryFile decode returns the EXACT source rows (every pixel and
     mask bit), and the manifest covers all containers/rows."""
     import json
     import os
-    import tempfile
 
     CD.register(spark)
-    out = tempfile.mkdtemp(prefix="cells_dsw_test_")
+    out = str(tmp_path)
     src = (spark.read.format("cells")
            .option("n_images", 20).option("numpartitions", 3).load())
     src.write.format("cells").option("path", out).mode("append").save()
@@ -188,14 +186,13 @@ def test_writer_roundtrip_row_identity(spark):
     assert got == want
 
 
-def test_writer_overwrite_replaces_previous_containers(spark):
+def test_writer_overwrite_replaces_previous_containers(spark, tmp_path):
     """mode("overwrite") clears prior containers; a second write leaves
     exactly the new file set, not an accumulation."""
     import os
-    import tempfile
 
     CD.register(spark)
-    out = tempfile.mkdtemp(prefix="cells_dsw_ovw_")
+    out = str(tmp_path)
     src = (spark.read.format("cells")
            .option("n_images", 12).option("numpartitions", 2).load())
     src.write.format("cells").option("path", out).mode("append").save()
@@ -244,17 +241,16 @@ def test_stream_sink_roundtrip_and_epoch_manifests(spark):
         sorted(tuple(r) for r in src.collect())
 
 
-def test_writer_abort_removes_orphans_and_skips_manifest(spark):
+def test_writer_abort_removes_orphans_and_skips_manifest(spark, tmp_path):
     """Two-phase commit, unhappy path: if any task fails, the driver
     must NOT publish a manifest and abort() must remove the containers
     successful tasks already wrote."""
     import os
-    import tempfile
 
     from pyspark.sql import functions as F
 
     CD.register(spark)
-    out = tempfile.mkdtemp(prefix="cells_dsw_abort_")
+    out = str(tmp_path)
     src = (spark.read.format("cells")
            .option("n_images", 20).option("numpartitions", 4).load())
 
@@ -274,16 +270,15 @@ def test_writer_abort_removes_orphans_and_skips_manifest(spark):
     assert leftover == [], f"abort left orphans: {leftover}"
 
 
-def test_writer_append_merges_manifest(spark):
+def test_writer_append_merges_manifest(spark, tmp_path):
     """Two mode("append") jobs into the same path: the manifest must list
     BOTH jobs' containers and the summed row count — append may not
     silently drop the first job from the read contract."""
     import json
     import os
-    import tempfile
 
     CD.register(spark)
-    out = tempfile.mkdtemp(prefix="cells_dsw_app_")
+    out = str(tmp_path)
     src = (spark.read.format("cells")
            .option("n_images", 10).option("numpartitions", 2).load())
     src.write.format("cells").option("path", out).mode("append").save()
@@ -297,17 +292,15 @@ def test_writer_append_merges_manifest(spark):
     assert len(on_disk) == 4
 
 
-def test_snapshot_time_travel_reads_exact_versions(spark):
+def test_snapshot_time_travel_reads_exact_versions(spark, tmp_path):
     """Snapshot v1 returns exactly the first append's rows; v2 and the
     current manifest return both; row content is identical to the
     sources."""
-    import tempfile
-
     from big_data_science_project_spark.sources.cells_datasource import (
         read_snapshot)
 
     CD.register(spark)
-    out = tempfile.mkdtemp(prefix="cells_tt_test_")
+    out = str(tmp_path)
     first = (spark.read.format("cells")
              .option("imagelimit", 8).option("numpartitions", 2).load())
     second = (spark.read.format("cells")
@@ -331,7 +324,6 @@ def test_stream_sink_epoch_bounded_read(spark):
     tailing over the epoch manifests."""
     import glob
     import os
-    import tempfile
 
     from big_data_science_project_spark.sources import cells_datasource as CD2
     from big_data_science_project_spark.sources.cells_datasource import (
@@ -350,18 +342,16 @@ def test_stream_sink_epoch_bounded_read(spark):
     assert all_rows.count() == 120
 
 
-def test_snapshot_read_after_overwrite_fails_loudly(spark):
+def test_snapshot_read_after_overwrite_fails_loudly(spark, tmp_path):
     """A snapshot whose containers a later overwrite reclaimed must
     raise, not return a silently-empty DataFrame."""
-    import tempfile
-
     import pytest as _pytest
 
     from big_data_science_project_spark.sources.cells_datasource import (
         read_snapshot)
 
     CD.register(spark)
-    out = tempfile.mkdtemp(prefix="cells_tt_ovw_")
+    out = str(tmp_path)
     src = (spark.read.format("cells")
            .option("imagelimit", 6).option("numpartitions", 2).load())
     src.write.format("cells").option("path", out).mode("append").save()
@@ -372,11 +362,11 @@ def test_snapshot_read_after_overwrite_fails_loudly(spark):
     assert read_snapshot(spark, out).count() == 6
 
 
-def test_snapshot_read_touches_only_its_manifest(spark):
+def test_snapshot_read_touches_only_its_manifest(spark, tmp_path):
     """A snapshot read opens exactly the containers its manifest lists:
     a stray container in the sink directory is neither read nor
     returned. An epoch bound that admits no epoch reads nothing."""
-    out = tempfile.mkdtemp(prefix="cells_tt_stray_")
+    out = str(tmp_path)
     src = (spark.read.format("cells")
            .option("imagelimit", 8).option("numpartitions", 2).load())
     src.write.format("cells").option("path", out).mode("append").save()

@@ -16,6 +16,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from big_data_science_project_spark.session import release
 from big_data_science_project_spark.sources.tables import (
     configure_reads,
     normalize_event_ts,
@@ -65,9 +66,8 @@ def test_utc_pinning_under_foreign_session_zone(spark, generation_files):
     paths, truth = generation_files
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     # simulate a fresh driver-supplied session: configure_reads is
-    # guarded once-per-session, and this test models the first load
-    if hasattr(spark, "_bdsp_reads_configured"):
-        del spark._bdsp_reads_configured
+    # memoized per session, and this test models the first load
+    release(spark)
     try:
         configure_reads(spark)
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"

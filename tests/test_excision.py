@@ -10,7 +10,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
 import pandas as pd
 import pytest
@@ -25,8 +24,8 @@ _BATCH = 5           # bucket >= 80: the probe batch doc
 
 
 @pytest.fixture(scope="module")
-def excise_dir(spark):
-    d = tempfile.mkdtemp(prefix="excise_fixture_")
+def excise_dir(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("excise_fixture"))
     docs = pd.DataFrame([
         (_EXC_ID, "the quick zzzunique fox jumps over the lazy dog "
                   "again and again", "en"),

@@ -4,9 +4,6 @@
 
 from __future__ import annotations
 
-import os
-import tempfile
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -16,12 +13,12 @@ from big_data_science_project_spark.operators.outlier import (
 SF = "/root/testdata/sf0.001"
 
 
-def test_write_read_roundtrip_preserves_votes(spark):
+def test_write_read_roundtrip_preserves_votes(spark, tmp_path):
     tidy = _tidy_lineitem(spark, SF)
     m = OutlierModel().fit(tidy)
     votes_before = sorted(map(tuple, m.votes(tidy).collect()))
 
-    path = os.path.join(tempfile.mkdtemp(prefix="om_"), "model.json")
+    path = str(tmp_path / "model.json")
     m.write(path)
     m2 = OutlierModel.read(spark, path)
     assert m2.z == m.z

@@ -160,7 +160,7 @@ def test_zorder_files_prune_both_dimensions(spark):
     from big_data_science_project_spark.sources import sinks
 
     sinks.sink_zorder_clustered(spark, SF).collect()  # materialize write
-    path = sinks._dir("zorder", SF)
+    path = sinks._dir(spark, "zorder", SF)
     back = spark.read.parquet(path).select(
         "l_orderkey", "l_partkey", F.col("_metadata.file_path").alias("f"))
     boxes = back.groupBy("f").agg(

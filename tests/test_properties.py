@@ -110,7 +110,8 @@ def test_dsum_is_exact_decimal_sum(spark, values):
 @settings(max_examples=8, deadline=None)
 @given(st.lists(st.text(alphabet="ab ", min_size=0, max_size=30),
                 min_size=1, max_size=5))
-def test_rolling_fingerprint_matches_python_model(spark, texts):
+def test_rolling_fingerprint_matches_python_model(spark, tmp_path_factory,
+                                                  texts):
     """The Spark higher-order fold == a direct Python reimplementation
     of h ← (h·B + md5-hash(tok)) mod P for arbitrary texts."""
     import hashlib
@@ -126,8 +127,7 @@ def test_rolling_fingerprint_matches_python_model(spark, texts):
         return h
 
     import os
-    import tempfile
-    d = tempfile.mkdtemp(prefix="docs_prop_")
+    d = str(tmp_path_factory.mktemp("docs_prop"))
     spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     ).write.mode("overwrite").parquet(os.path.join(d, "documents.parquet"))
@@ -533,7 +533,7 @@ def _cdc_anchors(text):
     return out
 
 
-def test_substring_dedup_finds_unaligned_nonperiodic_clone(spark):
+def test_substring_dedup_finds_unaligned_nonperiodic_clone(spark, tmp_path):
     """Content-defined anchoring: a NON-PERIODIC verbatim run planted at
     offsets that differ by a non-multiple of STRIDE must still be found
     (a fixed stride-grid would miss ~19/20 of such alignments); docs
@@ -543,7 +543,6 @@ def test_substring_dedup_finds_unaligned_nonperiodic_clone(spark):
     import hashlib
     import os
     import random
-    import tempfile
 
     import pandas as pd
 
@@ -580,7 +579,7 @@ def test_substring_dedup_finds_unaligned_nonperiodic_clone(spark):
             break
     docs += [(100 + i, boiler) for i in range(SUBSTR_MAX_BUCKET + 10)]
 
-    d = tempfile.mkdtemp(prefix="substr_fixture_")
+    d = str(tmp_path)
     pd.DataFrame(docs, columns=["doc_id", "text"]).to_parquet(
         os.path.join(d, "documents.parquet"))
     pairs = {(r.doc_id1, r.doc_id2)
@@ -691,14 +690,13 @@ def test_semantic_tier_recovers_high_eps_rungs(spark):
         assert got[("semantic", mut)] >= got[("embedding", mut)], mut
 
 
-def test_normalized_dedup_whitespace_class_and_empty_guard(spark):
+def test_normalized_dedup_whitespace_class_and_empty_guard(spark, tmp_path):
     """The review counterexamples, pinned: a newline-REWRAPPED copy must
     normalize identically to its source (whitespace is a class, never
     deleted — deleting '\\n' would glue adjacent words); docs whose text
     normalizes to EMPTY (pure punctuation / non-Latin) must NOT merge
     into one md5('') group."""
     import os
-    import tempfile
 
     import pandas as pd
 
@@ -714,7 +712,7 @@ def test_normalized_dedup_whitespace_class_and_empty_guard(spark):
         (101, "¡¿§±"),                   # normalizes to empty
         (102, "…—…"),                    # normalizes to empty
     ]
-    d = tempfile.mkdtemp(prefix="norm_dedup_")
+    d = str(tmp_path)
     pd.DataFrame(docs, columns=["doc_id", "text"]).to_parquet(
         os.path.join(d, "documents.parquet"))
     rows = dedup_exact_normalized(spark, d).collect()
@@ -729,14 +727,13 @@ def test_normalized_dedup_whitespace_class_and_empty_guard(spark):
     assert group.canonical_id == 1 and group.n_copies == 3
 
 
-def test_constraint_audit_fails_on_violations(spark):
+def test_constraint_audit_fails_on_violations(spark, tmp_path):
     """The data-quality gate must actually FAIL when a batch violates a
     constraint (the fixture corpus passes all six, so the oracle alone
     never exercises passed=0): null text, a duplicated doc_id, a length
     mismatch, an off-domain lang, and an empty doc each trip exactly
     their own check."""
     import os
-    import tempfile
 
     import pandas as pd
 
@@ -752,7 +749,7 @@ def test_constraint_audit_fails_on_violations(spark):
         # row 5 empty -> min_chars
         "n_chars": pd.array([0, 5, 5, 3, 0], dtype="int64"),
     })
-    d = tempfile.mkdtemp(prefix="audit_")
+    d = str(tmp_path)
     docs.to_parquet(os.path.join(d, "documents.parquet"))
     got = {r.check_name: r for r in
            curate_constraint_audit(spark, d).collect()}
@@ -767,7 +764,7 @@ def test_constraint_audit_fails_on_violations(spark):
     assert got["uniqueness_doc_id_ge"].metric_milli == 800
 
 
-def test_incremental_dedup_tiers_on_planted_corpus(spark):
+def test_incremental_dedup_tiers_on_planted_corpus(spark, tmp_path):
     """Both tiers of the batch-vs-index dedup, exercised directly (the
     fixture corpus has no exact cross-split dup, so its oracle never
     sees exact_dup=1): doc 5 (batch) is an exact copy of doc 1 (index),
@@ -775,7 +772,6 @@ def test_incremental_dedup_tiers_on_planted_corpus(spark):
     unrelated. md5-bucket split: ids 1,2,3 land in the index (<80),
     5,8,14 in the batch (>=80)."""
     import os
-    import tempfile
 
     import pandas as pd
 
@@ -798,7 +794,7 @@ def test_incremental_dedup_tiers_on_planted_corpus(spark):
     })
     # make doc 8 a NEAR copy (one token changed), not exact
     docs.loc[docs.doc_id == 8, "text"] = near + " again and again"
-    d = tempfile.mkdtemp(prefix="incdedup_")
+    d = str(tmp_path)
     docs.to_parquet(os.path.join(d, "documents.parquet"))
     got = {r.doc_id: r for r in dedup_incremental(spark, d).collect()}
     assert set(got) == {5, 8, 14}          # exactly the batch docs
@@ -811,18 +807,17 @@ def test_incremental_dedup_tiers_on_planted_corpus(spark):
     assert got[14].best_jaccard is None
 
 
-def test_incremental_dedup_persisted_roundtrip(spark):
+def test_incremental_dedup_persisted_roundtrip(spark, tmp_path):
     """The persisted-index variant must reproduce dedup_incremental
     value-for-value through the parquet artifact round-trip (planted
     corpus from the test above), write the artifacts exactly once per
     (session, sf_dir), and pre-drop over-cap buckets at build time."""
     import os
-    import tempfile
 
     import pandas as pd
 
     from big_data_science_project_spark.operators.dedup import (
-        dedup_incremental, dedup_incremental_persisted)
+        _index_artifacts, dedup_incremental, dedup_incremental_persisted)
 
     base = ("the quick brown fox jumps over the lazy dog while the "
             "rain in spain falls mainly on the plain every single day")
@@ -836,7 +831,7 @@ def test_incremental_dedup_persisted_roundtrip(spark):
         "lang": ["en"] * 6, "source": ["s"] * 6,
         "n_chars": pd.array([1, 1, 1, 1, 1, 1], dtype="int64"),
     })
-    d = tempfile.mkdtemp(prefix="incpers_")
+    d = str(tmp_path)
     docs.to_parquet(os.path.join(d, "documents.parquet"))
 
     inplan = sorted(map(tuple, dedup_incremental(spark, d).collect()))
@@ -844,7 +839,7 @@ def test_incremental_dedup_persisted_roundtrip(spark):
                       dedup_incremental_persisted(spark, d).collect()))
     assert pers == inplan
 
-    root = spark._bdsp_dedup_index[d]
+    root = _index_artifacts(spark, d)
     stamp = {f: os.path.getmtime(os.path.join(root, "digests", f))
              for f in os.listdir(os.path.join(root, "digests"))}
     again = sorted(map(tuple,
@@ -885,7 +880,8 @@ def test_lm_perplexity_ranks_garbled_above_clean(spark, lm_planted_dir):
     assert got[14].avg_nll_milli is None
 
 
-def test_lm_refresh_equals_full_retrain_and_learns_new_language(spark):
+def test_lm_refresh_equals_full_retrain_and_learns_new_language(
+        spark, tmp_path):
     """lm_incremental_refresh merges persisted counts with the admitted
     batch's partials — the result must equal a full retrain over
     index ∪ admitted, value for value (the oracle proves it cross-
@@ -895,7 +891,6 @@ def test_lm_refresh_equals_full_retrain_and_learns_new_language(spark):
     global-vocab fallback) but in-distribution once an admitted xx doc
     taught the model the language."""
     import os
-    import tempfile
 
     import pandas as pd
 
@@ -921,7 +916,7 @@ def test_lm_refresh_equals_full_retrain_and_learns_new_language(spark):
         "source": ["s"] * 6,
         "n_chars": pd.array([1] * 6, dtype="int64"),
     })
-    d = tempfile.mkdtemp(prefix="lmrefresh_")
+    d = str(tmp_path)
     docs.to_parquet(os.path.join(d, "documents.parquet"))
 
     refreshed = sorted(map(tuple,

@@ -11,16 +11,22 @@ the cache manager reuses one entry, and so do ``dedup_clusters``'
 per-round persists; the cells-fed intermediates are lazy local
 checkpoints, which Spark drops once their DataFrame is garbage, so the
 count is read after a JVM GC.
+
+``release`` frees the rest of what a session holds: the scratch root
+with every sink output, write-once artifact, staged stream input and
+per-call directory, the catalog tables stored there, and the cache.
 """
 
 from __future__ import annotations
 
 import gc
+import os
 import time
 
 import pytest
 
 import __spark_entry__ as entrymod
+from big_data_science_project_spark.session import release, scratch_dir
 
 SF = "/root/testdata/sf0.001"
 QUERIES = entrymod.queries()
@@ -65,3 +71,35 @@ def test_repeat_call_holds_cached_rdds_flat(spark, name):
     before = _cached_rdds(spark)
     QUERIES[name](spark, SF).collect()
     assert _cached_rdds(spark, settle_to=before) <= before, name
+
+
+# one query per kind of state a session used to keep by its own means:
+# catalog tables over sink dirs, a write-once artifact with its bucketed
+# table, a staged stream input, and a per-call output dir
+RELEASED = [
+    "sink_bucketed_join",
+    "dedup_incremental_persisted",
+    "stream_hourly_by_type",
+    "cells_datasource_write",
+]
+
+
+def _catalog_tables(spark) -> list[str]:
+    return [t.name for t in spark.catalog.listTables() if not t.isTemporary]
+
+
+def test_release_frees_session_state(spark):
+    want = {n: sorted(map(tuple, QUERIES[n](spark, SF).collect()))
+            for n in RELEASED}
+    root = os.path.dirname(scratch_dir(spark, "probe_"))
+    assert len(os.listdir(root)) > len(RELEASED)
+    assert _catalog_tables(spark)
+
+    release(spark)
+    assert not os.path.exists(root)
+    assert _catalog_tables(spark) == []
+    assert _cached_rdds(spark, settle_to=0) == 0
+
+    for n in RELEASED:
+        assert sorted(map(tuple, QUERIES[n](spark, SF).collect())) == \
+            want[n], n

@@ -8,7 +8,6 @@ add_sample intended, outlier_detection.py:15-25)."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -20,8 +19,8 @@ SF = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="module")
-def split_events_dir(spark):
-    d = tempfile.mkdtemp(prefix="events_split_")
+def split_events_dir(spark, tmp_path_factory):
+    d = str(tmp_path_factory.mktemp("events_split"))
     ev = load_table(spark, SF, "events")
     ev.repartition(4).write.mode("overwrite").parquet(d)
     n_files = len([f for f in os.listdir(d) if f.endswith(".parquet")])
@@ -102,14 +101,14 @@ def test_windowed_append_respects_watermark(spark, split_events_dir):
     assert 0 < emitted < total_windows
 
 
-def test_late_event_dropped_by_watermark(spark):
+def test_late_event_dropped_by_watermark(spark, tmp_path):
     """True late-data semantics: an event arriving in a LATER micro-batch
     with a timestamp far behind the watermark must be DROPPED — its
     window's count stays what the on-time data produced. File order is
     pinned via mtimes (FileStreamSource admits oldest-first)."""
     import time as _time
 
-    d = tempfile.mkdtemp(prefix="events_late_")
+    d = str(tmp_path)
     ev = load_table(spark, SF, "events").select("ts", "value")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
 
@@ -146,7 +145,7 @@ def test_late_event_dropped_by_watermark(spark):
     assert got[target_hour["h"]] == target_hour["count"]
 
 
-def test_session_window_merges_across_batches(spark):
+def test_session_window_merges_across_batches(spark, tmp_path):
     """Session windows whose events arrive in different micro-batches
     must merge into the same session state: the drained stream result
     equals the batch session_window aggregation exactly. Files are split
@@ -154,7 +153,7 @@ def test_session_window_merges_across_batches(spark):
     and nothing is spuriously late — the realistic arrival pattern."""
     import time as _time
 
-    d = tempfile.mkdtemp(prefix="events_ordered_")
+    d = str(tmp_path)
     ev = load_table(spark, SF, "events")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
     span = (hi - lo) / 4
@@ -201,7 +200,7 @@ def test_session_window_merges_across_batches(spark):
     assert got == batch
 
 
-def test_window_chain_across_batches(spark):
+def test_window_chain_across_batches(spark, tmp_path):
     """Chained hourly→daily window aggregation (two stateful operators in
     one query) with time-ordered multi-batch arrival: the drained daily
     rows equal the batch daily aggregate under the same watermark cut
@@ -209,7 +208,7 @@ def test_window_chain_across_batches(spark):
     different micro-batches roll up into the same day."""
     import time as _time
 
-    d = tempfile.mkdtemp(prefix="events_chain_")
+    d = str(tmp_path)
     ev = load_table(spark, SF, "events")
     lo, hi = ev.agg(F.min("ts"), F.max("ts")).first()
     span = (hi - lo) / 4
@@ -255,7 +254,7 @@ def test_window_chain_across_batches(spark):
     assert got == want
 
 
-def test_stream_dedup_against_index_flags_planted_dup(spark):
+def test_stream_dedup_against_index_flags_planted_dup(spark, tmp_path):
     """The streaming exact gate must flag a streamed doc whose text
     already exists in the static index: doc 1 (md5-bucket < 80 → index)
     and doc 5 (bucket >= 80 → streamed batch) share text; doc 14
@@ -272,7 +271,7 @@ def test_stream_dedup_against_index_flags_planted_dup(spark):
         "lang": ["en"] * 3, "source": ["s"] * 3,
         "n_chars": pd.array([len(base), len(base), 36], dtype="int64"),
     })
-    d = tempfile.mkdtemp(prefix="sdi_")
+    d = str(tmp_path)
     docs.to_parquet(os.path.join(d, "documents.parquet"))
     rows = stream_dedup_against_index(spark, d).collect()
     assert len(rows) == 1
@@ -281,7 +280,7 @@ def test_stream_dedup_against_index_flags_planted_dup(spark):
     assert rows[0].n_exact_dup == 1
 
 
-def test_stream_near_index_flags_planted_near_dup(spark):
+def test_stream_near_index_flags_planted_near_dup(spark, tmp_path):
     """The streaming LSH near tier must catch a MUTATED clone across the
     index/batch split: doc 2 (bucket 30 → index) vs doc 8 (bucket 96 →
     streamed batch, one token changed); doc 14 (batch) is unrelated and
@@ -300,7 +299,7 @@ def test_stream_near_index_flags_planted_near_dup(spark):
         "lang": ["en"] * 3, "source": ["s"] * 3,
         "n_chars": pd.array([len(base), len(near), 20], dtype="int64"),
     })
-    d = tempfile.mkdtemp(prefix="sni_")
+    d = str(tmp_path)
     docs.to_parquet(os.path.join(d, "documents.parquet"))
     got = {r.doc_id: r
            for r in stream_dedup_near_index(spark, d).collect()}
@@ -310,7 +309,7 @@ def test_stream_near_index_flags_planted_near_dup(spark):
     assert got[14].n_candidates == 0 and got[14].best_jaccard is None
 
 
-def test_stream_ingest_loop_refresh_gates_cross_batch_dup(spark):
+def test_stream_ingest_loop_refresh_gates_cross_batch_dup(spark, tmp_path):
     """The ingestion loop must close: a doc ADMITTED in batch 0 gates
     its duplicate in batch 1 (live index refresh via the foreachBatch
     re-read). Buckets: doc 1→78 (index), 5→86 & 23→85 (batch 0),
@@ -334,7 +333,7 @@ def test_stream_ingest_loop_refresh_gates_cross_batch_dup(spark):
         "lang": ["en"] * 5, "source": ["s"] * 5,
         "n_chars": pd.array([1] * 5, dtype="int64"),
     })
-    d = tempfile.mkdtemp(prefix="sil_")
+    d = str(tmp_path)
     docs.to_parquet(os.path.join(d, "documents.parquet"))
     rows = ev.stream_ingest_loop(spark, d).collect()
     assert len(rows) == 1
@@ -364,7 +363,7 @@ def test_stream_lm_quality_matches_batch_twin(spark, lm_planted_dir):
     assert by_id[18][4] >= by_id[8][4]  # unindexed lang ≥ garbled
 
 
-def test_stream_ann_gate_flags_planted_cross_split_neardup(spark):
+def test_stream_ann_gate_flags_planted_cross_split_neardup(spark, tmp_path):
     """The streaming ANN gate must flag a streamed vector that
     near-duplicates an INDEX vector (planted across the md5-bucket
     split: vec 2 → bucket 30 = index, vec 5 → bucket 86 = batch, same
@@ -394,7 +393,7 @@ def test_stream_ann_gate_flags_planted_cross_split_neardup(spark):
         "embedding": [vecs[i].tolist() for i in ids],
         "label": pd.array([0] * len(ids), dtype="int32"),
     })
-    d = tempfile.mkdtemp(prefix="sag_")
+    d = str(tmp_path)
     emb.to_parquet(os.path.join(d, "embeddings.parquet"))
 
     got = sorted(map(tuple, ev.stream_ann_gate(spark, d).collect()))
@@ -720,7 +719,7 @@ def test_excise_loop_compaction_preserves_gate_state(spark, monkeypatch):
     assert np.array_equal(st["bloom"].words, fresh.words)
 
 
-def test_ingest_loop_restart_resumes_without_readmission(spark):
+def test_ingest_loop_restart_resumes_without_readmission(spark, tmp_path):
     """Restart recovery end-to-end: run the loop over the first two
     arrival files, then a second run RESUMES the same work dir with the
     later files — including a RE-DELIVERY of an already-processed
@@ -732,8 +731,6 @@ def test_ingest_loop_restart_resumes_without_readmission(spark):
     raw before=batch_id fence would hide every prior-run partition
     from the exact-verify read — re-admitting the whole re-delivered
     range."""
-    import tempfile
-
     import big_data_science_project_spark.streaming.events as ev
     from big_data_science_project_spark.operators.curation import _bucket
     from big_data_science_project_spark.operators.dedup import INDEX_PCT
@@ -750,7 +747,7 @@ def test_ingest_loop_restart_resumes_without_readmission(spark):
         return {r.dg for r in
                 spark.read.schema("dg string").parquet(*paths).collect()}
 
-    work = tempfile.mkdtemp(prefix="ingest_resume_")
+    work = str(tmp_path)
     ev.stream_ingest_loop(spark, sf, splits=a_splits,
                           work_dir=work).collect()
     a_root = f"{work}/admitted"
@@ -824,7 +821,7 @@ def test_compaction_retry_fence_invariants(spark, tmp_path):
     assert dgs(ev._gen_parts(root, 1)) == {"a", "b", "c", "d"}
 
 
-def test_excise_loop_restart_recovery(spark):
+def test_excise_loop_restart_recovery(spark, tmp_path):
     """A takedown delivered AFTER a driver restart must excise
     admissions made before it: run the loop's add phase alone, then a
     second run resuming the same work dir delivers the excise + re-add
@@ -834,8 +831,6 @@ def test_excise_loop_restart_recovery(spark):
     claim, end-to-end through the shared _resume_floor fence (the
     resumed run's ids continue above the prior run's, so its on-disk
     layout is batch-for-batch the single run's)."""
-    import tempfile
-
     import numpy as np
 
     import big_data_science_project_spark.streaming.events as ev
@@ -845,7 +840,7 @@ def test_excise_loop_restart_recovery(spark):
     single = ev.stream_ingest_excise_loop(spark, sf)
     want = sorted(map(tuple, single.collect()))
 
-    work = tempfile.mkdtemp(prefix="excise_resume_")
+    work = str(tmp_path)
     ev.stream_ingest_excise_loop(spark, sf, phases=(0,),
                                  work_dir=work).collect()
     resumed = ev.stream_ingest_excise_loop(spark, sf, phases=(1, 2),
@@ -864,7 +859,8 @@ def test_excise_loop_restart_recovery(spark):
     assert np.array_equal(st["bloom"].words, fresh.words)
 
 
-def test_excise_restart_mid_burst_counts_against_preburst_store(spark):
+def test_excise_restart_mid_burst_counts_against_preburst_store(
+        spark, tmp_path):
     """ADVICE r13 (burst state on disk): a restart that splits a
     takedown BURST — run 1 ends after the burst's first slice, run 2
     delivers the second slice and the re-add — must produce the single
@@ -872,15 +868,13 @@ def test_excise_restart_mid_burst_counts_against_preburst_store(spark):
     generation number, run 2's first excise trigger would open a NEW
     burst and snapshot the already-half-excised store, undercounting
     any slice-2 takedown row whose digest slice 1 already removed."""
-    import tempfile
-
     import big_data_science_project_spark.streaming.events as ev
 
     sf = "/root/testdata/sf0.01"
     single = ev.stream_ingest_excise_loop(spark, sf, excise_splits=2)
     want = sorted(map(tuple, single.collect()))
 
-    work = tempfile.mkdtemp(prefix="excise_burst_resume_")
+    work = str(tmp_path)
     # staged files with excise_splits=2: f0=add, f1=excise slice 0,
     # f2=excise slice 1, f3=re-add — the restart lands MID-burst
     ev.stream_ingest_excise_loop(spark, sf, excise_splits=2,
@@ -945,7 +939,7 @@ def test_torn_fold_recovery_falls_back_to_complete_generation(
     assert ev._gen_parts(lm, 0) == []
 
 
-def test_excise_loop_resumes_past_torn_fold(spark):
+def test_excise_loop_resumes_past_torn_fold(spark, tmp_path):
     """End-to-end torn-fold recovery: run the excise loop's add phase,
     plant a fake partial fold generation above the committed store
     (what a crash mid-_compact_gen leaves), then resume. The resumed
@@ -954,15 +948,13 @@ def test_excise_loop_resumes_past_torn_fold(spark):
     recovery fix the partial fold (here poisoned EMPTY) would erase
     every prior admission from the gate's earlier-read, re-admitting
     run 1's docs on re-upload."""
-    import tempfile
-
     import big_data_science_project_spark.streaming.events as ev
 
     sf = "/root/testdata/sf0.01"
     single = ev.stream_ingest_excise_loop(spark, sf)
     want = sorted(map(tuple, single.collect()))
 
-    work = tempfile.mkdtemp(prefix="excise_torn_")
+    work = str(tmp_path)
     ev.stream_ingest_excise_loop(spark, sf, phases=(0,),
                                  work_dir=work).collect()
     root = f"{work}/admitted"

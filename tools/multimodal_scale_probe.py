@@ -32,6 +32,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from big_data_science_project_spark.session import release  # noqa: E402
+
 
 def _timed(fn, reps=2):
     best = float("inf")
@@ -285,6 +287,7 @@ def main():
     with open(args.out, "w") as f:
         json.dump(report, f, indent=1, sort_keys=True)
     print(f"wrote {args.out}")
+    release(spark)
     spark.stop()
 
 

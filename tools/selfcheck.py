@@ -59,8 +59,8 @@ def _normalize(rows, colnames):
 
 
 def main() -> None:
-    from big_data_science_project_spark.session import (default_cpus,
-                                                         default_driver_memory)
+    from big_data_science_project_spark.session import (
+        default_cpus, default_driver_memory, release)
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.01")
@@ -172,6 +172,7 @@ def main() -> None:
     with open(args.out, "w") as f:
         json.dump(artifact, f, indent=1, sort_keys=True)
     print(json.dumps(artifact["summary"]))
+    release(spark)
     spark.stop()
     sys.exit(1 if n_fail else 0)
 
