@@ -75,7 +75,7 @@ def test_sink_parquet_reread_prunes_partitions(spark):
     QUERIES["sink_parquet_partitioned"](spark, SF).collect()
     from big_data_science_project_spark.sources.sinks import _dir
     import pyspark.sql.functions as F
-    back = spark.read.parquet(_dir("parq", SF)).filter(
+    back = spark.read.parquet(_dir(spark, "parq", SF)).filter(
         F.col("o_orderpriority") == "1-URGENT")
     plan = back._jdf.queryExecution().executedPlan().toString()
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)

@@ -13,11 +13,11 @@ default master is local[N] with N from ``session.default_cpus()``:
 $SPARK_GRAFT_CPUS, else the CPUs this process may run on.
 
   python tools/selfcheck.py --sf /root/testdata/sf0.01 \
-      --out SELFCHECK_r20.json
+      --out SELFCHECK_r21.json
   python tools/selfcheck.py --sf /root/testdata/sf0.1 \
-      --out SELFCHECK_r20_sf01.json
+      --out SELFCHECK_r21_sf01.json
   python tools/selfcheck.py --sf /root/testdata/sf0.01 --master local[3] \
-      --shuffle-partitions 5 --out SELFCHECK_r20_altpartition.json
+      --shuffle-partitions 5 --out SELFCHECK_r21_altpartition.json
 """
 
 from __future__ import annotations
